@@ -6,7 +6,7 @@ pass >= 0; setups have negative pass numbers and are never measured here.
 """
 from collections import defaultdict
 
-from stats import core_busy_share, covered_ms, highest_percentile, median
+from stats import core_busy_share, driver_gap_ms, highest_percentile, median
 
 E2E = {"setup_s": "s", "pass_s": "s", "latency_p50_ms": "ms"}
 
@@ -87,19 +87,16 @@ def stream_counts(raw):
 
 
 def summary(raw):
-    """Figures printed beside the metrics: sample counts, the highest tail
-    percentile each sample supports, throughput and the failure ratio."""
+    """Figures printed beside the metrics: sample counts, every timed pass,
+    the highest tail percentile the sample supports and the failure ratio."""
     lat = latency_samples(raw)
     tail = highest_percentile(lat)
-    out = {"latency_samples": len(lat), "passes": len(pass_windows(raw)),
+    out = {"latency_samples": len(lat),
+           "passes_s": [(e - s) / 1000.0 for _, (s, e) in sorted(pass_windows(raw).items())],
            "failed_ratio": len(raw["failures"]) / raw["attempted"]}
     if tail:
         out[f"latency_p{tail[0] * 100:g}_ms"] = tail[1]
-    if is_stream(raw):
-        out["events_per_s"] = median(
-            [sum(pr["input_rows"] for pr in pass_triggers(raw, p, s)) / ((e - s) / 1000.0)
-             for p, (s, e) in pass_windows(raw).items()])
-    else:
+    if not is_stream(raw):
         out["query_p50_s"] = median(lat) / 1000.0
     return out
 
@@ -125,9 +122,9 @@ def per_layer(raw):
         for s, e, span in actions:
             js = [j for j in pj if j["span"] == span]
             action_jobs += js
-            cov = covered_ms([(j["start"], j["end"]) for j in js], s, e)
-            exec_ms += cov
-            gap_ms += (e - s) - cov
+            gap = driver_gap_ms(s, e, [(j["start"], j["end"]) for j in js])
+            exec_ms += (e - s) - gap
+            gap_ms += gap
         busy = sum(j["busy_ms"] for j in pj)
         r = {
             "ops.build_ms": sum(o["built"] - o["start"] for o in ops),
@@ -185,8 +182,7 @@ def stream_layers(raw, p, start, chunks):
         "streaming.dropped_late_rows": dropped,
         "streaming.malformed_rows": malformed,
         "streaming.generator_lag_ms": max(
-            max(added - due, 0.0) for q, due, added, _ in chunks if q == p)
-        if raw["open_loop"] else 0,
+            max(added - due, 0.0) for q, due, added, _ in chunks if q == p),
     }
 
 

@@ -5,7 +5,7 @@
 
 Run from the repository root. The first run compiles the engine
 (src/main/scala) together with the harness (perfbench/scala) into
-.bench_build/classes; later runs reuse it while the sources are unchanged.
+.bench_build/build; later runs reuse it while the sources are unchanged.
 Each run makes its inputs from the seed, runs one JVM, checks the
 outputs, and prints as its last stdout line one JSON object:
 end-to-end metrics with --trace 0, per-layer metrics with --trace 1.
@@ -27,11 +27,9 @@ import metrics
 import tape
 
 BENCH = Path(__file__).resolve().parent
-WORKLOADS = ("candles_batch", "candles_live", "candles_backfill")
+WORKLOADS = ("candles_batch", "candles_live")
 SETUPS = 3
 BATCH_EVENTS = 6000
-BACKFILL_BLOCK_CHUNKS = 250  # 100,000 lines per micro-batch
-BACKFILL_BLOCKS = 3
 JVM_TIMEOUT_S = 165
 JDK_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -64,7 +62,8 @@ def java():
 
 
 def build(root, jars):
-    """Compile engine + harness once per source digest."""
+    """Compile engine + harness once per source digest into one jar;
+    return the run's class path."""
     sources = sorted((root / "src" / "main" / "scala").rglob("*.scala"))
     if not sources:
         fail("no engine sources under src/main/scala: run from the repository root")
@@ -73,47 +72,54 @@ def build(root, jars):
     for s in sources:
         digest.update(str(s.relative_to(root)).encode() + b"\0" + s.read_bytes())
     digest.update(" ".join(sorted(p.name for p in jars.glob("*.jar"))).encode())
-    out = root / ".bench_build" / "classes"
+    out = root / ".bench_build" / "build"
     stamp = out / ".stamp"
+    # one entry per jar, in a fixed order: the class-data archives
+    # (run_jvm) are valid only for the class path they were made with
+    class_path = os.pathsep.join(
+        [str(out / "perfbench.jar")] + sorted(str(j) for j in jars.glob("*.jar")))
     if stamp.exists() and stamp.read_text() == digest.hexdigest():
-        return out
+        return class_path
     shutil.rmtree(out, ignore_errors=True)
-    out.mkdir(parents=True)
-    argfile = root / ".bench_build" / "sources.txt"
+    classes = out / "classes"
+    classes.mkdir(parents=True)
+    argfile = out / "sources.txt"
     argfile.write_text("\n".join(str(s) for s in sources))
     cp = str(jars / "*")
     started = time.time()
     res = subprocess.run(
         [java(), "-Xss8m", "-Xmx2g", "-cp", cp, "scala.tools.nsc.Main", "-nowarn",
-         "-d", str(out), "-classpath", cp, f"@{argfile}"],
+         "-d", str(classes), "-classpath", cp, f"@{argfile}"],
         stdout=sys.stderr, stderr=sys.stderr, timeout=800)
     if res.returncode != 0:
         fail("compilation failed")
+    shutil.make_archive(str(out / "perfbench"), "zip", classes)
+    (out / "perfbench.zip").rename(out / "perfbench.jar")
     stamp.write_text(digest.hexdigest())
     print(f"perfbench: compiled {len(sources)} files in {time.time() - started:.0f} s",
           file=sys.stderr)
-    return out
+    return class_path
 
 
 def make_inputs(workload, seed, seconds, data):
     if workload == "candles_batch":
         tape.write_events(data, seed, BATCH_EVENTS)
-    elif workload == "candles_live":
-        tape.write_tape(data, seed, chunks=int(seconds * 1000 / tape.CHUNK_PERIOD_MS),
-                        block_chunks=1)
     else:
-        tape.write_tape(data, seed, chunks=BACKFILL_BLOCKS * BACKFILL_BLOCK_CHUNKS,
-                        block_chunks=BACKFILL_BLOCK_CHUNKS)
+        tape.write_tape(data, seed, chunks=int(seconds * 1000 / tape.CHUNK_PERIOD_MS))
 
 
-def run_jvm(root, classes, jars, args, work):
+def run_jvm(root, class_path, args, work):
     cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     (work / "tmp").mkdir()
     out = work / "raw.json"
-    cmd = [java(), *[f"--add-opens={p}=ALL-UNNAMED" for p in JDK_OPENS],
+    # The first run of a workload saves the classes it loaded to an archive
+    # that later runs map instead of loading them from the jars.
+    cds = root / ".bench_build" / "build" / f"classes-{args.workload}.jsa"
+    cds_flag = f"-XX:SharedArchiveFile={cds}" if cds.exists() else f"-XX:ArchiveClassesAtExit={cds}"
+    cmd = [java(), cds_flag, *[f"--add-opens={p}=ALL-UNNAMED" for p in JDK_OPENS],
            "-Xms3g", "-Xmx3g", f"-Djava.io.tmpdir={work / 'tmp'}", f"-Dderby.system.home={work}",
            "-Duser.timezone=UTC", f"-Dlog4j2.configurationFile={BENCH / 'log4j2.properties'}",
-           "-cp", f"{classes}{os.pathsep}{jars / '*'}", "graft.perfbench.Harness",
+           "-cp", class_path, "graft.perfbench.Harness",
            "--workload", args.workload, "--data", str(work / "data"), "--work", str(work),
            "--seconds", str(args.seconds), "--trace", str(args.trace),
            "--setups", str(SETUPS), "--cores", str(cores), "--out", str(out)]
@@ -180,7 +186,7 @@ def main():
     if not (root / "tools" / "check.py").exists():
         fail("tools/check.py not found: run from the repository root")
     jars = spark_jars()
-    classes = build(root, jars)
+    class_path = build(root, jars)
     work = root / ".bench_build" / f"run-{args.workload}-{os.getpid()}"
     shutil.rmtree(work, ignore_errors=True)
     data = work / "data"
@@ -188,11 +194,12 @@ def main():
     try:
         make_inputs(args.workload, args.seed, args.seconds, data)
         started = time.time()
-        raw = run_jvm(root, classes, jars, args, work)
+        raw = run_jvm(root, class_path, args, work)
         jvm_s = time.time() - started
         errors = stream_check(raw, data) if metrics.is_stream(raw) else oracle_check(root, raw, data)
         check_s = time.time() - started - jvm_s
-        info = {"workload": args.workload, "seed": args.seed, "setups_s": raw["setup_s"],
+        info = {"workload": args.workload, "seed": args.seed,
+                "cold_start_s": raw["cold_start_s"], "setups_s": raw["setup_s"],
                 "jvm_s": jvm_s, "check_s": check_s, "failures": raw["failures"],
                 "check_errors": errors}
         values, units = {}, {}

@@ -73,8 +73,7 @@ object Harness {
     val run = new Run(cfg)
     cfg.workload match {
       case "candles_batch" => run.batch(CandleQueries)
-      case "candles_live" => run.stream(live = true)
-      case "candles_backfill" => run.stream(live = false)
+      case "candles_live" => run.stream()
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
     Files.writeString(Paths.get(cfg.out),
@@ -114,24 +113,34 @@ object Harness {
     private def tag(span: String): Unit =
       if (tracer.isDefined) spark.sparkContext.setLocalProperty(Tracer.SpanKey, span)
 
-    /** `cfg.setups` fresh sessions, each warmed by `warm`; the last one is
-      * kept for the timed passes. Each setup's wall time is recorded. */
+    /** An untimed cold start, `warm(-1)` on the first session (it starts
+      * the Spark context; class loading, code generation and JIT warm the
+      * JVM, not the session), then `cfg.setups` fresh sessions on that
+      * context, each warmed by `warm(pass)` with pass = -2, -3, ...; the
+      * last one is kept for the timed passes. Each setup's wall time is
+      * recorded. */
     private def setUp(warm: Int => Unit): Unit = {
+      val c0 = Clock.ms()
+      spark = session(cfg)
+      warm(-1)
+      extra("cold_start_s") = (Clock.ms() - c0) / 1000.0
       for (i <- 0 until cfg.setups) {
-        if (spark != null) spark.stop()
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
         val t0 = Clock.ms()
         spark = session(cfg)
-        warm(i)
+        warm(-2 - i)
         setups += (Clock.ms() - t0) / 1000.0
       }
       if (cfg.trace) tracer = Some(Tracer.install(spark))
     }
 
-    /** Timed passes until `cfg.seconds` have elapsed (at least one). */
-    private def timedPasses(pass: Int => Unit): Unit = {
+    /** Timed passes until `cfg.seconds` have elapsed and at least
+      * `minPasses` have run. */
+    private def timedPasses(minPasses: Int)(pass: Int => Unit): Unit = {
       val start = Clock.ms()
       var p = 0
-      while (p == 0 || Clock.ms() - start < cfg.seconds * 1000) {
+      while (p < minPasses || Clock.ms() - start < cfg.seconds * 1000) {
         val ps = Clock.ms()
         pass(p)
         passes += Map("pass" -> p, "start" -> ps, "end" -> Clock.ms())
@@ -145,21 +154,23 @@ object Harness {
 
     def batch(names: Seq[String]): Unit = {
       val checkDir = s"${cfg.work}/check"
-      setUp { i =>
-        names.foreach { n =>
-          attempt(n, -1 - i) {
-            val df = SparkEntry.queries(n)(spark, cfg.data)
-            // the first (cold) setup writes the outputs the oracle checks
-            if (i == 0) df.coalesce(1).write.mode("overwrite").parquet(s"$checkDir/$n")
-            else df.write.mode("overwrite").format("noop").save()
-          }
-        }
+      def each(pass: Int)(action: (String, DataFrame) => Unit): Unit =
+        names.foreach(n => attempt(n, pass)(action(n, SparkEntry.queries(n)(spark, cfg.data))))
+      // the cold start writes the outputs the oracle checks; a setup runs
+      // the list once
+      setUp {
+        case -1 =>
+          each(-1)((n, df) => df.coalesce(1).write.mode("overwrite").parquet(s"$checkDir/$n"))
+        case pass =>
+          each(pass)((_, df) => df.write.mode("overwrite").format("noop").save())
       }
       val oracle = SparkEntry.oracleSql
       extra("queries") = names
       extra("oracle_sql") = names.flatMap(n => oracle.get(n).map(n -> _)).toMap
       extra("check_dir") = checkDir
-      timedPasses { p =>
+      // three passes, so that the pass median is one pass rather than the
+      // mean of two whichever way the time falls
+      timedPasses(3) { p =>
         names.foreach { n =>
           attempt(n, p) {
             tag(s"p$p/$n/build")
@@ -200,27 +211,28 @@ object Harness {
       finally conn.close()
     }
 
-    def stream(live: Boolean): Unit = {
+    def stream(): Unit = {
       val tape = Files.readAllLines(Paths.get(cfg.data, "tape.jsonl")).asScala.toIndexedSeq
       val man = new ObjectMapper().readTree(Paths.get(cfg.data, "manifest.json").toFile)
       val primerN = man.get("primer_lines").asInt
       val chunkN = man.get("chunk_lines").asInt
       val periodMs = man.get("chunk_period_ms").asDouble
-      val blockChunks = man.get("block_chunks").asInt
       val late = man.get("late_lines").elements().asScala.map(_.asInt).toSet
       val primer = tape.take(primerN)
       val tapeChunks = tape.drop(primerN).grouped(chunkN).toIndexedSeq
 
-      setUp { i =>
-        attempt("warm_stream", -1 - i) {
-          streamPass(s"warm_$i", -1 - i, primer, tapeChunks.take(10), None, 10)
+      // the cold start lands the primer and five seconds of feed on the
+      // live schedule (its triggers warm the JIT); a setup starts the query
+      // and lands the primer
+      setUp { pass =>
+        attempt("warm_stream", pass) {
+          val feed = if (pass == -1) tapeChunks.take(25) else IndexedSeq()
+          streamPass(s"warm${-pass}", pass, primer, feed, periodMs)
         }
       }
-      extra("open_loop") = live
-      timedPasses { p =>
+      timedPasses(1) { p =>
         attempt("stream_pass", p) {
-          streamPass(s"candles_p$p", p, primer, tapeChunks,
-            if (live) Some(periodMs) else None, if (live) 1 else blockChunks)
+          streamPass(s"candles_p$p", p, primer, tapeChunks, periodMs)
         }
       }
       // untimed: the landed candles must equal the batch graph over the same
@@ -228,16 +240,14 @@ object Harness {
       val sess = spark
       import sess.implicits._
       val kept = tape.indices.filterNot(late).map(tape)
-      val expected = graph(kept.toDF("json")).cache()
+      val expected = graph(kept.toDF("json")).collect().map(_.toString).toSeq
       passes.foreach { pr =>
         val p = pr("pass").asInstanceOf[Int]
         attempt("stream_check", p) {
           val actual = spark.read.format("jdbc").option("url", derbyUrl)
-            .option("dbtable", s"candles_p$p").load()
-          checks += Map("pass" -> p, "rows" -> actual.count(),
-            "expected_rows" -> expected.count(),
-            "missing" -> expected.exceptAll(actual).count(),
-            "extra" -> actual.exceptAll(expected).count())
+            .option("dbtable", s"candles_p$p").load().collect().map(_.toString).toSeq
+          checks += Map("pass" -> p, "rows" -> actual.size, "expected_rows" -> expected.size,
+            "missing" -> expected.diff(actual).size, "extra" -> actual.diff(expected).size)
         }
       }
       extra("chunks") = chunks.asScala.toSeq
@@ -248,13 +258,10 @@ object Harness {
     }
 
     /** Feeds `primer` and waits for it (so the watermark is set), then feeds
-      * `body` in groups of `group` chunks: on a fixed schedule of `periodMs`
-      * per chunk from a separate generator thread (open loop), or, with no
-      * period, each group as soon as the previous trigger drained (a
-      * backlog). Runs until every fed chunk has landed in the sink. */
+      * `body` one chunk every `periodMs` from a separate generator thread
+      * (open loop). Runs until every fed chunk has landed in the sink. */
     private def streamPass(table: String, pass: Int, primer: Seq[String],
-                           body: IndexedSeq[Seq[String]], periodMs: Option[Double],
-                           group: Int): Unit = {
+                           body: IndexedSeq[Seq[String]], periodMs: Double): Unit = {
       val sess = spark
       import sess.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = sess.sqlContext
@@ -279,30 +286,16 @@ object Harness {
         input.addData(primer)
         q.processAllAvailable()
         val t0 = Clock.ms()
-        def feed(i: Int, lines: Seq[String], n: Int): Unit = {
-          val off = input.addData(lines).json().toLong
-          val added = Clock.ms()
-          (0 until n).foreach { k =>
-            chunks.add(Map("pass" -> pass, "offset" -> off,
-              "due" -> (t0 + periodMs.map(_ * (i + k)).getOrElse(0.0)), "added" -> added))
-          }
-        }
-        periodMs match {
-          case Some(period) =>
-            val gen = new Thread(() => body.indices.foreach { i =>
-              val wait = t0 + period * i - Clock.ms()
-              if (wait > 0) Thread.sleep(wait.toLong, ((wait % 1) * 1e6).toInt)
-              feed(i, body(i), 1)
-            }, "perfbench-generator")
-            gen.start()
-            gen.join()
-            q.processAllAvailable()
-          case None =>
-            body.grouped(group).zipWithIndex.foreach { case (g, j) =>
-              feed(j * group, g.flatten, g.size)
-              q.processAllAvailable()
-            }
-        }
+        val gen = new Thread(() => body.indices.foreach { i =>
+          val due = t0 + periodMs * i
+          val wait = due - Clock.ms()
+          if (wait > 0) Thread.sleep(wait.toLong, ((wait % 1) * 1e6).toInt)
+          val off = input.addData(body(i)).json().toLong
+          chunks.add(Map("pass" -> pass, "offset" -> off, "due" -> due, "added" -> Clock.ms()))
+        }, "perfbench-generator")
+        gen.start()
+        gen.join()
+        q.processAllAvailable()
       } finally q.stop()
       q.exception.foreach(e => throw e)
       val reported = tracer.map { t => t.settle(); t.progressOf(q.id) }

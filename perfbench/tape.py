@@ -78,9 +78,8 @@ def trade_tape(seed, chunks):
     return lines, manifest
 
 
-def write_tape(directory, seed, chunks, block_chunks):
+def write_tape(directory, seed, chunks):
     lines, manifest = trade_tape(seed, chunks)
-    manifest["block_chunks"] = block_chunks
     (directory / "tape.jsonl").write_text("\n".join(lines) + "\n")
     (directory / "manifest.json").write_text(json.dumps(manifest))
     return manifest

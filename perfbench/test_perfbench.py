@@ -72,11 +72,11 @@ class DriverGap(unittest.TestCase):
 class Tape(unittest.TestCase):
     def test_same_seed_same_bytes(self):
         with tempfile.TemporaryDirectory() as a, tempfile.TemporaryDirectory() as b:
-            tape.write_tape(Path(a), 7, 30, 1)
-            tape.write_tape(Path(b), 7, 30, 1)
+            tape.write_tape(Path(a), 7, 30)
+            tape.write_tape(Path(b), 7, 30)
             for f in ("tape.jsonl", "manifest.json"):
                 self.assertEqual((Path(a) / f).read_bytes(), (Path(b) / f).read_bytes())
-            tape.write_tape(Path(b), 8, 30, 1)
+            tape.write_tape(Path(b), 8, 30)
             self.assertNotEqual((Path(a) / "tape.jsonl").read_bytes(),
                                 (Path(b) / "tape.jsonl").read_bytes())
 
@@ -126,13 +126,49 @@ class Tape(unittest.TestCase):
             self.assertEqual(len(set(ts)), len(ts))
 
 
+class BatchLayers(unittest.TestCase):
+    """Per-layer figures of one batch pass: two queries, one job started by
+    construction, and action jobs that overlap."""
+
+    @staticmethod
+    def job(i, span, start, end, busy):
+        return {"id": i, "span": span, "start": start, "end": end, "tasks": 1,
+                "busy_ms": busy, "shuffle_bytes": 0, "input_bytes": 0,
+                "spill_bytes": 0, "gc_ms": 0}
+
+    def test_driver_gap_and_exec_from_overlapping_jobs(self):
+        raw = {
+            "cores": 4, "setup_s": [1.0], "attempted": 2, "failures": [],
+            "passes": [{"pass": 0, "start": 0.0, "end": 1000.0}],
+            "ops": [{"pass": 0, "name": "q1", "start": 0.0, "built": 100.0, "end": 600.0},
+                    {"pass": 0, "name": "q2", "start": 600.0, "built": 650.0, "end": 1000.0}],
+            "trace": {
+                "jobs": [self.job(1, "p0/q1/build", 20, 80, 60),
+                         self.job(2, "p0/q1/action", 150, 300, 150),
+                         self.job(3, "p0/q1/action", 250, 400, 150),
+                         self.job(4, "p0/q2/action", 700, 900, 200)],
+                "plans": [{"start": 30.0, "plan_ms": 7}, {"start": 120.0, "plan_ms": 10},
+                          {"start": 660.0, "plan_ms": 5}]},
+        }
+        got = metrics.per_layer(raw)
+        # q1's action [100, 600] is covered 150..400; q2's [650, 1000] 700..900
+        self.assertEqual(got["spark.exec_ms"], 250 + 200)
+        self.assertEqual(got["spark.driver_gap_ms"], 250 + 150)
+        self.assertEqual(got["spark.jobs"], 3)
+        self.assertEqual(got["ops.build_jobs"], 1)
+        self.assertEqual(got["ops.build_ms"], 100 + 50)
+        self.assertEqual(got["spark.plan_ms"], 15)  # planning inside the actions only
+        self.assertEqual(got["spark.tasks"], 4)
+        self.assertAlmostEqual(got["spark.core_busy_share"], 560 / (1000 * 4))
+        self.assertEqual(got["sink.rows"], 0)
+
+
 class StreamMetrics(unittest.TestCase):
     """Chunk latency: from the chunk's due time to the end of the sink call
     of the micro-batch that read its offset."""
 
     RAW = {
         "cores": 4, "setup_s": [3.0, 1.0, 2.0], "attempted": 3, "failures": [],
-        "open_loop": True,
         "chunks": [
             {"pass": 0, "offset": 1, "due": 1000.0, "added": 1001.0},
             {"pass": 0, "offset": 2, "due": 1200.0, "added": 1203.0},
