@@ -13,6 +13,12 @@ def median(values):
     return statistics.median(values)
 
 
+def geometric_mean(values):
+    if not values:
+        raise ValueError("geometric mean of no samples")
+    return statistics.geometric_mean(values)
+
+
 def samples_beyond(n, q):
     """Samples strictly above the nearest-rank q-quantile of n samples."""
     return n - math.ceil(q * n)

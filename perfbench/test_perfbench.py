@@ -163,6 +163,25 @@ class BatchLayers(unittest.TestCase):
         self.assertEqual(got["sink.rows"], 0)
 
 
+class BatchLatency(unittest.TestCase):
+    """Batch latency_p50_ms: the geometric mean over queries of each
+    query's median latency, not the median of the pooled samples."""
+
+    def test_geometric_mean_of_query_medians(self):
+        ops = [{"pass": p, "name": n, "start": 0.0, "built": 1.0, "end": ms}
+               for p, per in enumerate([{"a": 90, "b": 400}, {"a": 100, "b": 300},
+                                        {"a": 120, "b": 410}])
+               for n, ms in per.items()]
+        ops.append({"pass": -2, "name": "a", "start": 0.0, "built": 1.0, "end": 9000.0})
+        raw = {"setup_s": [5.0], "ops": ops,
+               "passes": [{"pass": p, "start": 0.0, "end": 1000.0} for p in range(3)]}
+        # medians: a 100, b 400; the pooled median would be 210
+        self.assertAlmostEqual(metrics.end_to_end(raw)["latency_p50_ms"], 200.0)
+        self.assertAlmostEqual(stats.geometric_mean([100, 400]), 200.0)
+        with self.assertRaises(ValueError):
+            stats.geometric_mean([])
+
+
 class StreamMetrics(unittest.TestCase):
     """Chunk latency: from the chunk's due time to the end of the sink call
     of the micro-batch that read its offset."""
