@@ -37,7 +37,18 @@ object GraftSession {
     // (window, symbol) × lateness horizon) RocksDB keeps heap flat and
     // makes state size a disk problem, which scales
     "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    // checkpoint files on file: paths through java.nio (other schemes keep
+    // Spark's own manager): Spark ships no native-hadoop library, so
+    // Hadoop's local filesystem starts a chmod process per file create and
+    // mkdir and a readlink process per rename — the offset and commit log
+    // writes of every micro-batch were mostly process launches
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "graft.streaming.LocalCheckpointFileManager",
+    // a RocksDB commit writes one changelog file through the manager above;
+    // SST snapshot uploads (still Hadoop copyFromLocalFile) move to the
+    // background maintenance thread instead of running inside every trigger
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     defaults.foldLeft(SparkSession.builder().appName(appName)) {

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
@@ -10,7 +12,9 @@ import graft.streaming.OhlcvStream
   * OHLCV aggregation on ONE core. Feeds pre-generated JSON trade lines
   * through a MemoryStream into the full parse -> watermark -> 1-minute
   * OHLCV graph on local[1] (Trigger.AvailableNow), and reports end-to-end
-  * events/s over the timed drain. Prints one JSON line.
+  * events/s over the timed drain. Prints one JSON line. The session comes
+  * from [[GraftSession.builder]], so the figure covers the shipped state
+  * store and checkpoint path; both checkpoint dirs are deleted on exit.
   *
   * MemoryStream isolates engine throughput from source I/O — the number is
   * the aggregation pipeline's capacity, which is the SLO's subject (the
@@ -19,10 +23,9 @@ import graft.streaming.OhlcvStream
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "200000").toInt
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder("streambench")
       .master("local[1]")
       .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -46,30 +49,35 @@ object StreamBench {
     def graph(input: MemoryStream[String]) =
       OhlcvStream.ohlcv(OhlcvStream.parseTrades(input.toDF().toDF("json")))
 
-    // Warm query on a separate small stream: JIT + codegen for the
-    // streaming plan happen here, not inside the timed drain.
-    val warmInput = MemoryStream[String]
-    warmInput.addData(events.take(1000))
-    val warmDir = java.nio.file.Files.createTempDirectory("streambench-warm").toString
-    // (the sink must drain every partition — Spark validates state-store
-    // commits against partitions processed in foreachBatch)
-    val warm = OhlcvStream.start(graph(warmInput), (df, _) => { df.count(); () },
-      warmDir, Trigger.AvailableNow())
-    warm.awaitTermination()
+    val warmDir = Files.createTempDirectory("streambench-warm").toFile
+    val ckDir = Files.createTempDirectory("streambench").toFile
+    try {
+      // Warm query on a separate small stream: JIT + codegen for the
+      // streaming plan happen here, not inside the timed drain.
+      val warmInput = MemoryStream[String]
+      warmInput.addData(events.take(1000))
+      // (the sink must drain every partition — Spark validates state-store
+      // commits against partitions processed in foreachBatch)
+      val warm = OhlcvStream.start(graph(warmInput), (df, _) => { df.count(); () },
+        warmDir.toString, Trigger.AvailableNow())
+      warm.awaitTermination()
 
-    var outRows = 0L
-    val input = MemoryStream[String]
-    input.addData(events)
-    val ckDir = java.nio.file.Files.createTempDirectory("streambench").toString
-    val start = System.nanoTime()
-    val q = OhlcvStream.start(
-      graph(input), (df, _) => { outRows += df.count() }, ckDir, Trigger.AvailableNow())
-    q.awaitTermination()
-    val secs = (System.nanoTime() - start) / 1e9
-    val rate = nEvents / secs
-    println(f"""{"metric":"stream_events_per_sec","value":$rate%.0f,""" +
-      s""""unit":"events/sec","events":$nEvents,"seconds":$secs,""" +
-      s""""out_rows":$outRows,"cores":1,"slo_1k_met":${rate >= 1000}}""")
-    spark.stop()
+      var outRows = 0L
+      val input = MemoryStream[String]
+      input.addData(events)
+      val start = System.nanoTime()
+      val q = OhlcvStream.start(
+        graph(input), (df, _) => { outRows += df.count() }, ckDir.toString,
+        Trigger.AvailableNow())
+      q.awaitTermination()
+      val secs = (System.nanoTime() - start) / 1e9
+      val rate = nEvents / secs
+      println(f"""{"metric":"stream_events_per_sec","value":$rate%.0f,""" +
+        s""""unit":"events/sec","events":$nEvents,"seconds":$secs,""" +
+        s""""out_rows":$outRows,"cores":1,"slo_1k_met":${rate >= 1000}}""")
+    } finally {
+      spark.stop()
+      Seq(warmDir, ckDir).foreach(d => FileUtils.deleteDirectory(d))
+    }
   }
 }

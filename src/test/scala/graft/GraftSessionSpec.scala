@@ -1,5 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.streaming.{LocalCheckpointFileManager, OhlcvStream}
+
 /** The library entry point ships working defaults: the extensions class
   * resolves and injects every native function, and the defaults carry the
   * AQE + determinism configuration the operator designs assume.
@@ -44,6 +54,37 @@ class GraftSessionSpec extends SparkSuite {
       case (k, v) =>
         spark.conf.set(k, v)
         assert(spark.conf.get(k) == v)
+    }
+  }
+
+  test("defaults install the java.nio checkpoint manager and RocksDB changelog commits") {
+    val d = GraftSession.defaults
+    assert(d("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") == "true")
+    val manager = Class.forName(d("spark.sql.streaming.checkpointFileManagerClass"))
+    assert(classOf[CheckpointFileManager].isAssignableFrom(manager))
+    val local = new Path(Files.createTempDirectory("gs_fm").toString)
+    assert(CheckpointFileManager.create(local, spark.sessionState.newHadoopConf())
+      .isInstanceOf[LocalCheckpointFileManager])
+  }
+
+  test("an OHLCV run leaves no Hadoop .crc sidecars in offsets/ and commits/") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val ckpt = Files.createTempDirectory("gs_ckpt").toString
+    val q = OhlcvStream.start(
+      OhlcvStream.ohlcv(OhlcvStream.parseTrades(input.toDF().toDF("json"))),
+      (df, _) => { df.count(); () }, ckpt, Trigger.ProcessingTime(0))
+    try (1 to 2).foreach { i =>
+      input.addData(Seq(s"""{"trade_id":$i,"symbol":"BTCUSDT","price":"1.0",""" +
+        s""""quantity":"1.0","trade_time":${1705276800000L + i},"is_buyer_maker":false}"""))
+      q.processAllAvailable()
+    } finally q.stop()
+    Seq("offsets", "commits").foreach { d =>
+      val files = Files.list(Paths.get(ckpt, d)).iterator.asScala
+        .map(_.getFileName.toString).toSeq
+      assert(files.count(_.forall(_.isDigit)) >= 2, s"$d: $files")
+      assert(!files.exists(f => f.startsWith(".") && f.endsWith(".crc")), s"$d: $files")
     }
   }
 }
