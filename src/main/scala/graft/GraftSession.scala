@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   * native functions registered via `spark.sql.extensions`, and every
   * operator in [[SparkEntry.queries]] runs with the intended plan shapes.
   *
-  * `spark.sql.shuffle.partitions` is deliberately NOT set here: with AQE
-  * coalescing enabled the initial partition number only needs an upper
-  * bound, and the right bound is cluster-sized (set per deployment; the
-  * test/bench mains set it to the core count).
+  * `spark.sql.shuffle.partitions` is deliberately NOT set in [[builder]]:
+  * with AQE coalescing enabled the initial partition number only needs an
+  * upper bound, and the right bound is cluster-sized (set per deployment).
+  * Single-JVM runs — the Bench/Verify/Probe mains, the stream bench and the
+  * test suite — take [[local]], which sizes it to the core count.
   */
 object GraftSession {
 
@@ -48,10 +49,33 @@ object GraftSession {
     // a RocksDB commit writes one changelog file through the manager above;
     // SST snapshot uploads (still Hadoop copyFromLocalFile) move to the
     // background maintenance thread instead of running inside every trigger
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    // events.parquet fixture generations that declare TIMESTAMP(NANOS) are
+    // unreadable without it (PARQUET_TYPE_ILLEGAL); with it the column
+    // reads as INT64 nanos, which Tables.events truncates to microseconds.
+    // Set once here rather than by Tables.events on every read, so reading
+    // a table never mutates the session's conf
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     defaults.foldLeft(SparkSession.builder().appName(appName)) {
       case (b, (k, v)) => b.config(k, v)
     }
+
+  /** The single-JVM session: `local[cores]` with one shuffle partition per
+    * core (AQE coalesces from there) and the web UI off. Bench, Verify, the
+    * probes, StreamBench and the specs all take their session from here, so
+    * what is benchmarked and verified is what is tested and shipped.
+    */
+  def local(cores: Int, appName: String = "graft"): SparkSession.Builder =
+    builder(appName)
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+
+  /** Core count of the driver mains: `$SPARK_GRAFT_CPUS`, else every
+    * available processor.
+    */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 }

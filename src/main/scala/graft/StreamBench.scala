@@ -13,7 +13,7 @@ import graft.streaming.OhlcvStream
   * through a MemoryStream into the full parse -> watermark -> 1-minute
   * OHLCV graph on local[1] (Trigger.AvailableNow), and reports end-to-end
   * events/s over the timed drain. Prints one JSON line. The session comes
-  * from [[GraftSession.builder]], so the figure covers the shipped state
+  * from [[GraftSession.local]], so the figure covers the shipped state
   * store and checkpoint path; both checkpoint dirs are deleted on exit.
   *
   * MemoryStream isolates engine throughput from source I/O — the number is
@@ -23,11 +23,7 @@ import graft.streaming.OhlcvStream
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "200000").toInt
-    val spark = GraftSession.builder("streambench")
-      .master("local[1]")
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(1, "streambench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -1,25 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Usage: Verify <sfDir> <outDir> [queryName ...] — with names given, only
   * those queries are re-dumped (fast local iteration with tools/check.py's
   * matching subset mode); oracle_sql.json is always rewritten in full.
+  * Runs on [[GraftSession.local]] with `$SPARK_GRAFT_CPUS` cores (default:
+  * all), the session Bench and the specs use. A query that throws is
+  * reported as `[verify] <name> failed: <exception class>: <message>` and
+  * the run goes on (exit code 0); oracle_sql.json's JSON strings are
+  * escaped by [[BenchLogic.jsonString]], so a tab or CR in authored SQL
+  * can't break the reader's json.load.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores, "verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(s"[verify] registry=${SparkEntry.queries.size} " +
       s"oracle-checked=${SparkEntry.oracleSql.size} " +
@@ -30,24 +29,13 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${BenchLogic.describe(e)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${BenchLogic.jsonString(k)}: ${BenchLogic.jsonString(v)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -21,8 +21,8 @@ object Tables {
     * listing + parquet footer schema read + relation build on EVERY call,
     * and every registered query calls it for every base table it touches —
     * at sf0.1 that metadata work measured 0.09-0.18 s per query
-    * construction (tools/FloorProbe), ~40% of the long tail's per-query
-    * floor. A catalog-registered table would get exactly this reuse from
+    * construction (OPTIMIZATION_r18.md, "Tables.table"), ~40% of the long
+    * tail's per-query floor. A catalog-registered table would get exactly this reuse from
     * Spark's own SessionCatalog; path-based reads get it here instead.
     *
     * This caches METADATA ONLY — the immutable lazy DataFrame (logical
@@ -56,26 +56,9 @@ object Tables {
     * CPU-heavy per-row stages (minhash/simhash signatures, vector math)
     * where the shuffle cost is far below the compute it parallelizes.
     */
-  def balanced(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    // Estimate the scan's partition count the way FilePartition packs
-    // splits — ceil((bytes + nFiles·openCost) / maxPartitionBytes) — from
-    // the file listing alone: unlike `df.rdd` this never materializes the
-    // RDD lineage (AQE still owns the plan), and unlike a raw file COUNT it
-    // is correct in both directions (many small files pack into few
-    // partitions; one big file splits into many).
-    val conf = spark.sessionState.conf
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val files = df.inputFiles
-    val totalCost = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(hadoopConf).getFileStatus(p).getLen + conf.filesOpenCostInBytes
-    }.sum
-    val estPartitions =
-      math.max(1L, (totalCost + conf.filesMaxPartitionBytes - 1) / conf.filesMaxPartitionBytes)
-    if (estPartitions < target) df.repartition(target) else df
-  }
+  def balanced(df: DataFrame): DataFrame =
+    if (skinny(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
 
   /** Keyed twin of [[balanced]]: hash-repartition on `keys` to the default
     * parallelism when the source scan would otherwise be skinny. For a
@@ -89,19 +72,29 @@ object Tables {
     * aggregation keeps its normal AQE-sized exchange with map-side partial
     * aggregation.
     */
-  def balancedBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
+  def balancedBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
+    if (skinny(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
+    else df
+
+  /** True when the scan under `df` is estimated to yield fewer splits than
+    * the session's default parallelism. The estimate packs splits the way
+    * FilePartition does — ceil((bytes + nFiles·openCost) /
+    * maxPartitionBytes) — from the file listing alone: unlike `df.rdd` this
+    * never materializes the RDD lineage (AQE still owns the plan), and
+    * unlike a raw file COUNT it is correct in both directions (many small
+    * files pack into few partitions; one big file splits into many).
+    */
+  private def skinny(df: DataFrame): Boolean = {
     val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
     val conf = spark.sessionState.conf
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val files = df.inputFiles
-    val totalCost = files.map { f =>
+    val totalCost = df.inputFiles.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       p.getFileSystem(hadoopConf).getFileStatus(p).getLen + conf.filesOpenCostInBytes
     }.sum
     val estPartitions =
       math.max(1L, (totalCost + conf.filesMaxPartitionBytes - 1) / conf.filesMaxPartitionBytes)
-    if (estPartitions < target) df.repartition(target, keys: _*) else df
+    estPartitions < spark.sparkContext.defaultParallelism
   }
 
   /** Lineage cut for iterative/multi-use intermediates: a RELIABLE
@@ -128,10 +121,12 @@ object Tables {
     * parquet file declares — fixture generations have varied:
     *
     *  - TIMESTAMP(NANOS): Spark 4 has no native type for it — it either
-    *    throws PARQUET_TYPE_ILLEGAL or, with the legacy conf, reads INT64
-    *    nanos. We read nanos and truncate to microsecond TimestampType with
-    *    integer arithmetic (`div`, not double division — epoch-nanos ≈
-    *    1.7e18 exceeds double's 2^53 integer range).
+    *    throws PARQUET_TYPE_ILLEGAL or, with the legacy conf
+    *    `spark.sql.legacy.parquet.nanosAsLong` (set in
+    *    [[graft.GraftSession.defaults]]), reads INT64 nanos. We read nanos
+    *    and truncate to microsecond TimestampType with integer arithmetic
+    *    (`div`, not double division — epoch-nanos ≈ 1.7e18 exceeds
+    *    double's 2^53 integer range).
     *  - TIMESTAMP(µs, isAdjustedToUTC=false): Spark 4 infers
     *    TIMESTAMP_NTZ, on which `unix_micros`/epoch casts are type errors.
     *    Cast to TimestampType — the session zone is pinned to UTC
@@ -140,7 +135,6 @@ object Tables {
     *    still agrees bit-for-bit.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

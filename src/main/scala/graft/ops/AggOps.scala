@@ -23,9 +23,10 @@ object AggOps {
     * FIXTURES.md — value→price, props.k→quantity, event_type→symbol).
     */
   private def trades(spark: SparkSession, dir: String): DataFrame =
-    // NOT balanced (r17): interleaved A/B on the candle base
-    // (tools.CandleAb) measured the repartition COSTING more than the
-    // JSON-parse parallelism it buys (0.88 → 1.02 s on the mfi_14 shape)
+    // NOT balanced (r17): interleaved A/B on the candle base (OPTIMIZATION_
+    // r17.md, "Measured, deliberately left alone") measured the repartition
+    // COSTING more than the JSON-parse parallelism it buys (0.88 → 1.02 s
+    // on the mfi_14 shape)
     Tables.events(spark, dir).select(
       col("ts"),
       col("event_type").as("symbol"),

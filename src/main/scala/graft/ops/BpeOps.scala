@@ -72,7 +72,8 @@ object BpeOps {
     // array walks costs less than the eager localCheckpoint job every
     // round paid (plan depth stays ≤ k expressions over one LogicalRDD —
     // never the unbounded re-planning the per-round ckpt guarded
-    // against). Interleaved A/B (tools.BpeAb): 1.14 → 1.05 s min,
+    // against). Interleaved A/B (OPTIMIZATION_r18.md, "Inherited state",
+    // 89e9941): 1.14 → 1.05 s min,
     // identical merge table; savings repeat inside bpe_segment /
     // bpe_fertility, which train through this loop.
     val base = Tables.ckpt(wordSegs(spark, dir))

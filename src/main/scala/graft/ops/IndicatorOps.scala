@@ -41,7 +41,8 @@ object IndicatorOps {
       round(col("low_price") * 100).cast(LongType).as("lo"),
       round(col("total_volume")).cast(LongType)
         .as("vol")) // r17: an explicit symbol repartition here A/B'd SLOWER
-                    // (tools.CandleAb) — the candle frame is small enough
+                    // (OPTIMIZATION_r17.md, "Measured, deliberately left
+                    // alone") — the candle frame is small enough
                     // that the coalesced single-task window beats paying an
                     // uncoalesced exchange; left shared-shape as shipped
 

@@ -256,7 +256,7 @@ object SimilarityOps {
     // collision between two different grams — the same documented
     // contract as contamination_check / minhash_neardup, and none exists
     // at fixture SFs (the oracle, which replays literal strings, stays
-    // hash-green). Measured (tools.TimeQMin interleaved): the string
+    // hash-green). Measured (round-robin min-of-N, interleaved): the string
     // explosion + string-keyed tf shuffle was the retrieval family's
     // largest shared stage; see OPTIMIZATION_r18.md.
     graft.functions.GraftFunctions.register(spark)

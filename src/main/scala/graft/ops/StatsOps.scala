@@ -131,8 +131,8 @@ object StatsOps {
     */
   def copurchasePairs(spark: SparkSession, dir: String): DataFrame = {
     // r17 note: the copurchaseEdges set+explode rewrite was A/B'd here too
-    // (tools.PairsAb) and LOST narrowly (1.41 vs 1.50 s interleaved) —
-    // unlike the edge build, this op's self-join runs on the distinct's
+    // (OPTIMIZATION_r17.md, "Measured, deliberately left alone") and LOST
+    // narrowly (1.41 vs 1.50 s interleaved) — unlike the edge build, this op's self-join runs on the distinct's
     // own exchange, so it was never scan-serialized. Kept as-is.
     val items = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
@@ -1024,10 +1024,6 @@ object StatsOps {
     * [[kcoreNodes]]. Basket-size-bounded self-join fan-out, then a
     * distinct that shuffles (a, b) id pairs only.
     */
-  /** Probe-visible alias of [[copurchaseEdges]] (tools.LinkPredAb). */
-  private[graft] def copurchaseEdgesProbe(spark: SparkSession, dir: String): DataFrame =
-    copurchaseEdges(spark, dir)
-
   private def copurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
     // r17 rewrite (guide §2.4/§2.5): one groupBy(orderkey) collect_set +
     // in-codegen ordered-pair explode + distinct, replacing the r16
@@ -1036,8 +1032,8 @@ object StatsOps {
     // profiled 1.4-1.6 s of every 3-8 s graph query) and paid a broadcast
     // build besides; the aggregation shape gets its parallelism from the
     // exchange itself, sized by AQE at any scale. Interleaved A/B/C
-    // (tools.EdgeBuildAb): self-join 2.00 s, self-join+balanced 1.43 s,
-    // set+explode 1.24 s, with exceptAll-proven identical output. Per-order
+    // (OPTIMIZATION_r17.md, "copurchaseEdges"): self-join 2.00 s,
+    // self-join+balanced 1.43 s, set+explode 1.24 s, with exceptAll-proven identical output. Per-order
     // sets are basket-bounded (≤7 items at any SF), so collect_set state
     // and pair fan-out per group are O(1) — no giant-key hazard.
     // r18 (guide §2.5): keyed balance — at skinny local split counts the
@@ -1045,10 +1041,11 @@ object StatsOps {
     // serializing the explode+distinct stage on a 32-core box; a pinned
     // hash repartition on the group key replaces that exchange (same
     // shuffle count) and is a no-op at production split counts.
-    // Interleaved (tools.EdgeBuildAb): C set+explode 1.52 s → D keyed
-    // balance 1.04 s min, every D sample below every C sample.
+    // Interleaved (OPTIMIZATION_r18.md, "copurchaseEdges"): C set+explode
+    // 1.52 s → D keyed balance 1.04 s min, every D sample below every C
+    // sample.
     // the distinct's exchange gets the same treatment (its reduce side
-    // AQE-coalesced to ~10 tasks at sf0.1, 411 ms profiled; EdgeBuildAb
+    // AQE-coalesced to ~10 tasks at sf0.1, 411 ms profiled; same entry,
     // G-vs-D: 0.72/0.91 vs 0.78/0.99 min across two sessions)
     Tables.balancedBy(
         Tables.balancedBy(
@@ -1192,8 +1189,8 @@ object StatsOps {
     // moves the compact form; the intersection decodes ON THE FLY inside
     // the same zero-allocation merge walk (varint_sorted_intersect_count
     // == sorted_intersect_count over the decoded arrays, pinned in
-    // VarintExpressionsSpec). Interleaved A/B (tools.TriVarintAb): auto
-    // mode 4.40 → 3.94 s min (smaller broadcast build); copart mode
+    // VarintExpressionsSpec). Interleaved A/B (OPTIMIZATION_r18.md,
+    // 29bd7f2): auto mode 4.40 → 3.94 s min (smaller broadcast build); copart mode
     // wall-flat locally but the SMJ shuffle bytes — the term that crosses
     // the network at 100 TB — shrink >2×. Identity: 1,884,488 triangles
     // in all four cells.
@@ -1261,8 +1258,8 @@ object StatsOps {
     // .distinct()), so every (u, neighbor-label) count is exactly 1 and
     // the (count desc, label asc) argmax degenerates to min(neighbor):
     // one aggregation, one exchange, no (u, nl) count shuffle.
-    // Interleaved A/B (tools.CommunityAb): shipped 5.20 → 4.04 s min with
-    // both changes, exceptAll-identical output. StarComponentsSpec pins
+    // Interleaved A/B (OPTIMIZATION_r18.md, 29bd7f2): shipped 5.20 → 4.04 s
+    // min with both changes, exceptAll-identical output. StarComponentsSpec pins
     // the min(v)==argmax equivalence against the generic round.
     var labels = Tables.ckpt(
       bidir.groupBy(col("u")).agg(min(col("v")).as("lab")))
@@ -1329,7 +1326,7 @@ object StatsOps {
     // copied rows; guide §1.2 "don't compute things you throw away").
     // The per-round anti-join reads the same rows either way; the only
     // ckpt written per round is the (shrinking) new frontier.
-    // Interleaved A/B (tools.ShortestAb): 4.71 → 4.28 s min,
+    // Interleaved A/B (OPTIMIZATION_r18.md, 29bd7f2): 4.71 → 4.28 s min,
     // exceptAll-identical output. (Checkpointing `bidir` itself measured
     // neutral-to-worse — a LogicalRDD loses the union's narrow
     // derivation from the edge ckpt and reports no useful partitioning,
@@ -1589,7 +1586,8 @@ object StatsOps {
     // primitives; the display string is built ONCE on the final
     // node-cardinality ranks frame, BEFORE the top-30 sort, so output
     // rows and the (rank, node-string) tiebreak are bit-identical.
-    // Interleaved A/B (tools.PrAb): 6.17 → 3.82 s min, identical top-30.
+    // Interleaved A/B (OPTIMIZATION_r18.md, 29bd7f2): 6.17 → 3.82 s min,
+    // identical top-30.
     val l = Tables.balanced(Tables.lineitem(spark, dir)
         .select(col("l_partkey").as("pkk"), col("l_suppkey").as("skk")))
       .select((col("pkk") * 2).as("src"), (col("skk") * 2 + 1).as("dst"))
@@ -2629,8 +2627,8 @@ object StatsOps {
     // deg feeds three consumers too (adjb build + the two final
     // deg_a/deg_b joins) — ckpt'd in r18 along with the pair rewrite
     val deg = Tables.ckpt(adj.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    // r18 rewrite (guide §2.3/§2.4, tools.WedgeAb: shipped 5.66 →
-    // packed 5.17 s min, exceptAll-identical top-100):
+    // r18 rewrite (guide §2.3/§2.4, OPTIMIZATION_r18.md 29bd7f2: shipped
+    // 5.66 → packed 5.17 s min, exceptAll-identical top-100):
     //  - wedges come from groupBy(src, brand) + sorted collect_list +
     //    in-codegen ordered-pair explode (the copurchaseEdges r17
     //    precedent) instead of the adjb⋈adjb self-join — the 200+ MB

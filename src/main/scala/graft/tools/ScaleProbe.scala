@@ -34,6 +34,7 @@ import org.apache.spark.sql.functions._
   * across EACH decade — a super-linear term that hides in per-round
   * fixed costs at 10× shows up at 100×.
   *
+  * Runs on `GraftSession.local` with cores from `$SPARK_GRAFT_CPUS`.
   * Usage: `runMain graft.tools.ScaleProbe <scratchDir> [--deep] [op ...]`
   * (default ops: the round-7 super-linear band; --deep defaults to the
   * two highest-exponent ops, pagerank and triangle_count).
@@ -49,11 +50,7 @@ object ScaleProbe {
     val deep = args.contains("--deep")
     val rest = args.drop(1).filterNot(_ == "--deep").toSeq
     val ops = if (rest.nonEmpty) rest else if (deep) DeepOps else DefaultOps
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores, "scaleprobe")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf1 = s"$scratch/sf1x"
@@ -67,13 +64,8 @@ object ScaleProbe {
     }
 
     def time(op: String, dir: String): Double = {
-      def run(): Unit =
-        graft.SparkEntry.queries(op)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-      run() // warm
-      val t0 = System.nanoTime()
-      run()
-      (System.nanoTime() - t0) / 1e9
+      Probe.pass(spark, dir, op) // warm
+      Probe.pass(spark, dir, op)
     }
     if (deep) {
       println(f"${"op"}%-20s ${"sf0.1"}%8s ${"sf1x"}%8s ${"sf10x"}%9s  exp(0.1->1) exp(1->10)")

@@ -100,11 +100,7 @@ class AudioCodecSpec extends AnyFunSuite {
 
   test("banded audio_fingerprint equals brute-force all-pairs at Hamming <= 3") {
     // needs a SparkSession — piggyback on the shared suite session
-    val spark = GraftSession.builder("AudioCodecSpec")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, "AudioCodecSpec").getOrCreate()
     val sf = "/root/testdata/sf0.001"
     val hashes = graft.model.Tables.documents(spark, sf)
       .select("doc_id", "text").collect()
@@ -125,11 +121,7 @@ class AudioCodecSpec extends AnyFunSuite {
   }
 
   test("audio_vad: PCM-walked window energies match the analytic text-byte law") {
-    val spark = GraftSession.builder("AudioCodecSpec")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, "AudioCodecSpec").getOrCreate()
     val sf = "/root/testdata/sf0.001"
     // independent replay: NOT via the codec — straight from the fixture's
     // text-byte→sample law (what the DuckDB oracle also does), so a codec

@@ -126,4 +126,14 @@ class BenchLogicSpec extends AnyFunSuite {
     // Bar pinned: drift must come back < 1.4 for a canonical artifact.
     assert(BenchLogic.NoisyRatio == 1.4)
   }
+
+  test("a failure is recorded with its class and message as a valid JSON string") {
+    val e = new IllegalStateException("bad \"plan\"\n\tat step\\1\u0001")
+    val text = BenchLogic.describe(e)
+    assert(text == "java.lang.IllegalStateException: bad \"plan\"\n\tat step\\1\u0001")
+    assert(BenchLogic.jsonString(text) ==
+      "\"java.lang.IllegalStateException: bad \\\"plan\\\"\\n\\tat step\\\\1\\u0001\"")
+    // a null message stays readable
+    assert(BenchLogic.describe(new RuntimeException()) == "java.lang.RuntimeException: null")
+  }
 }

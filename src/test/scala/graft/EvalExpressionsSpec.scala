@@ -6,7 +6,8 @@ import graft.functions.GraftFunctions
 /** Ground-truth specs for the pair-local generation-eval kernels
   * (clipped_ngram_overlaps, lcs_length) against brute-force Scala
   * reimplementations, plus codegen/eval parity via the SQL registration
-  * path (whole-stage codegen) on randomized token arrays.
+  * path (whole-stage codegen) on randomized token arrays, and a
+  * fallback-off run proving the generated code compiles.
   */
 class EvalExpressionsSpec extends SparkSuite {
 
@@ -94,6 +95,36 @@ class EvalExpressionsSpec extends SparkSuite {
         .select(expr("lcs_length(r, c)")).head().getLong(0)
       assert(got == want, s"r=$r c=$c")
     }
+  }
+
+  test("kernels compile under whole-stage codegen with fallback off, brute-force equal") {
+    // spark.sql.codegen.fallback=false makes a doGenCode that fails to
+    // compile ABORT instead of silently degrading to the interpreted path
+    // (the default fallback hides a broken codegen from every other test).
+    // A parquet scan, not a local Seq: the optimizer folds projections
+    // over local data on the driver, so no generated code would run.
+    GraftFunctions.register(spark)
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val df = graft.model.Tables.documents(spark, "/root/testdata/sf0.001")
+        .selectExpr("split(trim(text), ' ') AS w")
+        .selectExpr("w", "clipped_ngram_overlaps(w, slice(w, 2, 50), 4) AS m",
+          "lcs_length(w, slice(w, 2, 50)) AS l")
+      val rows = df.collect()
+      assert(rows.nonEmpty)
+      val kernelLine = df.queryExecution.executedPlan.toString.linesIterator
+        .find(_.contains("lcs_length")).getOrElse("")
+      assert(kernelLine.matches("""\s*(\+- )?\*\(\d+\) Project .*"""),
+        df.queryExecution.executedPlan.toString)
+      rows.foreach { row =>
+        val w = row.getAs[scala.collection.Seq[String]]("w").toSeq
+        val c = w.slice(1, 51) // SQL slice(w, 2, 50): 1-based start, length
+        assert(row.getAs[scala.collection.Seq[Long]]("m").toSeq == bruteClipped(w, c, 4))
+        assert(row.getAs[Long]("l") == bruteLcs(w, c))
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("interpreted eval agrees with the codegen path") {

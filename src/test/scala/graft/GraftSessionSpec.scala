@@ -87,4 +87,41 @@ class GraftSessionSpec extends SparkSuite {
       assert(!files.exists(f => f.startsWith(".") && f.endsWith(".crc")), s"$d: $files")
     }
   }
+
+  test("local sizes the single-JVM session: local[cores], partitions = cores, UI off") {
+    // the shared suite session is GraftSession.local(4, ...); a new session
+    // reads the context's conf, untouched by other suites' runtime sets
+    val fresh = spark.newSession()
+    assert(spark.sparkContext.master == "local[4]")
+    assert(fresh.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    GraftSession.defaults.foreach { case (k, v) => assert(fresh.conf.get(k) == v, k) }
+  }
+
+  test("reading Tables.events leaves the session conf unchanged") {
+    // a fresh session: no earlier suite's read can have set anything on it
+    val fresh = spark.newSession()
+    val before = fresh.conf.getAll
+    val events = graft.model.Tables.events(fresh, "/root/testdata/sf0.001")
+    assert(events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(events.count() > 0)
+    assert(fresh.conf.getAll == before)
+  }
+
+  test("GraftSession is the only main-code caller of SparkSession.builder()") {
+    // one session-construction path: a second builder call in src/main
+    // would ship, bench or verify a config the specs never run
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
+    val call = """SparkSession\s*\.\s*builder\s*\(""".r
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.getFileName.toString == "GraftSession.scala"))
+    val offenders = files.filter { f =>
+      f.getFileName.toString != "GraftSession.scala" &&
+        call.findFirstIn(Files.readString(f)).isDefined
+    }
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
 }

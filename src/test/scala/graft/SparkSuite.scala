@@ -4,18 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs, built through [[GraftSession]] so
-  * every suite runs on the production session path (extensions injection,
-  * AQE, RocksDB streaming state) — not a test-only configuration. Small
-  * shuffle fan-out keeps unit runs fast; operators themselves are
-  * partition-count-agnostic.
+/** Shared local SparkSession for specs, built through [[GraftSession.local]]
+  * — the session path Bench, Verify and Probe run on (extensions injection,
+  * AQE, RocksDB streaming state), not a test-only configuration. Four cores
+  * keep unit runs fast; operators themselves are partition-count-agnostic.
   */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = GraftSession.builder(getClass.getSimpleName)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.local(4, getClass.getSimpleName).getOrCreate()
 
   override def afterAll(): Unit = {
     // session is shared across suites in one JVM; don't stop it here
