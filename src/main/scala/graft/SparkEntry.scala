@@ -19,7 +19,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     AggOps.ohlcv1min(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- reference pipeline, batch form (SURVEY §2.2-2.3) ----
     "ohlcv_1min"        -> (AggOps.ohlcv1min _),
     "open_close"        -> (AggOps.openClose _),
@@ -521,7 +521,7 @@ object SparkEntry {
       |        FROM e, c3 c) WHERE rn = 1)
       |""").stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = Map(
     "ts_pattern_search" -> TsPatternSql,
     "ohlcv_1min" ->
       """WITH t AS (

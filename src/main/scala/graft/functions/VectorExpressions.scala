@@ -137,7 +137,7 @@ object GraftFunctions {
       build(children)
     }
 
-  private[functions] def fns: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+  private[graft] def fns: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     (FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
       arity("dot_product", 2)(c => DotProduct(c(0), c(1)))),
@@ -214,9 +214,14 @@ object GraftFunctions {
     org.apache.spark.sql.GraftBridge.column(
       PqEncode(org.apache.spark.sql.GraftBridge.expression(child), codebooks))
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = fns.foreach { case (id, info, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+  /** Idempotent per-session registration, for a session built without
+    * [[GraftExtensions]]: names the registry already has are left alone.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    fns.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 }
 

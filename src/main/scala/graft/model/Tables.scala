@@ -16,35 +16,73 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition-count-agnostic so nothing here changes with scale.
   */
 object Tables {
-  /** Session-scoped source-relation memo (r18, guide §6 "file listing …
-    * cached per session"): `spark.read.parquet` pays a driver-side file
-    * listing + parquet footer schema read + relation build on EVERY call,
-    * and every registered query calls it for every base table it touches —
-    * at sf0.1 that metadata work measured 0.09-0.18 s per query
-    * construction (OPTIMIZATION_r18.md, "Tables.table"), ~40% of the long
-    * tail's per-query floor. A catalog-registered table would get exactly this reuse from
-    * Spark's own SessionCatalog; path-based reads get it here instead.
-    *
-    * This caches METADATA ONLY — the immutable lazy DataFrame (logical
-    * plan + resolved schema + file index). No row data is cached and no
-    * result is memoized: every action on a derived frame still scans the
-    * parquet inputs (input-bytes metrics are unchanged, split packing
-    * still honors the current session conf at execution time). Keyed
-    * weakly per session so test sessions release their plans on stop.
-    */
-  private val readerMemo = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  /** `<dir>/<name>.parquet`: one parquet file, or a directory of parts. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
+  /** A table's reader, built once per (session, source listing) by [[memo]]
+    * (r18, guide §6 "file listing … cached per session"): `spark.read.parquet`
+    * pays a driver-side file listing + parquet footer schema read +
+    * relation build on EVERY call — 0.09-0.18 s per query construction at
+    * sf0.1 (OPTIMIZATION_r18.md, "Tables.table"), where a hit costs one
+    * status call (~20 µs for a file, ~130 µs for a directory). The value is
+    * the lazy DataFrame only: every action still scans the parquet inputs.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val per = readerMemo.synchronized {
-      var m = readerMemo.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        readerMemo.put(spark, m)
-      }
-      m
+    val p = path(dir, name)
+    memo(spark, "reader", p)(_ => spark.read.parquet(p))
+  }
+
+  /** The one build-once cache: table readers, the IVF/PQ index builds and
+    * the storage-layout tables of `StorageOps.ensure`. An entry is keyed by
+    * (session, kind, source path) and keeps the source's [[fingerprint]]
+    * from its build; every call takes a fresh one, and when it differs (the
+    * source was rewritten) `build` runs again with it and replaces the
+    * entry. Builds nest (an index build reads its corpus through [[table]]),
+    * so a build holds only its own entry's lock: one build per key at a
+    * time. A build that throws leaves the entry as it was.
+    */
+  private[graft] def memo[T](spark: SparkSession, kind: String, source: String)(
+      build: String => T): T = {
+    val fp = fingerprint(spark, source)
+    val entry = sessions.synchronized {
+      sessions.computeIfAbsent(spark, _ => new Entries())
+        .computeIfAbsent((kind, source), _ => new Entry)
     }
-    per.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
+    entry.synchronized {
+      if (entry.fingerprint != fp) {
+        entry.value = build(fp)
+        entry.fingerprint = fp
+      }
+      entry.value.asInstanceOf[T]
+    }
+  }
+
+  private final class Entry { var fingerprint: String = _; var value: Any = _ }
+  private type Entries = java.util.HashMap[(String, String), Entry]
+
+  /** A reader value holds its session, so every session with entries stays
+    * reachable: only the most recently used few keep them. Four covers a
+    * main's one session, perfbench's cold-start session and three setups,
+    * and a spec suite's shared session beside its `newSession()`s; a
+    * session past the cap only rebuilds.
+    */
+  private[graft] val MaxSessions = 4
+  private val sessions = new java.util.LinkedHashMap[SparkSession, Entries](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[SparkSession, Entries]): Boolean =
+      size > MaxSessions
+  }
+
+  /** (name, length, mtime) of `source`, or of each file in it when it is a
+    * directory, from one fresh `listStatus` — never from a memoized frame's
+    * `inputFiles`, which lists the files as they were at build time. Empty
+    * for a missing source, whose build then fails with the reader's error.
+    */
+  private def fingerprint(spark: SparkSession, source: String): String = {
+    val p = new org.apache.hadoop.fs.Path(source)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString("|")
+    catch { case _: java.io.FileNotFoundException => "" }
   }
 
   /** Round-robin repartition up to the session's default parallelism when

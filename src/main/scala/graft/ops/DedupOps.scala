@@ -70,7 +70,6 @@ object DedupOps {
     * non-empty-input precondition).
     */
   private def signed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.balanced(Tables.documents(spark, dir))
       .select(col("doc_id"), expr("word3gram_hashes(text)").as("hh"))
       .filter(size(col("hh")) >= 1)
@@ -316,7 +315,6 @@ object DedupOps {
     * hamming-distance search downstream.
     */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.balanced(Tables.documents(spark, dir))
       .select(col("doc_id"), split(trim(col("text")), " ").as("w"))
       .withColumn("hashes", expr("transform(w, t -> xxhash64(t))"))
@@ -657,7 +655,9 @@ object DedupOps {
         |WHERE CAST(size(array_intersect(a.sh, b.sh)) AS DOUBLE)
         |        / size(array_union(a.sh, b.sh)) >= 0.5
         |""".stripMargin)).createOrReplaceTempView("graft_docs_rcte_pairs")
-    spark.sql(
+    // spark.sql analyzes eagerly: the result holds the views' plans, so
+    // both views are dropped before it is returned
+    val closure = spark.sql(
       """WITH RECURSIVE
         |walk(doc_id, lab) AS (
         |  SELECT doc_id, doc_id FROM graft_docs_rcte
@@ -668,6 +668,8 @@ object DedupOps {
         |  CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
         |FROM (SELECT doc_id, min(lab) AS cluster_id FROM walk GROUP BY doc_id) t
         |""".stripMargin)
+    Seq("graft_docs_rcte", "graft_docs_rcte_pairs").foreach(spark.catalog.dropTempView)
+    closure
   }
 
   /** Incremental batch-vs-corpus dedup — the production ingest shape: a
@@ -693,7 +695,6 @@ object DedupOps {
     * are post-cap set sizes.
     */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .withColumn("bucket", PipelineOps.hashBucket(col("doc_id")))
     val k = Tables.balanced(docs)
@@ -765,7 +766,6 @@ object DedupOps {
     */
   def exactSubstrSpans(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val W = 20
     // word_window_hashes returns EMPTY for docs under W tokens (no
     // upstream length filter needed — the expression is total); the token

@@ -154,7 +154,6 @@ object PipelineOps {
     * TakeOrderedAndProject with a deterministic (count desc, gram) order.
     */
   def charNgrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .filter(length(col("text")) >= 3)
       // native one-pass extraction — the substring(text, i, 3)-per-position
@@ -281,7 +280,6 @@ object PipelineOps {
     * oracle doesn't (negligible at any SF this runs at).
     */
   def contaminationCheck(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .withColumn("bucket", hashBucket(col("doc_id")))
     def shingleHashes(d: DataFrame): DataFrame =
@@ -319,7 +317,6 @@ object PipelineOps {
     * Containment denominators are post-cap for the same reason.
     */
   def decontaminateTrain(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .withColumn("bucket", hashBucket(col("doc_id")))
     def shingles(d: DataFrame): DataFrame =

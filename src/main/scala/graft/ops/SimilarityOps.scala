@@ -26,7 +26,6 @@ object SimilarityOps {
     * oracle match) are bit-identical.
     */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.balanced(Tables.embeddings(spark, dir))
       .select(
         col("vec_id"),
@@ -259,7 +258,6 @@ object SimilarityOps {
     // hash-green). Measured (round-robin min-of-N, interleaved): the string
     // explosion + string-keyed tf shuffle was the retrieval family's
     // largest shared stage; see OPTIMIZATION_r18.md.
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.balanced(Tables.documents(spark, dir))
       .select(col("doc_id"), expr("word_window_hashes(text, 3)").as("hs"))
       .filter(size(col("hs")) >= 1)
@@ -482,7 +480,6 @@ object SimilarityOps {
     * that broadcasts back onto the ≤50-row negative frame.
     */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.balanced(Tables.embeddings(spark, dir))
     def prep(df: DataFrame): DataFrame = df
       .select(col("vec_id"), col("label"),
@@ -575,7 +572,6 @@ object SimilarityOps {
     * broadcasts exactly as in [[knnCosine]].
     */
   def filteredKnn(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.embeddings(spark, dir)
     def prep(df: DataFrame): DataFrame = df
       .select(col("vec_id"), col("label"),
@@ -661,32 +657,17 @@ object SimilarityOps {
     * corpus is hash-partitioned by cell exactly like an IVF index shard.
     */
   private val nList = 16
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
 
-  /** Fingerprint of the corpus files under `dir` (path, length, mtime per
-    * parquet part) — cache-keys the trained quantizer to the DATA, not just
-    * the path, so a rewritten fixture or refreshed corpus within one JVM
-    * retrains instead of silently assigning cells with stale centroids.
-    */
-  private def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    Tables.embeddings(spark, dir).inputFiles.sorted.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      s"$f:${st.getLen}:${st.getModificationTime}"
-    }.mkString("|")
-  }
-
-  /** IVF coarse-quantizer centroids for `dir`, trained once per corpus and
-    * memoized — the index-build/query-time split every IVF deployment has.
+  /** IVF coarse-quantizer centroids for `dir`, trained once per corpus
+    * through [[Tables.memo]] and retrained when `embeddings` is rewritten —
+    * the index-build/query-time split every IVF deployment has.
     * Training runs on a bounded sample, not the corpus: an iterative KMeans
     * over the full 100 TB would be a multi-pass ML job in the middle of a
     * query, and centroid quality is insensitive to sampling (IVF practice
     * is ~256 training points per centroid).
     */
   private def ivfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    centroidCache.computeIfAbsent(dir + "#" + corpusFingerprint(spark, dir), { _ =>
+    Tables.memo(spark, "ivf", Tables.path(dir, "embeddings")) { _ =>
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val train = vecs(spark, dir)
@@ -698,7 +679,7 @@ object SimilarityOps {
         .setFeaturesCol("features").fit(train)
       train.unpersist()
       model.clusterCenters.map(_.toArray)
-    })
+    }
 
   /** Input + `cell` column: per-row argmin over the centroid literals — a
     * pure map (no shuffle, no MLlib transform in the query path), using
@@ -770,11 +751,10 @@ object SimilarityOps {
     * (the verification-join structure shared with [[annLsh]]).
     *
     * Codebooks are trained per-subspace on a bounded deterministic sample
-    * with driver-local Lloyd iterations (an index-BUILD step, memoized by
-    * corpus fingerprint like [[ivfCentroids]]; ≤ PqK·256 = 8192 vectors ×
-    * 64 doubles ≈ 4 MB on the driver — the standard PQ training budget of
-    * ~256 points per centroid). A
-    * deployment would also encode ONCE at ingest and store the codes
+    * with driver-local Lloyd iterations (an index-BUILD step, built once
+    * per corpus through [[Tables.memo]] like [[ivfCentroids]]; ≤ PqK·256 =
+    * 8192 vectors × 64 doubles ≈ 4 MB on the driver — the standard PQ
+    * training budget of ~256 points per centroid). A deployment would also encode ONCE at ingest and store the codes
     * column; here encoding runs inline so the op stays a pure function of
     * the source table.
     */
@@ -798,8 +778,6 @@ object SimilarityOps {
     * than plain u; it pays off only on clustered real-world embeddings.
     */
   private val IvfPqProbe = 8
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Array[Double]]]]()
 
   /** Deterministic Lloyd's k-means (fixed start: the k points at evenly
     * spaced sample indices; fixed iteration count; empty clusters keep
@@ -843,7 +821,7 @@ object SimilarityOps {
     * on NORMALIZED vectors (the representation [[annPq]] encodes).
     */
   private def pqCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent(dir + "#" + corpusFingerprint(spark, dir), { _ =>
+    Tables.memo(spark, "pq", Tables.path(dir, "embeddings")) { _ =>
       val sample = vecs(spark, dir)
         .select(expr("transform(v, x -> x / nrm)").as("u"))
         .sample(withReplacement = false, 0.9, seed = 42L)
@@ -853,7 +831,7 @@ object SimilarityOps {
       Array.tabulate(PqM) { j =>
         lloyd(sample.map(_.slice(j * PqSubDim, (j + 1) * PqSubDim)), PqK, iters = 10)
       }
-    })
+    }
 
   /** [[vecs]] + `u`, the NORMALIZED vector PQ operates on: for unit
     * vectors ‖a−b‖² = 2−2·cos, so the ADC L2 ranking IS the cosine
@@ -919,7 +897,7 @@ object SimilarityOps {
     * WHAT the scan reads (M byte-codes per row, ADC lookups instead of
     * vector math); the top-C ADC candidates re-rank exactly. Both trained
     * components are reused as-is ([[ivfCentroids]], [[pqCodebooks]] —
-    * fingerprint-memoized index builds), demonstrating that the engine's
+    * build-once index builds in [[Tables.memo]]), demonstrating that the engine's
     * index pieces compose. At 100 TB: corpus hash-partitioned by cell,
     * scan touches nProbe cells × 8 bytes/row, shuffle carries ids only.
     */
@@ -1202,7 +1180,6 @@ object SimilarityOps {
     * the op is fully oracle-checked despite float output.
     */
   def semanticOutliers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
@@ -1249,7 +1226,6 @@ object SimilarityOps {
     * discipline).
     */
   def centroidConfusion(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
@@ -1417,7 +1393,6 @@ object SimilarityOps {
     * cosine tail touches only probed-cell candidates.
     */
   def annIvfFlat(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = kmeansFrame(spark, dir)
     val cents = kmeansTrainOn(e, 8, 3)
     val corpus = kmeansBest(e, cents)
@@ -1530,7 +1505,6 @@ object SimilarityOps {
     * on the 4-row k key.
     */
   def mrlTruncate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))

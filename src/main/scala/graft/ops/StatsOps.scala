@@ -1179,7 +1179,6 @@ object StatsOps {
     //    decision uses exact post-shuffle sizes, not estimates.
     //  - copartitioned (triangle_count_copart): hint("merge") pins the
     //    web-scale mode unconditionally, for any size.
-    graft.functions.GraftFunctions.register(spark)
     // r18 (guide §2.3 "shuffle fewer bytes"): the sorted neighbor arrays
     // are DELTA-VARINT encoded right after the aggregation —
     // UnsafeArrayData spends 8 B/element regardless of magnitude, while

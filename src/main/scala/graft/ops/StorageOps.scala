@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,37 +23,13 @@ import graft.model.Tables
   *    file, so a selective filter reads 1/k of the table instead of
   *    filtering rows post-read. (PlanSpec asserts the pruned scan.)
   *
-  * Both ops build their layout ONCE per corpus (fingerprint-keyed memo, the
-  * same index-build/query split as [[SimilarityOps]]' IVF centroids) and
-  * then answer queries through the layout; the oracle runs the equivalent
-  * SQL over the RAW parquet, proving layout changes never change results.
+  * Both ops build their layout ONCE per source table ([[ensure]], through
+  * the [[Tables.memo]] build-once cache) and then answer queries through
+  * the layout; the oracle runs the equivalent SQL over the RAW parquet,
+  * proving layout changes never change results.
   */
 object StorageOps {
 
-  private val built = new ConcurrentHashMap[String, String]()
-
-  /** (path, length, mtime) fingerprint of a source table's files — cache
-    * keys the derived layout to the DATA, so a refreshed corpus rebuilds.
-    */
-  private def fingerprint(spark: SparkSession, dir: String, table: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val df = if (table == "events") Tables.events(spark, dir)
-             else Tables.table(spark, dir, table)
-    df.inputFiles.sorted.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      s"$f:${st.getLen}:${st.getModificationTime}"
-    }.mkString("|")
-  }
-
-  /** Build-once catalog table derived from (dir, source table): the table
-    * name embeds the corpus fingerprint hash so distinct SF dirs (or
-    * refreshed data) in one JVM get distinct tables; the memo skips repeat
-    * existence checks. A fresh JVM starts with an empty in-memory catalog
-    * but the warehouse DIRECTORY survives on disk — `saveAsTable` refuses
-    * that orphan location (LOCATION_ALREADY_EXISTS; `overwrite` only drops
-    * locations of tables the catalog knows), so delete it before building.
-    */
   /** The ONE place the managed-table-location assumption lives: staging
     * moving to a named database or explicit LOCATION changes this and
     * nothing else ([[ensure]]'s orphan cleanup and every path-based
@@ -64,15 +38,24 @@ object StorageOps {
   private[ops] def tableLocation(spark: SparkSession, tbl: String): String =
     spark.conf.get("spark.sql.warehouse.dir") + "/" + tbl
 
+  /** Build-once catalog table derived from (dir, source table): the table
+    * name embeds a hash of the source's fingerprint, so distinct SF dirs
+    * (or rewritten data) in one JVM get distinct tables, and
+    * [[Tables.memo]] skips repeat existence checks until the source
+    * changes. A fresh JVM starts with an empty in-memory catalog but the
+    * warehouse DIRECTORY survives on disk — `saveAsTable` refuses that
+    * orphan location (LOCATION_ALREADY_EXISTS; `overwrite` only drops
+    * locations of tables the catalog knows), so delete it before building.
+    */
   private[ops] def ensure(spark: SparkSession, dir: String, source: String,
-                          base: String)(build: String => Unit): String = {
-    val key = s"$dir#$base#${fingerprint(spark, dir, source)}"
-    built.computeIfAbsent(key, { k =>
+                          base: String)(build: String => Unit): String =
+    Tables.memo(spark, base, Tables.path(dir, source)) { fingerprint =>
       // 64 hex bits of SHA-256, not String.hashCode: with a 31-bit name a
       // colliding (dir, fingerprint) pair would silently SERVE THE OTHER
       // CORPUS'S TABLE (tableExists short-circuits the build)
       val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(k.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+        .digest(s"$dir#$base#$fingerprint".getBytes("UTF-8"))
+        .take(8).map("%02x".format(_)).mkString
       val tbl = base + "_" + digest
       if (!spark.catalog.tableExists(tbl)) {
         val loc = new org.apache.hadoop.fs.Path(tableLocation(spark, tbl))
@@ -81,8 +64,7 @@ object StorageOps {
         build(tbl)
       }
       tbl
-    })
-  }
+    }
 
   /** Orders ⋈ lineitem on the order key with BOTH sides bucketed (and
     * per-file sorted) on that key: the executed plan is a sort-merge join

@@ -97,7 +97,6 @@ object NearDupStream {
   def banded(docs: DataFrame): Dataset[BandRow] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     docs
       .select(col("doc_id"), expr("word3gram_hashes(text)").as("hh"))
       .filter(size(col("hh")) >= 1)

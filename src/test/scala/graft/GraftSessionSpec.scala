@@ -33,15 +33,28 @@ class GraftSessionSpec extends SparkSuite {
     // per-session GraftFunctions.register calls from other suites can't
     // leak into it.
     val fresh = spark.newSession()
-    Seq("dot_product", "cosine_sim", "minhash_sig", "simhash64",
-      "signlsh_buckets", "char_ngrams3").foreach { fn =>
-      assert(fresh.sessionState.functionRegistry
-        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(fn)), fn)
+    val ids = graft.functions.GraftFunctions.fns.map(_._1)
+    assert(ids.size == 16)
+    ids.foreach { id =>
+      assert(fresh.sessionState.functionRegistry.functionExists(id), id)
     }
     // and they resolve end-to-end in SQL
     val r = fresh.sql(
       "SELECT dot_product(array(1D, 2D), array(3D, 4D)) AS d").collect()(0)
     assert(r.getDouble(0) == 11.0)
+  }
+
+  test("register leaves functions the session already has in place") {
+    // extension-injected builders are kept, not replaced (a replacement
+    // logs a WARN per function per call)
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val ids = graft.functions.GraftFunctions.fns.map(_._1)
+    val before = ids.map(id => registry.lookupFunctionBuilder(id).get)
+    graft.functions.GraftFunctions.register(fresh)
+    ids.zip(before).foreach { case (id, b) =>
+      assert(registry.lookupFunctionBuilder(id).get eq b, id)
+    }
   }
 
   test("builder applies every default") {

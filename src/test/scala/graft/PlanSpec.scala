@@ -15,6 +15,17 @@ class PlanSpec extends SparkSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** The media decode maps' spread (`Tables.balanced`): at most one
+    * Exchange, a round-robin one, and nothing gathered onto one partition.
+    */
+  private def assertRoundRobinOnly(p: String): Unit = {
+    val exchanges = """\w*Exchange \w+""".r
+      .findAllIn(p.split("== Initial Plan ==")(0)).toSeq
+    assert(exchanges.size <= 1, p)
+    assert(exchanges.forall(_ == "Exchange RoundRobinPartitioning"), p)
+    assert(!p.contains("SinglePartition"), p)
+  }
+
   test("filter_event_type pushes the predicate into the parquet scan") {
     val p = plan("filter_event_type")
     assert(p.contains("PushedFilters: [IsNotNull(event_type), EqualTo(event_type,purchase)]"), p)
@@ -831,6 +842,7 @@ class PlanSpec extends SparkSuite {
     assert("Scan parquet".r.findAllIn(p).length == 1, p)
     assert(!p.contains("hashpartitioning") && !p.contains("rangepartitioning"), p)
     assert(!p.contains("Join"), p)
+    assertRoundRobinOnly(p)
   }
 
   test("pack_efficiency: one scan, sharded window, bounded span explode") {
@@ -951,6 +963,7 @@ class PlanSpec extends SparkSuite {
     assert("Scan parquet".r.findAllIn(p).length == 1, p)
     assert(!p.contains("Exchange"), p)
     assert(!p.contains("Join"), p)
+    assertRoundRobinOnly(p)
   }
 
   test("l_diversity: broadcast dim join; distinct census partial-aggregates") {
@@ -1055,6 +1068,7 @@ class PlanSpec extends SparkSuite {
     assert("Scan parquet".r.findAllIn(p).length == 1, p)
     assert(!p.contains("hashpartitioning") && !p.contains("rangepartitioning"), p)
     assert(!p.contains("Join"), p)
+    assertRoundRobinOnly(p)
   }
 
   test("video_meta: header-only codec map — one scan, no key exchange, no join") {
@@ -1064,6 +1078,7 @@ class PlanSpec extends SparkSuite {
     assert("Scan parquet".r.findAllIn(p).length == 1, p)
     assert(!p.contains("hashpartitioning") && !p.contains("rangepartitioning"), p)
     assert(!p.contains("Join"), p)
+    assertRoundRobinOnly(p)
   }
 
   test("video_frame_sample: decode-slot frame fan-out — one scan, no key exchange, no join") {
@@ -1073,6 +1088,7 @@ class PlanSpec extends SparkSuite {
     assert("Scan parquet".r.findAllIn(p).length == 1, p)
     assert(!p.contains("hashpartitioning") && !p.contains("rangepartitioning"), p)
     assert(!p.contains("Join"), p)
+    assertRoundRobinOnly(p)
   }
 
   test("triangle_count: AQE's runtime size switch picks broadcast on this fixture") {

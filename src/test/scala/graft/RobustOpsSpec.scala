@@ -354,4 +354,44 @@ class RobustOpsSpec extends SparkSuite {
     assert(got == expected)
     assert(got.nonEmpty, "no overlapping user sessions — vacuous fixture")
   }
+
+  test("sql_recursive_closure drops its temp views and matches a walk replay") {
+    import spark.implicits._
+    // sf0.001 has no adjacent near-duplicates; the planted corpus chains
+    // 1-2-3 and 6-7, with a too-short and a null text beside them
+    val planted = java.nio.file.Files.createTempDirectory("rcte").toString
+    Seq[(Long, String)]((1L, "a b c d e"), (2L, "a b c d e f"), (3L, "a b c d e f"),
+      (4L, "x y z w"), (5L, "short"), (6L, "p q r s"), (7L, "p q r s"), (8L, null))
+      .toDF("doc_id", "text").write.parquet(s"$planted/documents.parquet")
+    Seq(sf, planted).foreach { dir =>
+      val df = SparkEntry.queries("sql_recursive_closure")(spark, dir)
+      val leaked = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_docs_rcte"))
+      assert(leaked.isEmpty, leaked.mkString(", "))
+      // replay: adjacent docs link when their distinct word-3-gram sets
+      // have Jaccard >= 0.5; a doc's cluster is the lowest id its chain
+      // reaches
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+        .select("doc_id", "text").collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      val shingles = docs.collect { case (id, Some(t)) =>
+        val w = SparkSuite.sqlTrim(t).split(" ", -1)
+        id -> (0 to w.length - 3).map(i => s"${w(i)} ${w(i + 1)} ${w(i + 2)}").toSet
+      }.filter(_._2.nonEmpty)
+      val linked = shingles.collect { case (b, sb) if shingles.contains(b - 1) =>
+        val sa = shingles(b - 1)
+        b -> ((sa & sb).size.toDouble / (sa | sb).size >= 0.5)
+      }.filter(_._2).keySet
+      def root(id: Long): Long = if (linked(id)) root(id - 1) else id
+      val cluster = docs.keys.map(id => id -> root(id)).toMap
+      val size = cluster.values.groupBy(identity).map { case (c, ids) => c -> ids.size.toLong }
+      val expected = cluster.toSeq.map { case (id, c) => (id, c, size(c)) }.sorted
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      assert(got == expected, dir)
+    }
+    val plantedRows = SparkEntry.queries("sql_recursive_closure")(spark, planted)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(plantedRows == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L,
+      6L -> 6L, 7L -> 6L, 8L -> 8L))
+  }
 }
