@@ -16,7 +16,10 @@ import scala.util.control.NonFatal
   * (default 3); the per-query number of record is the MEDIAN, with min/
   * max and raw samples written to `bench_details.json` (override:
   * SPARK_GRAFT_BENCH_DETAILS), plus the first failure's exception class
-  * and message as `error` for a query whose pass failed. The stdout line itself carries only
+  * and message as `error` for a query whose pass failed, and the timed
+  * passes' generated-code compiles as `codegen_compiles` and
+  * `codegen_compile_ms` (a nonzero count on a warm pass means the codegen
+  * cache missed). The stdout line itself carries only
   * bounded summaries — total (sum of medians), total_min (sum of mins),
   * the 10 slowest medians, failure counts, and a `per_query_drift` map
   * flagging every query whose samples spread wide — max/min > 2.5 or
@@ -170,6 +173,44 @@ object BenchLogic {
   def noisyRun(ratio: Double): Boolean =
     ratio > NoisyRatio || ratio < 1.0 / NoisyRatio
 
+  /** Generated code compiled so far in this JVM: Janino compiles and their
+    * total nanos. The compiles of a span are the difference of two
+    * snapshots; the counters are JVM-wide, so a span counts every thread's
+    * compiles. Take snapshots only once a session exists: the first read
+    * of `CodeGenerator` sizes its class cache from the active session's
+    * conf, or from Spark's defaults when there is none.
+    */
+  final case class Compiles(count: Long, nanos: Long) {
+    def +(o: Compiles): Compiles = Compiles(count + o.count, nanos + o.nanos)
+    def -(o: Compiles): Compiles = Compiles(count - o.count, nanos - o.nanos)
+  }
+  object Compiles {
+    val zero: Compiles = Compiles(0, 0)
+    def now(): Compiles = Compiles(
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+    /** `body`'s result and the compiles made while it ran. */
+    def during[A](body: => A): (A, Compiles) = {
+      val before = now()
+      val a = body
+      (a, now() - before)
+    }
+  }
+
+  /** One query's entry in bench_details.json. `median` leads, so the entry
+    * parses as a prior ([[parsePriorMedians]]); -1.0 samples are failed
+    * passes, and `compiles` sums the timed passes.
+    */
+  def detailsEntry(name: String, median: Double, min: Double, max: Double,
+                   remeasured: Option[Double], samples: Seq[Double],
+                   compiles: Compiles, error: Option[String]): String =
+    jsonString(name) + ":{\"median\":" + median + ",\"min\":" + min +
+      ",\"max\":" + max + remeasured.map(",\"remeasured\":" + _).getOrElse("") +
+      ",\"samples\":" + samples.mkString("[", ",", "]") +
+      ",\"codegen_compiles\":" + compiles.count +
+      ",\"codegen_compile_ms\":" + math.rint(compiles.nanos / 1e3) / 1e3 +
+      error.map(e => ",\"error\":" + jsonString(e)).getOrElse("") + "}"
+
   /** A query failure as recorded by Bench and Verify: exception class and
     * message, so a failed query names its cause instead of a bare -1.0.
     */
@@ -224,18 +265,23 @@ object Bench {
       }
     // n timed passes per query (query-major so each query's samples are
     // back-to-back — comparable load conditions within a sample set). The
-    // first failure of each query is kept with its cause for the details
-    // file.
+    // details file gets the first failure of each query with its cause, and
+    // each query's generated-code compiles over its timed passes (0 once
+    // the warm pass has filled the codegen cache).
     val errors = collection.mutable.Map[String, String]()
+    val compiles = collection.mutable.Map[String, BenchLogic.Compiles]()
     val samples: Map[String, Seq[Double]] = SparkEntry.queries.map { case (name, fn) =>
       name -> (1 to n).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try {
-          sleepSpec.foreach { case (q, ms) => if (q == name) Thread.sleep(ms) }
-          run(fn); true
-        } catch { case NonFatal(e) =>
-          errors.getOrElseUpdate(name, BenchLogic.describe(e)); false
+        val (ok, c) = BenchLogic.Compiles.during {
+          try {
+            sleepSpec.foreach { case (q, ms) => if (q == name) Thread.sleep(ms) }
+            run(fn); true
+          } catch { case NonFatal(e) =>
+            errors.getOrElseUpdate(name, BenchLogic.describe(e)); false
+          }
         }
+        compiles(name) = compiles.getOrElse(name, BenchLogic.Compiles.zero) + c
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
     }
@@ -361,12 +407,8 @@ object Bench {
       drift.map { case (_, r) => s""","drift_ratio":$r""" }.getOrElse("") +
       s""","sf":"$sfDir"}"""
     val details = (metaStr +: samples.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"\"" + k + "\":{\"median\":" + med(k) + ",\"min\":" + mins(k) +
-        ",\"max\":" + maxs(k) +
-        reMeasMap.get(k).map(",\"remeasured\":" + _).getOrElse("") +
-        ",\"samples\":" + v.mkString("[", ",", "]") +
-        errors.get(k).map(e => ",\"error\":" + BenchLogic.jsonString(e)).getOrElse("") +
-        "}"
+      BenchLogic.detailsEntry(k, med(k), mins(k), maxs(k), reMeasMap.get(k), v,
+        compiles(k), errors.get(k))
     }).mkString("{", ",", "}")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailsPath), details)

@@ -55,7 +55,22 @@ object GraftSession {
     // reads as INT64 nanos, which Tables.events truncates to microseconds.
     // Set once here rather than by Tables.events on every read, so reading
     // a table never mutates the session's conf
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // generated-code cache: CodeGenerator keeps compiled classes in one
+    // JVM-wide LRU keyed by (class loader, source), 100 entries by default.
+    // The 15 candle queries alone need 126 (a driver-side and a task-side
+    // class per codegen stage), so the LRU evicted every class before its
+    // next use and each warm pass recompiled ~100 classes in Janino (24% of
+    // a warm pass's CPU samples). A static conf, read once when the JVM
+    // first generates code: it takes effect only through the builder that
+    // starts the JVM's first SparkContext
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    // one task class loader for every session: with isolation on, each
+    // SparkSession runs its tasks under its own loader, so a new session
+    // misses the cache above and recompiles every task-side class (414
+    // compiles against 126 over one perfbench run). Isolation only scopes
+    // jars and files added through a session, and the engine adds none
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     defaults.foldLeft(SparkSession.builder().appName(appName)) {

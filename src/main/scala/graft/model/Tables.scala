@@ -39,10 +39,12 @@ object Tables {
     * source was rewritten) `build` runs again with it and replaces the
     * entry. Builds nest (an index build reads its corpus through [[table]]),
     * so a build holds only its own entry's lock: one build per key at a
-    * time. A build that throws leaves the entry as it was.
+    * time. A build that throws leaves the entry as it was. When a rebuild
+    * yields a different value, `superseded` gets the one it replaces (a
+    * stored table to drop, say).
     */
   private[graft] def memo[T](spark: SparkSession, kind: String, source: String)(
-      build: String => T): T = {
+      build: String => T, superseded: T => Unit = (_: T) => ()): T = {
     val fp = fingerprint(spark, source)
     val entry = sessions.synchronized {
       sessions.computeIfAbsent(spark, _ => new Entries())
@@ -50,8 +52,10 @@ object Tables {
     }
     entry.synchronized {
       if (entry.fingerprint != fp) {
+        val old = entry.value
         entry.value = build(fp)
         entry.fingerprint = fp
+        if (old != null && old != entry.value) superseded(old.asInstanceOf[T])
       }
       entry.value.asInstanceOf[T]
     }

@@ -46,10 +46,13 @@ object StorageOps {
     * warehouse DIRECTORY survives on disk — `saveAsTable` refuses that
     * orphan location (LOCATION_ALREADY_EXISTS; `overwrite` only drops
     * locations of tables the catalog knows), so delete it before building.
+    * A rebuild for a rewritten source drops the table it supersedes, with
+    * its location and any `<table>_*` sibling location, so each (session,
+    * dir, base) keeps one stored table.
     */
   private[ops] def ensure(spark: SparkSession, dir: String, source: String,
                           base: String)(build: String => Unit): String =
-    Tables.memo(spark, base, Tables.path(dir, source)) { fingerprint =>
+    Tables.memo(spark, base, Tables.path(dir, source))({ fingerprint =>
       // 64 hex bits of SHA-256, not String.hashCode: with a 31-bit name a
       // colliding (dir, fingerprint) pair would silently SERVE THE OTHER
       // CORPUS'S TABLE (tableExists short-circuits the build)
@@ -58,13 +61,22 @@ object StorageOps {
         .take(8).map("%02x".format(_)).mkString
       val tbl = base + "_" + digest
       if (!spark.catalog.tableExists(tbl)) {
-        val loc = new org.apache.hadoop.fs.Path(tableLocation(spark, tbl))
-        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
+        deleteLocations(spark, tbl)
         build(tbl)
       }
       tbl
-    }
+    }, { (old: String) =>
+      spark.sql(s"DROP TABLE IF EXISTS `$old`")
+      deleteLocations(spark, old)
+    })
+
+  /** Deletes `tbl`'s warehouse location and its `<tbl>_*` siblings. */
+  private def deleteLocations(spark: SparkSession, tbl: String): Unit = {
+    val loc = new org.apache.hadoop.fs.Path(tableLocation(spark, tbl))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (loc +: Option(fs.globStatus(loc.suffix("_*"))).toSeq.flatten.map(_.getPath))
+      .foreach(fs.delete(_, true))
+  }
 
   /** Orders ⋈ lineitem on the order key with BOTH sides bucketed (and
     * per-file sorted) on that key: the executed plan is a sort-merge join
@@ -249,12 +261,11 @@ object StorageOps {
       ev.filter(col("event_id") % 2 === 0)
         .select(col("event_id"), col("user_id"), col("value"))
         .write.format("parquet").mode("overwrite").saveAsTable(tbl)
-      val loc2 = new org.apache.hadoop.fs.Path(tableLocation(spark, tbl) + "_g2")
-      val fs = loc2.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc2)) fs.delete(loc2, true)
+      // ensure deleted any stale `<tbl>_g2` before this build
+      val loc2 = tableLocation(spark, tbl) + "_g2"
       ev.filter(col("event_id") % 2 === 1)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .write.parquet(loc2.toString)
+        .write.parquet(loc2)
     }
     val loc = tableLocation(spark, staged)
     spark.read.option("mergeSchema", "true").parquet(loc, loc + "_g2")

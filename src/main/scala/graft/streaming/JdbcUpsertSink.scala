@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.sql.DriverManager
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Idempotent JDBC key-upsert sink for `foreachBatch`
@@ -120,7 +122,8 @@ object JdbcUpsertSink {
     * (see [[mergeStatements]]); the
     * Portable dialect requires one row per key tuple per batch — a duplicate
     * violates the target's primary key mid-transaction and fails the batch
-    * (the transaction rolls back, so the target is untouched). Streaming
+    * (the transaction rolls back, so the target is untouched, and the
+    * staging table is dropped after the rollback). Streaming
     * update-mode aggregation output satisfies the precondition by
     * construction.
     */
@@ -157,6 +160,10 @@ object JdbcUpsertSink {
       } catch {
         case e: Throwable =>
           conn.rollback()
+          // the rollback also undid the merge's DROP of the staging table:
+          // drop it on its own, best effort, keeping the merge's failure
+          try { st.executeUpdate(s"DROP TABLE $staging"); conn.commit() }
+          catch { case NonFatal(d) => e.addSuppressed(d) }
           throw e // fail the streaming query like the reference (processor.py:170-172)
       } finally st.close()
     } finally conn.close()

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{GraftSession, SparkEntry}
+import graft.BenchLogic.Compiles
 
 /** Builder-side probe over registered queries, on the session Bench and
   * Verify use (`GraftSession.local`, cores from `$SPARK_GRAFT_CPUS`). One
@@ -18,8 +19,9 @@ import graft.{GraftSession, SparkEntry}
   *    first execution in the JVM, which pays codegen, JIT and memoized
   *    index builds), then `rounds` ROUND-ROBIN passes — q1..qn, q1..qn, …
   *    — so each query's samples spread across the host's load cycle and
-  *    the MIN approximates the quiet-window cost. Prints cold, min, median
-  *    and every sample.
+  *    the MIN approximates the quiet-window cost. Prints cold, min, median,
+  *    the generated-code compiles of the round-robin passes (0 when they
+  *    all hit the codegen cache) and every sample.
   *  - `profile <sfDir> <query...>`: after a warm pass, splits one pass into
   *    construction (the op's Scala code, including its eager `Tables.ckpt`
   *    jobs) and the action, and prints where the wall-clock went per job
@@ -90,12 +92,17 @@ object Probe {
                    qs: Seq[String], out: String => Unit): Unit = {
     val cold = qs.map(q => q -> pass(spark, dir, q)).toMap
     val samples = qs.map(_ -> mutable.ArrayBuffer[Double]()).toMap
-    for (_ <- 1 to rounds; q <- qs) samples(q) += pass(spark, dir, q)
+    val compiles = mutable.Map[String, Long]().withDefaultValue(0L)
+    for (_ <- 1 to rounds; q <- qs) {
+      val (secs, c) = Compiles.during(pass(spark, dir, q))
+      samples(q) += secs
+      compiles(q) += c.count
+    }
     qs.foreach { q =>
       val s = samples(q)
       val sorted = s.sorted
       out(f"[time] $q%-24s cold ${cold(q)}%6.2f  min ${sorted.head}%6.2f  " +
-        f"median ${sorted(sorted.length / 2)}%6.2f  samples " +
+        f"median ${sorted(sorted.length / 2)}%6.2f  compiles ${compiles(q)}%d  samples " +
         s.map(x => f"$x%.2f").mkString(" "))
     }
   }

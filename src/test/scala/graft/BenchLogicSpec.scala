@@ -136,4 +136,23 @@ class BenchLogicSpec extends AnyFunSuite {
     // a null message stays readable
     assert(BenchLogic.describe(new RuntimeException()) == "java.lang.RuntimeException: null")
   }
+
+  test("a details entry carries its timed passes' compiles and still parses as a prior") {
+    import BenchLogic.Compiles
+    val passes = Seq(Compiles(3, 2500000L), Compiles(0, 0L), Compiles(1, 700L))
+    val sum = passes.foldLeft(Compiles.zero)(_ + _)
+    assert(sum == Compiles(4, 2500700L))
+    assert(Compiles(7, 9000L) - Compiles(4, 1000L) == Compiles(3, 8000L))
+    val entry = BenchLogic.detailsEntry("vwap", 0.12, 0.1, 0.2, Some(0.11),
+      Seq(0.1, 0.12, -1.0), sum, Some("java.lang.IllegalStateException: x"))
+    assert(entry == "\"vwap\":{\"median\":0.12,\"min\":0.1,\"max\":0.2," +
+      "\"remeasured\":0.11,\"samples\":[0.1,0.12,-1.0]," +
+      "\"codegen_compiles\":4,\"codegen_compile_ms\":2.501," +
+      "\"error\":\"java.lang.IllegalStateException: x\"}")
+    val file = "{" + entry + "," +
+      BenchLogic.detailsEntry("rsi_14", 0.3, 0.3, 0.3, None, Seq(0.3), Compiles.zero, None) + "}"
+    assert(file.contains("\"rsi_14\":{\"median\":0.3,\"min\":0.3,\"max\":0.3," +
+      "\"samples\":[0.3],\"codegen_compiles\":0,\"codegen_compile_ms\":0.0}"))
+    assert(BenchLogic.parsePriorMedians(file) == Map("vwap" -> 0.12, "rsi_14" -> 0.3))
+  }
 }

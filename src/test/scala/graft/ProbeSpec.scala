@@ -24,11 +24,13 @@ class ProbeSpec extends SparkSuite {
     assert(out.size == 2, out)
     out.zip(Seq(q, "count_rows")).foreach { case (line, name) =>
       val Re = (s"""\\[time\\] $name\\s+cold\\s+(\\S+)\\s+min\\s+(\\S+)\\s+""" +
-        """median\s+(\S+)\s+samples (\S+) (\S+)""").r
+        """median\s+(\S+)\s+compiles (\d+)\s+samples (\S+) (\S+)""").r
       line match {
-        case Re(cold, min, median, a, b) =>
+        case Re(cold, min, median, compiles, a, b) =>
           Seq(cold, min, median, a, b).foreach(x => assert(x.toDouble >= 0, line))
           assert(min.toDouble == math.min(a.toDouble, b.toDouble), line)
+          // the cold pass compiled every class the rounds need
+          assert(compiles == "0", line)
         case _ => fail(line)
       }
     }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions.col
 
 import graft.model.Tables
@@ -27,6 +28,27 @@ class TablesMemoSpec extends SparkSuite {
   private def rows(query: String, dir: String): Seq[String] =
     SparkEntry.queries(query)(spark, dir).collect().map(_.toString).sorted.toSeq
 
+  private def tableNames: Set[String] =
+    spark.catalog.listTables().collect().filterNot(_.isTemporary).map(_.name).toSet
+
+  private def location(table: String): java.nio.file.Path = Paths.get(
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).location)
+
+  /** Runs `body`, then drops every catalog table it stored over its temp
+    * dirs, with their warehouse locations and `<table>_*` siblings.
+    */
+  private def droppingNewTables[A](body: => A): A = {
+    val before = tableNames
+    try body
+    finally (tableNames -- before).foreach { t =>
+      val loc = location(t)
+      spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      Files.list(loc.getParent).iterator.asScala
+        .filter(_.getFileName.toString.startsWith(t + "_")).toSeq
+        .foreach(p => Files.walk(p).iterator.asScala.toSeq.reverse.foreach(Files.delete))
+    }
+  }
+
   test("Tables.table reads a table rewritten in the same session") {
     val dir = copyOf("embeddings")
     val source = spark.read.parquet(Tables.path(sf, "embeddings"))
@@ -37,21 +59,41 @@ class TablesMemoSpec extends SparkSuite {
   }
 
   test("ann_ivf and ann_ivfpq_indexed on a rewritten corpus equal a never-read copy") {
-    val rewritten = copyOf("embeddings")
-    // builds the reader, the IVF centroids, the PQ codebooks and the stored
-    // index from the original corpus
-    rows("ann_ivf", rewritten)
-    rows("ann_ivfpq_indexed", rewritten)
-    // a different corpus: every fifth vector dropped, the ten queries kept
-    val subset = spark.read.parquet(Tables.path(sf, "embeddings"))
-      .filter(col("vec_id") < 10 || col("vec_id") % 5 =!= 4)
-    subset.write.mode("overwrite").parquet(Tables.path(rewritten, "embeddings"))
-    val fresh = Files.createTempDirectory("memo_fresh").toString
-    subset.write.parquet(Tables.path(fresh, "embeddings"))
-    Seq("ann_ivf", "ann_ivfpq_indexed").foreach { q =>
-      val got = rows(q, rewritten)
-      assert(got.nonEmpty, q)
-      assert(got == rows(q, fresh), q)
+    droppingNewTables {
+      val rewritten = copyOf("embeddings")
+      // builds the reader, the IVF centroids, the PQ codebooks and the stored
+      // index from the original corpus
+      rows("ann_ivf", rewritten)
+      rows("ann_ivfpq_indexed", rewritten)
+      // a different corpus: every fifth vector dropped, the ten queries kept
+      val subset = spark.read.parquet(Tables.path(sf, "embeddings"))
+        .filter(col("vec_id") < 10 || col("vec_id") % 5 =!= 4)
+      subset.write.mode("overwrite").parquet(Tables.path(rewritten, "embeddings"))
+      val fresh = Files.createTempDirectory("memo_fresh").toString
+      subset.write.parquet(Tables.path(fresh, "embeddings"))
+      Seq("ann_ivf", "ann_ivfpq_indexed").foreach { q =>
+        val got = rows(q, rewritten)
+        assert(got.nonEmpty, q)
+        assert(got == rows(q, fresh), q)
+      }
+    }
+  }
+
+  test("ensure drops the stored table a rewritten source supersedes") {
+    droppingNewTables {
+      val dir = copyOf("events")
+      def evoTables = tableNames.filter(_.startsWith("graft_events_evo_"))
+      val before = evoTables
+      val original = rows("schema_evolution_scan", dir)
+      val Seq(old) = (evoTables -- before).toSeq
+      val oldLocs = Seq(location(old), Paths.get(location(old).toString + "_g2"))
+      oldLocs.foreach(l => assert(Files.isDirectory(l), l))
+      spark.read.parquet(Tables.path(sf, "events")).filter(col("event_id") % 3 =!= 0)
+        .write.mode("overwrite").parquet(Tables.path(dir, "events"))
+      assert(rows("schema_evolution_scan", dir) != original)
+      val now = evoTables -- before
+      assert(now.size == 1 && !now.contains(old), s"$old superseded, stored: $now")
+      oldLocs.foreach(l => assert(!Files.exists(l), s"$l left behind"))
     }
   }
 

@@ -179,6 +179,33 @@ class UpsertDialectSpec extends SparkSuite {
     assert(pg == Map("a" -> 1.0, "b" -> 5.0, "c" -> 7.0))
   }
 
+  test("a failed Portable merge leaves the target unchanged and drops its staging table") {
+    val url = "jdbc:derby:memory:graftFailedMerge;create=true"
+    val conn = DriverManager.getConnection(url)
+    try {
+      conn.createStatement().executeUpdate(
+        """CREATE TABLE t_fail ("k" VARCHAR(16) NOT NULL PRIMARY KEY, "v" INT)""")
+      import spark.implicits._
+      val sink = JdbcUpsertSink.upsert(url, "t_fail", Seq("k"))
+      sink(Seq(("a", 1), ("b", 2)).toDF("k", "v"), 0L)
+      def query(sql: String) = {
+        val rs = conn.createStatement().executeQuery(sql)
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (1 to r.getMetaData.getColumnCount).map(r.getString)).toList
+      }
+      def target = query("""SELECT "k", "v" FROM t_fail""").map(r => r(0) -> r(1).toInt).toMap
+      // "c" twice violates the primary key mid-merge: the batch fails whole
+      val e = intercept[java.sql.SQLException] {
+        sink(Seq(("b", 5), ("c", 7), ("c", 8)).toDF("k", "v"), 1L)
+      }
+      assert(e.getSuppressed.isEmpty, e.getSuppressed.toSeq)
+      assert(target == Map("a" -> 1, "b" -> 2))
+      val staging = query(
+        "SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLENAME LIKE 'T_FAIL_STAGING_%'")
+      assert(staging.isEmpty, s"staging tables left behind: $staging")
+    } finally conn.close()
+  }
+
   test("Portable dialect generates delete+insert+drop in key order") {
     val stmts = JdbcUpsertSink.mergeStatements(
       "t", "t_staging_0", Seq("k", "v"), Seq("k"), Dialect.Portable)
