@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Usage: Verify <sfDir> <outDir> [queryName ...] — with names given, only
@@ -20,9 +20,9 @@ object Verify {
     val only = args.drop(2).toSet
     val spark = GraftSession.local(GraftSession.envCores, "verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    println(s"[verify] registry=${SparkEntry.queries.size} " +
+    println(s"[verify] registry=${SparkEntry.registry.size} " +
       s"oracle-checked=${SparkEntry.oracleSql.size} " +
-      s"rows-only=${SparkEntry.queries.size - SparkEntry.oracleSql.size}")
+      s"rows-only=${SparkEntry.registry.count(_.oracle.isInstanceOf[SparkEntry.RowsOnly])}")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

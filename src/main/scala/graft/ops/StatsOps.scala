@@ -123,8 +123,8 @@ object StatsOps {
   /** Market-basket co-occurrence: part pairs appearing in the same order at
     * least twice, strongest first — the association-rule primitive. The
     * self-join fan-out is per-ORDER pair expansion, bounded by basket size
-    * squared (≤13² on this corpus, small constant at any corpus scale), not
-    * corpus squared; the shuffle carries (orderkey, partkey) ids, the pair
+    * squared (baskets of ≤17 parts at sf0.1, growing with SF — FIXTURES.md),
+    * not corpus squared; the shuffle carries (orderkey, partkey) ids, the pair
     * aggregation is hash-partial, and the global top-100 compiles to
     * TakeOrderedAndProject. `part_a < part_b` orients pairs so each
     * unordered pair counts once.
@@ -1034,8 +1034,10 @@ object StatsOps {
     // exchange itself, sized by AQE at any scale. Interleaved A/B/C
     // (OPTIMIZATION_r17.md, "copurchaseEdges"): self-join 2.00 s,
     // self-join+balanced 1.43 s, set+explode 1.24 s, with exceptAll-proven identical output. Per-order
-    // sets are basket-bounded (≤7 items at any SF), so collect_set state
-    // and pair fan-out per group are O(1) — no giant-key hazard.
+    // sets are NOT bounded by a constant: distinct l_partkey per order
+    // peaks at 11 / 13 / 17 at sf0.001 / 0.01 / 0.1 and grows with SF, so
+    // one order's pair fan-out k(k−1)/2 reaches 136 at sf0.1 (FIXTURES.md).
+    // No clamp: dropping items would change oracle-checked output.
     // r18 (guide §2.5): keyed balance — at skinny local split counts the
     // agg's own exchange is AQE-coalesced by BYTES (5 MB → 4 partitions),
     // serializing the explode+distinct stage on a 32-core box; a pinned

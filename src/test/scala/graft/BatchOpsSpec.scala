@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import scala.util.Random
 
+import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.functions._
 
 import graft.streaming.OhlcvStream
@@ -15,12 +16,32 @@ class BatchOpsSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** Queries whose optimized plan holds a window with no PARTITION BY:
+    * every row of such a window runs through one task. The walk sees the
+    * plan each build returns, not windows inside sub-frames that
+    * `Tables.ckpt` checkpointed eagerly while the frame was built.
+    */
+  private val UnpartitionedWindows = Set("cv_folds", "decile_drift",
+    "dp_topk", "ks_test", "link_prediction", "mannwhitney_u", "pareto_front",
+    "pr_curve", "revenue_concentration", "roc_auc", "source_mix",
+    "survival_curve", "t_closeness", "top_paths", "wow_growth")
+
   test("every registered query executes at sf0.001") {
+    // noop write, not count(): count() prunes every column it does not
+    // need, so a throwing projection would go unevaluated
+    val unpartitioned = Set.newBuilder[String]
     val failures = SparkEntry.queries.flatMap { case (name, fn) =>
-      try { fn(spark, sf).count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+      try {
+        val df = fn(spark, sf)
+        df.write.mode("overwrite").format("noop").save()
+        if (df.queryExecution.optimizedPlan.collectWithSubqueries {
+              case w: Window if w.partitionSpec.isEmpty => w
+            }.nonEmpty) unpartitioned += name
+        None
+      } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+    assert(unpartitioned.result() == UnpartitionedWindows)
   }
 
   test("flagship entry returns rows") {
@@ -35,9 +56,19 @@ class BatchOpsSpec extends SparkSuite {
     }
   }
 
-  test("every oracleSql key has a registered query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("registry names are unique and exactly the pinned queries are rows-only") {
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
+    val rowsOnly = SparkEntry.registry.collect {
+      case SparkEntry.QuerySpec(name, _, _: SparkEntry.RowsOnly) => name
+    }.toSet
+    assert(rowsOnly == Set("ann_index_upsert", "ann_ivf", "ann_ivfpq",
+      "ann_ivfpq_indexed", "ann_lsh", "ann_pq", "ann_recall_curve",
+      "approx_distinct", "approx_percentiles", "audio_fingerprint",
+      "compression_ratio", "containment_lsh", "dedup_clusters_lsh",
+      "embed_neardup", "hll_overlap", "hll_partial_union", "kll_partial_union",
+      "lsh_tuning_curve", "media_phash_dedup", "minhash_neardup",
+      "quality_classifier", "semdedup", "simhash", "simhash_neardup",
+      "unigram_train"))
   }
 
   test("OHLCV invariants hold on randomized trades") {
