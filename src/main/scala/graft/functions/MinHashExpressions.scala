@@ -351,12 +351,13 @@ object CharNgrams3 {
   * array of shingle STRINGS through three interpreted lambda trees and a
   * string-equality array_distinct — measured ~3.6 s of a 4.4 s
   * contamination run at sf0.1, the engine's single most expensive
-  * remaining expression. This is one linear byte walk: because `split`
-  * keeps empty tokens and `concat_ws(' ', …)` re-joins with the same
-  * single-space separators the splitter consumed, shingle i's text is
-  * EXACTLY the trimmed input's bytes from the start of word i to the end
-  * of word i+2 — so each hash reads the original byte range in place and
-  * no shingle string is ever allocated.
+  * remaining expression. This is [[WordWindowHashes]]' linear byte walk at
+  * width 3 followed by an in-order dedup: because `split` keeps empty
+  * tokens and `concat_ws(' ', …)` re-joins with the same single-space
+  * separators the splitter consumed, shingle i's text is EXACTLY the
+  * trimmed input's bytes from the start of word i to the end of word i+2
+  * — so each hash reads the original byte range in place and no shingle
+  * string is ever allocated.
   */
 case class Word3GramHashes(child: Expression) extends UnaryExpression {
 
@@ -382,42 +383,13 @@ case class Word3GramHashes(child: Expression) extends UnaryExpression {
 }
 
 object Word3GramHashes {
-  private val Empty = new GenericArrayData(new Array[Long](0))
-
+  /** [[WordWindowHashes.hashes]] at width 3, keeping each hash's first
+    * occurrence in order.
+    */
   def hashes(s: org.apache.spark.unsafe.types.UTF8String): GenericArrayData = {
-    // UTF8String.trim() strips exactly the 0x20 runs SQL trim() strips.
-    val bytes = s.trim().getBytes
-    val len = bytes.length
-    // split(_, " ") word boundaries: 0x20 never occurs inside a multi-byte
-    // UTF-8 sequence, so a byte scan is exact; empty tokens (consecutive
-    // spaces) are kept, matching split's limit=-1 semantics.
-    var nWords = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' ') nWords += 1; i += 1 }
-    if (len == 0 || nWords < 3) return Empty
-    val starts = new Array[Int](nWords)
-    val ends = new Array[Int](nWords)
-    var w = 0
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' ') { ends(w) = i; w += 1; starts(w) = i + 1 }
-      i += 1
-    }
-    ends(w) = len
-    val nSh = nWords - 2
-    val out = new Array[Long](nSh)
-    val seen = new java.util.HashSet[java.lang.Long](nSh * 2)
-    var k = 0
-    var g = 0
-    while (g < nSh) {
-      val off = starts(g)
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + off,
-        ends(g + 2) - off, 42L)
-      if (seen.add(h)) { out(k) = h; k += 1 }
-      g += 1
-    }
-    new GenericArrayData(if (k == nSh) out else java.util.Arrays.copyOf(out, k))
+    val all = WordWindowHashes.hashes(s, 3)
+    val distinct = all.array.distinct
+    if (distinct.length == all.array.length) all else new GenericArrayData(distinct)
   }
 }
 
@@ -432,8 +404,8 @@ object Word3GramHashes {
   *     i -> xxhash64(array_join(slice(w, i, W), ' ')))
   * }}}
   * for inputs with at least W words, and EMPTY for shorter inputs (the
-  * HOF sequence would reverse through offset 0 and abort). Unlike
-  * [[Word3GramHashes]] there is NO distinct — [[graft.ops.DedupOps
+  * HOF sequence would reverse through offset 0 and abort). There is NO
+  * distinct ([[Word3GramHashes]] adds it) — [[graft.ops.DedupOps
   * .exactSubstrSpans]] needs every offset, in order.
   *
   * Same 100 TB rationale as the 3-gram walk: `split` keeps empty tokens

@@ -352,50 +352,19 @@ object AggOps {
     * exact integer — cents and volume units sum losslessly through both
     * aggregation levels, open/close compose as min_by/max_by over the minute
     * key, and VWAP divides the exactly-summed trade value once at the end.
-    * The 5-minute bucket is `window(m, "5 minutes")` — FLOOR semantics,
-    * the same bucketing the streaming twin
-    * ([[graft.streaming.CandleLadder]]) gets from its chained window, so
-    * batch and backfill stay bit-identical even for pre-epoch timestamps
+    * The graph is [[graft.streaming.CandleLadder.rollup5min]], the
+    * streaming ladder, over the trades with `ts` as `trade_time`; in a
+    * batch plan its watermark is a no-op. Both buckets are `window` —
+    * FLOOR semantics, so even pre-epoch timestamps land in the right bucket
     * (an integer `div` would truncate toward zero there, putting a
     * 1969-12-31T23:58 minute in the wrong bucket). Two key-local shuffles
     * total. Bounds are TIMESTAMP-typed (`window_start`/`window_end`),
     * matching `ohlcv1min` and the reference mart row (init.sql:7-8) so the
     * 1-min→5-min ladder joins without casts.
     */
-  def ohlcv5minRollup(spark: SparkSession, dir: String): DataFrame = {
-    val minute = trades(spark, dir)
-      .select(
-        col("ts"), col("symbol"),
-        (col("price") * 100).cast(LongType).as("pc"),
-        col("quantity").cast(LongType).as("qty"))
-      .groupBy(date_trunc("minute", col("ts")).as("m"), col("symbol"))
-      .agg(
-        expr("min_by(pc, ts)").as("open_c"),
-        max(col("pc")).as("hi_c"),
-        min(col("pc")).as("lo_c"),
-        expr("max_by(pc, ts)").as("close_c"),
-        sum(col("qty")).as("vol"),
-        sum(col("pc") * col("qty")).as("tv"))
-    val vol5 = sum(col("vol"))
-    minute
-      .groupBy(window(col("m"), "5 minutes"), col("symbol"))
-      .agg(
-        (expr("min_by(open_c, m)").cast(DoubleType) / 100.0).as("open_price"),
-        (max(col("hi_c")).cast(DoubleType) / 100.0).as("high_price"),
-        (min(col("lo_c")).cast(DoubleType) / 100.0).as("low_price"),
-        (expr("max_by(close_c, m)").cast(DoubleType) / 100.0).as("close_price"),
-        vol5.as("total_volume"),
-        count(lit(1)).as("n_minutes"),
-        when(vol5 =!= 0L,
-          sum(col("tv")).cast(DoubleType) / vol5.cast(DoubleType) / 100.0)
-          .as("vwap"))
-      .select(
-        col("window.start").as("window_start"), col("symbol"),
-        col("open_price"), col("high_price"), col("low_price"),
-        col("close_price"), col("total_volume"), col("n_minutes"),
-        col("vwap"),
-        col("window.end").as("window_end"))
-  }
+  def ohlcv5minRollup(spark: SparkSession, dir: String): DataFrame =
+    graft.streaming.CandleLadder.rollup5min(
+      trades(spark, dir).withColumnRenamed("ts", "trade_time"))
 
   /** Lag-1 autocorrelation of minute closes per symbol (mean-reversion /
     * momentum signal). Pearson r over (close_t, close_{t−1}) pairs from

@@ -656,11 +656,14 @@ object DedupOps {
         |        / size(array_union(a.sh, b.sh)) >= 0.5
         |""".stripMargin)).createOrReplaceTempView("graft_docs_rcte_pairs")
     // spark.sql analyzes eagerly: the result holds the views' plans, so
-    // both views are dropped before it is returned
+    // both views are dropped before it is returned. The anchor names its
+    // second column itself: Spark materializes each recursion step as a
+    // LogicalRDD, and a step with two `doc_id` columns cannot have its
+    // output matched by name (it logs a WARN per step).
     val closure = spark.sql(
       """WITH RECURSIVE
         |walk(doc_id, lab) AS (
-        |  SELECT doc_id, doc_id FROM graft_docs_rcte
+        |  SELECT doc_id, doc_id AS lab FROM graft_docs_rcte
         |  UNION ALL
         |  SELECT w.doc_id, p.doc_a
         |  FROM walk w JOIN graft_docs_rcte_pairs p ON p.doc_b = w.lab)

@@ -7,9 +7,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 /** The multi-granularity candle ladder as ONE streaming query: 1-minute
   * OHLCV re-aggregated into 5-minute candles — two chained event-time
   * windowed aggregations (Spark 3.4+ `window(windowColumn, ...)`), the
-  * streaming twin of the batch [[graft.ops.AggOps.ohlcv5minRollup]] and the
   * topology the reference's single-aggregation processor
-  * (spark_processor/processor.py:78-101) cannot express.
+  * (spark_processor/processor.py:78-101) cannot express. The batch
+  * [[graft.ops.AggOps.ohlcv5minRollup]] runs this same graph over the
+  * stored trades.
   *
   * Semantics and scale:
   *  - One watermark governs BOTH stateful operators: 1-minute state drops
@@ -18,12 +19,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *    so the second stage's state and shuffle are minutes × symbols at any
   *    event rate. This is exactly the batch rollup's "coarser candles read
   *    the finer mart, never raw trades" law, enforced inside one query.
-  *  - Same exact-integer discipline as the batch twin: prices become cents
-  *    (long), volumes long; open/close compose as min_by/max_by over event
-  *    time then minute start; every intermediate sum is exact and the only
-  *    doubles are the final /100 projections and the VWAP division —
-  *    bit-identical to the batch operator on the same input (pinned by
-  *    CandleLadderSpec in both streaming and batch-backfill mode).
+  *  - Exact integers throughout: prices become cents (long), volumes
+  *    long; open/close compose as min_by/max_by over event time then
+  *    minute start; every intermediate sum is exact and the only doubles
+  *    are the final /100 projections and the VWAP division
+  *    (CandleLadderSpec pins streaming and batch-backfill mode).
   *  - Append output mode: a 5-minute candle is emitted exactly once, when
   *    the watermark passes its window end — the mart-feed contract (a
   *    downstream upsert sink needs no update churn).

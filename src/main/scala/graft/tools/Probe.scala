@@ -32,8 +32,9 @@ import graft.BenchLogic.Compiles
   *    pre-execution `explain("formatted")` text to `<dir>/<query>_<s>.txt`
   *    instead (the before/after evidence format of `plans/`).
   *
-  * Every pass is a NOOP WRITE, as in Bench: `count()` prunes every
-  * projection it doesn't need and would time map-only ops as bare scans.
+  * Every pass is [[pass]], the one Bench and ScaleProbe time too: a NOOP
+  * WRITE, because `count()` prunes every projection it doesn't need and
+  * would time map-only ops as bare scans.
   *
   * Usage: runMain graft.tools.Probe <mode> <sfDir> ...
   */
@@ -81,20 +82,24 @@ object Probe {
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** Seconds for one build-and-noop-write pass of registered query `q`. */
-  def pass(spark: SparkSession, dir: String, q: String): Double = {
+  /** One build-and-noop-write pass of registered query `q`: its seconds
+    * and the generated-code compiles made while it ran. Every measurement
+    * tool times its passes through here. Throws on failure, an unknown
+    * query included.
+    */
+  def pass(spark: SparkSession, dir: String, q: String): (Double, Compiles) = {
     val t0 = System.nanoTime
-    noop(query(spark, dir, q))
-    (System.nanoTime - t0) / 1e9
+    val (_, c) = Compiles.during(noop(query(spark, dir, q)))
+    ((System.nanoTime - t0) / 1e9, c)
   }
 
   private def time(spark: SparkSession, dir: String, rounds: Int,
                    qs: Seq[String], out: String => Unit): Unit = {
-    val cold = qs.map(q => q -> pass(spark, dir, q)).toMap
+    val cold = qs.map(q => q -> pass(spark, dir, q)._1).toMap
     val samples = qs.map(_ -> mutable.ArrayBuffer[Double]()).toMap
     val compiles = mutable.Map[String, Long]().withDefaultValue(0L)
     for (_ <- 1 to rounds; q <- qs) {
-      val (secs, c) = Compiles.during(pass(spark, dir, q))
+      val (secs, c) = pass(spark, dir, q)
       samples(q) += secs
       compiles(q) += c.count
     }
@@ -155,7 +160,7 @@ object Probe {
   private def profile(spark: SparkSession, dir: String, q: String,
                       out: String => Unit): Unit = {
     val sc = spark.sparkContext
-    noop(query(spark, dir, q)) // warm: codegen + JIT
+    pass(spark, dir, q) // warm: codegen + JIT
     val group = s"graft-probe-$q-${System.nanoTime}"
     val listener = new GroupListener(group)
     sc.addSparkListener(listener)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling-exponent probe for the super-linear operator band
@@ -65,7 +65,7 @@ object ScaleProbe {
 
     def time(op: String, dir: String): Double = {
       Probe.pass(spark, dir, op) // warm
-      Probe.pass(spark, dir, op)
+      Probe.pass(spark, dir, op)._1
     }
     if (deep) {
       println(f"${"op"}%-20s ${"sf0.1"}%8s ${"sf1x"}%8s ${"sf10x"}%9s  exp(0.1->1) exp(1->10)")
@@ -88,160 +88,101 @@ object ScaleProbe {
     spark.stop()
   }
 
+  /** Writes `n` copies of `src` to `<out>/<table>.parquet`: one cross join
+    * with `spark.range(n)` as `i`, copy `i`'s columns replaced by
+    * `remap(source, i)`. Idempotent: a table whose `_SUCCESS` exists is
+    * skipped, so `src` and `remap` (and the max-key scans they make) run
+    * only for a table not yet written.
+    */
+  private def replicate(spark: SparkSession, out: String, table: String, n: Int,
+      src: => DataFrame)(remap: (DataFrame, Column) => Seq[(String, Column)]): Unit =
+    if (!new java.io.File(s"$out/$table.parquet/_SUCCESS").exists()) {
+      val df = src
+      df.crossJoin(broadcast(spark.range(0, n).select(col("id").cast("int").as("i"))))
+        .withColumns(remap(df, col("i")).toMap)
+        .drop("i")
+        .write.mode("overwrite").parquet(s"$out/$table.parquet")
+    }
+
+  private def parquet(spark: SparkSession, dir: String, table: String): DataFrame =
+    spark.read.parquet(s"$dir/$table.parquet")
+
+  /** The maxima of long columns `cs` of `df`, in one scan. */
+  private def maxes(df: DataFrame, cs: String*): Seq[Long] = {
+    val r = df.agg(max(cs.head), cs.tail.map(c => max(c)): _*).head()
+    cs.indices.map(r.getLong)
+  }
+
+  /** Copy `i`'s `key`: offset by `i`·(`base` + 1), disjoint per copy. */
+  private def offset(key: String, i: Column, base: Long): (String, Column) =
+    key -> (col(key) + i * (base + 1))
+
   /** Derive an N× lineitem by disjoint per-copy key offsets (idempotent).
     * Only lineitem: the deep-probe ops (pagerank, triangle_count) read
     * nothing else.
     */
   def buildLineitemCopies(
-      spark: SparkSession, from: String, out: String, n: Int): Unit = {
-    if (new java.io.File(s"$out/lineitem.parquet/_SUCCESS").exists()) return
-    val copies = spark.range(0, n).select(col("id").cast("int").as("i"))
-    val l = spark.read.parquet(s"$from/lineitem.parquet")
-    val maxes = l.agg(
-      max("l_orderkey").as("mo"), max("l_partkey").as("mp"),
-      max("l_suppkey").as("ms")).head()
-    val (mo, mp, ms) = (maxes.getLong(0), maxes.getLong(1), maxes.getLong(2))
-    l.crossJoin(broadcast(copies))
-      .withColumn("l_orderkey", col("l_orderkey") + col("i") * (mo + 1))
-      .withColumn("l_partkey", col("l_partkey") + col("i") * (mp + 1))
-      .withColumn("l_suppkey", col("l_suppkey") + col("i") * (ms + 1))
-      .drop("i")
-      .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-  }
+      spark: SparkSession, from: String, out: String, n: Int): Unit =
+    replicate(spark, out, "lineitem", n, parquet(spark, from, "lineitem")) { (l, i) =>
+      val Seq(mo, mp, ms) = maxes(l, "l_orderkey", "l_partkey", "l_suppkey")
+      Seq(offset("l_orderkey", i, mo), offset("l_partkey", i, mp),
+        offset("l_suppkey", i, ms))
+    }
 
-  /** Derive an N× documents + embeddings corpus for the second decade of
-    * the text/vector ops (the r12 ndcg_eval deep probe) — same per-copy
-    * remappings as [[buildSf1]]: token-suffixed documents keep shingle
-    * universes disjoint across copies; rotated embeddings keep within-copy
-    * cosines identical (strides collide past dim copies — fine for a
-    * TIMING probe, ties break on vec_id).
+  /** Derive an N× documents + embeddings corpus (the sf1x corpus at n = 10;
+    * the r12 ndcg_eval deep probe at 100): token-suffixed documents keep
+    * shingle universes disjoint across copies; rotated embeddings keep
+    * within-copy cosines identical (strides collide past dim copies — fine
+    * for a TIMING probe, ties break on vec_id).
     */
   def buildCorpusCopies(
       spark: SparkSession, from: String, out: String, n: Int): Unit = {
-    val copies = spark.range(0, n).select(col("id").cast("int").as("i"))
-    if (!new java.io.File(s"$out/documents.parquet/_SUCCESS").exists()) {
-      val d = spark.read.parquet(s"$from/documents.parquet")
-      val maxDoc = d.agg(max("doc_id")).head().getLong(0)
-      d.crossJoin(broadcast(copies))
-        .withColumn("doc_id", col("doc_id") + col("i") * (maxDoc + 1))
-        .withColumn("text", array_join(
-          transform(split(trim(col("text")), " "),
-            t => concat(t, lit("_"), col("i"))), " "))
-        .withColumn("source", concat(col("source"), lit("_"), col("i")))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    replicate(spark, out, "documents", n, parquet(spark, from, "documents")) { (d, i) =>
+      Seq(offset("doc_id", i, maxes(d, "doc_id").head),
+        "text" -> array_join(
+          transform(split(trim(col("text")), " "), t => concat(t, lit("_"), i)), " "),
+        "source" -> concat(col("source"), lit("_"), i))
     }
-    if (!new java.io.File(s"$out/embeddings.parquet/_SUCCESS").exists()) {
-      val e = spark.read.parquet(s"$from/embeddings.parquet")
-      val maxVec = e.agg(max("vec_id")).head().getLong(0)
+    replicate(spark, out, "embeddings", n, parquet(spark, from, "embeddings")) { (e, i) =>
       val dim = e.select(size(col("embedding"))).head().getInt(0)
-      e.crossJoin(broadcast(copies))
-        .withColumn("vec_id", col("vec_id") + col("i") * (maxVec + 1))
-        .withColumn("embedding",
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => element_at(col("embedding"),
-              pmod(j + col("i") * lit(13), lit(dim)) + 1)))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+      Seq(offset("vec_id", i, maxes(e, "vec_id").head),
+        "embedding" -> transform(sequence(lit(0), lit(dim - 1)),
+          j => element_at(col("embedding"), pmod(j + i * lit(13), lit(dim)) + 1)))
     }
   }
 
-  /** Derive an N× events table for the second decade of the events-lane
-    * ops (r15: hilbert_key) — the same per-copy remapping as
-    * [[buildSf1]]'s events block: disjoint time epochs (+40 days per
-    * copy) and disjoint user/event ids, so sessions and layout-key
-    * domains scale honestly instead of multiplying concurrency.
+  /** Derive an N× events table (the sf1x events at n = 10; r15's
+    * hilbert_key deep probe at 100): per-copy TIME shift past the 30-day
+    * span (+40 days) and disjoint user/event ids, so sessions replicate as
+    * disjoint epochs and interval/sessionization outputs scale exactly N×
+    * (verbatim replication would multiply CONCURRENT users and square the
+    * overlap-pair output — a workload change, not a scale-up).
     */
   def buildEventsCopies(
-      spark: SparkSession, from: String, out: String, n: Int): Unit = {
-    if (new java.io.File(s"$out/events.parquet/_SUCCESS").exists()) return
-    val copies = spark.range(0, n).select(col("id").cast("int").as("i"))
-    val ev = graft.model.Tables.events(spark, from)
-    val maxes = ev.agg(max("user_id").as("mu"), max("event_id").as("me")).head()
-    val (mu, me) = (maxes.getLong(0), maxes.getLong(1))
-    ev.crossJoin(broadcast(copies))
-      .withColumn("ts", col("ts") + expr("make_interval(0, 0, 0, 40, 0, 0, 0) * i"))
-      .withColumn("user_id", col("user_id") + col("i") * (mu + 1))
-      .withColumn("event_id", col("event_id") + col("i") * (me + 1))
-      .drop("i")
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
-  }
+      spark: SparkSession, from: String, out: String, n: Int): Unit =
+    replicate(spark, out, "events", n, graft.model.Tables.events(spark, from)) { (ev, i) =>
+      val Seq(mu, me) = maxes(ev, "user_id", "event_id")
+      Seq("ts" -> (col("ts") + expr("make_interval(0, 0, 0, 40, 0, 0, 0) * i")),
+        offset("user_id", i, mu), offset("event_id", i, me))
+    }
 
   /** Derive the 10× corpus (idempotent: skips tables already written). */
   def buildSf1(spark: SparkSession, from: String, out: String): Unit = {
-    val copies = spark.range(0, 10).select(col("id").cast("int").as("i"))
-    def done(name: String) =
-      new java.io.File(s"$out/$name.parquet/_SUCCESS").exists()
-
-    if (!done("lineitem")) {
-      val l = spark.read.parquet(s"$from/lineitem.parquet")
-      val maxes = l.agg(
-        max("l_orderkey").as("mo"), max("l_partkey").as("mp"),
-        max("l_suppkey").as("ms")).head()
-      val (mo, mp, ms) = (maxes.getLong(0), maxes.getLong(1), maxes.getLong(2))
-      l.crossJoin(broadcast(copies))
-        .withColumn("l_orderkey", col("l_orderkey") + col("i") * (mo + 1))
-        .withColumn("l_partkey", col("l_partkey") + col("i") * (mp + 1))
-        .withColumn("l_suppkey", col("l_suppkey") + col("i") * (ms + 1))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-    }
-    if (!done("documents")) {
-      val d = spark.read.parquet(s"$from/documents.parquet")
-      val maxDoc = d.agg(max("doc_id")).head().getLong(0)
-      d.crossJoin(broadcast(copies))
-        .withColumn("doc_id", col("doc_id") + col("i") * (maxDoc + 1))
-        .withColumn("text", array_join(
-          transform(split(trim(col("text")), " "),
-            t => concat(t, lit("_"), col("i"))), " "))
-        .withColumn("source", concat(col("source"), lit("_"), col("i")))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    }
-    if (!done("embeddings")) {
-      val e = spark.read.parquet(s"$from/embeddings.parquet")
-      val maxVec = e.agg(max("vec_id")).head().getLong(0)
-      val dim = e.select(size(col("embedding"))).head().getInt(0)
-      e.crossJoin(broadcast(copies))
-        .withColumn("vec_id", col("vec_id") + col("i") * (maxVec + 1))
-        .withColumn("embedding",
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => element_at(col("embedding"),
-              pmod(j + col("i") * lit(13), lit(dim)) + 1)))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    }
-    // per-copy TIME shift past the 30-day span (+40 days) and disjoint
-    // user/event ids: sessions replicate as disjoint epochs, so
-    // interval/sessionization outputs scale exactly 10× (verbatim
-    // replication would multiply CONCURRENT users and square the
-    // overlap-pair output — a workload change, not a scale-up). ONE
-    // remapping definition for both decades (buildEventsCopies).
+    buildLineitemCopies(spark, from, out, 10)
+    buildCorpusCopies(spark, from, out, 10)
     buildEventsCopies(spark, from, out, 10)
-    if (!done("orders")) {
-      // offsets MUST match the lineitem/customer replication bases so FK
-      // joins stay consistent across copies (fixture invariant: orders
-      // and lineitem share the same max orderkey)
-      val o = spark.read.parquet(s"$from/orders.parquet")
-      val maxO = o.agg(max("o_orderkey")).head().getLong(0)
-      val maxC = spark.read.parquet(s"$from/customer.parquet")
-        .agg(max("c_custkey")).head().getLong(0)
-      o.crossJoin(broadcast(copies))
-        .withColumn("o_orderkey", col("o_orderkey") + col("i") * (maxO + 1))
-        .withColumn("o_custkey", col("o_custkey") + col("i") * (maxC + 1))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/orders.parquet")
+    // offsets MUST match the lineitem/customer replication bases so FK
+    // joins stay consistent across copies (fixture invariant: orders and
+    // lineitem share the same max orderkey)
+    replicate(spark, out, "orders", 10, parquet(spark, from, "orders")) { (o, i) =>
+      Seq(offset("o_orderkey", i, maxes(o, "o_orderkey").head),
+        offset("o_custkey", i, maxes(parquet(spark, from, "customer"), "c_custkey").head))
     }
-    if (!done("customer")) {
-      // disjoint custkeys, SAME nation/segment: each quasi-identifier
-      // group grows 10× — the honest scale-up for governance censuses
-      // (offsetting nationkey would multiply groups, not rows-per-group)
-      val c = spark.read.parquet(s"$from/customer.parquet")
-      val maxC = c.agg(max("c_custkey")).head().getLong(0)
-      c.crossJoin(broadcast(copies))
-        .withColumn("c_custkey", col("c_custkey") + col("i") * (maxC + 1))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/customer.parquet")
+    // disjoint custkeys, SAME nation/segment: each quasi-identifier group
+    // grows 10× — the honest scale-up for governance censuses (offsetting
+    // nationkey would multiply groups, not rows-per-group)
+    replicate(spark, out, "customer", 10, parquet(spark, from, "customer")) { (c, i) =>
+      Seq(offset("c_custkey", i, maxes(c, "c_custkey").head))
     }
     // part/supplier must replicate with the SAME key offsets lineitem
     // used, or every part/supplier join degenerates to copy 0 and a
@@ -251,39 +192,25 @@ object ScaleProbe {
     // unchanged, so blocking keys keep their real cardinality and blocks
     // grow with the catalog — the honest scale-up.
     buildDimCopies(spark, from, out, 10)
-    // truly global dims (25 nations / 5 regions) stay read-through
+    // truly global dims (25 nations / 5 regions) stay read-through: one copy
     Seq("nation", "region").foreach { t =>
-      if (new java.io.File(s"$from/$t.parquet").exists() && !done(t))
-        spark.read.parquet(s"$from/$t.parquet")
-          .write.mode("overwrite").parquet(s"$out/$t.parquet")
+      if (new java.io.File(s"$from/$t.parquet").exists())
+        replicate(spark, out, t, 1, parquet(spark, from, t))((_, _) => Nil)
     }
   }
 
   /** Replicate part/supplier with key offsets matching lineitem's (base =
-    * lineitem's own max key — the offset buildLineitemCopies/buildSf1
-    * apply to l_partkey/l_suppkey), idempotent.
+    * lineitem's own max key — the offset buildLineitemCopies applies to
+    * l_partkey/l_suppkey), idempotent.
     */
   def buildDimCopies(
       spark: SparkSession, from: String, out: String, n: Int): Unit = {
-    val copies = spark.range(0, n).select(col("id").cast("int").as("i"))
-    def done(name: String) =
-      new java.io.File(s"$out/$name.parquet/_SUCCESS").exists()
-    val l = spark.read.parquet(s"$from/lineitem.parquet")
-    lazy val maxes = l.agg(
-      max("l_partkey").as("mp"), max("l_suppkey").as("ms")).head()
-    if (!done("part")) {
-      spark.read.parquet(s"$from/part.parquet")
-        .crossJoin(broadcast(copies))
-        .withColumn("p_partkey", col("p_partkey") + col("i") * (maxes.getLong(0) + 1))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/part.parquet")
+    val l = parquet(spark, from, "lineitem")
+    replicate(spark, out, "part", n, parquet(spark, from, "part")) { (_, i) =>
+      Seq(offset("p_partkey", i, maxes(l, "l_partkey").head))
     }
-    if (!done("supplier")) {
-      spark.read.parquet(s"$from/supplier.parquet")
-        .crossJoin(broadcast(copies))
-        .withColumn("s_suppkey", col("s_suppkey") + col("i") * (maxes.getLong(1) + 1))
-        .drop("i")
-        .write.mode("overwrite").parquet(s"$out/supplier.parquet")
+    replicate(spark, out, "supplier", n, parquet(spark, from, "supplier")) { (_, i) =>
+      Seq(offset("s_suppkey", i, maxes(l, "l_suppkey").head))
     }
   }
 }

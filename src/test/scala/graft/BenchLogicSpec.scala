@@ -6,9 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * phantom class where ALL samples of a query are inflated by a sustained
   * load window — invisible to intra-run spread flags (r10: derived_mul at
   * 15.45/16.99/14.91 s vs a committed prior median of 0.32 s). No Spark
-  * session needed; the end-to-end path (sleep-injected query showing up in
-  * `regressed_vs_prev` on the real stdout line) is exercised via
-  * SPARK_GRAFT_BENCH_SLEEP in the round log / BASELINE.md.
+  * session needed; BenchSweepSpec runs the sweep itself.
   */
 class BenchLogicSpec extends AnyFunSuite {
 
@@ -76,18 +74,6 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(BenchLogic.spreadFlagged(Seq(0.0, 0.0, 0.0)))
   }
 
-  test("totalExclFlagged counts flagged queries at their min, keeps denominator") {
-    val med = Map("a" -> 10.0, "b" -> 2.0, "c" -> -1.0)
-    val mins = Map("a" -> 0.5, "b" -> 1.9, "c" -> -1.0)
-    // "a" flagged -> contributes its min 0.5; "b" unflagged -> median 2.0;
-    // "c" failed every pass -> excluded from both totals.
-    assert(BenchLogic.totalExclFlagged(med, mins, Set("a")) == 2.5)
-    // A flagged query whose min is ALSO the sentinel -1 contributes 0, not -1.
-    assert(BenchLogic.totalExclFlagged(Map("d" -> 3.0), Map("d" -> -1.0), Set("d")) == 0.0)
-    // No flags: plain sum of successful medians.
-    assert(BenchLogic.totalExclFlagged(med, mins, Set.empty) == 12.0)
-  }
-
   test("totalRemeasured substitutes the quiet-tail value, min fallback") {
     val med = Map("a" -> 10.0, "b" -> 2.0, "c" -> -1.0)
     val mins = Map("a" -> 0.5, "b" -> 1.9, "c" -> -1.0)
@@ -95,8 +81,7 @@ class BenchLogicSpec extends AnyFunSuite {
     // min 0.5); "b" unflagged -> median.
     assert(BenchLogic.totalRemeasured(med, mins, Map("a" -> 0.7),
       Set("a")) == 2.7)
-    // Flagged but the re-measure itself failed -> min fallback (the
-    // totalExclFlagged behavior).
+    // Flagged but the re-measure itself failed -> min fallback.
     assert(BenchLogic.totalRemeasured(med, mins, Map.empty, Set("a")) == 2.5)
     // A genuine regression re-measures slow and stays damning.
     assert(BenchLogic.totalRemeasured(med, mins, Map("a" -> 9.8),

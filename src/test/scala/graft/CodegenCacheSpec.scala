@@ -1,6 +1,6 @@
 package graft
 
-import graft.BenchLogic.Compiles
+import graft.tools.Probe
 
 /** Warm passes reuse Spark's generated classes: the codegen cache holds the
   * whole candle list, and a new session shares the task-side classes of the
@@ -15,25 +15,22 @@ class CodegenCacheSpec extends SparkSuite {
     "sliding_ohlcv", "session_window", "twap", "candle_patterns", "rsi_14",
     "bollinger_bands")
 
-  private def noop(s: org.apache.spark.sql.SparkSession, q: String): Unit =
-    SparkEntry.queries(q)(s, sf).write.format("noop").mode("overwrite").save()
-
   test("defaults size the codegen cache and share one task class loader") {
     assert(GraftSession.defaults("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(GraftSession.defaults("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("a warm round-robin pass over the candle queries compiles no class") {
-    candles.foreach(noop(spark, _))
-    val (_, measured) = Compiles.during(candles.foreach(noop(spark, _)))
+    candles.foreach(Probe.pass(spark, sf, _))
+    val measured = candles.map(Probe.pass(spark, sf, _)._2).reduce(_ + _)
     assert(measured.count == 0, s"${measured.count} classes compiled on the warm pass")
   }
 
   test("a new session reuses the classes another session compiled") {
     val q = "sliding_ohlcv"
-    noop(spark, q)
+    Probe.pass(spark, sf, q)
     val fresh = spark.newSession()
-    val (_, c) = Compiles.during(noop(fresh, q))
+    val (_, c) = Probe.pass(fresh, sf, q)
     assert(c.count == 0, s"${c.count} classes compiled in the new session")
   }
 }

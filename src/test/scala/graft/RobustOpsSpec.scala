@@ -394,4 +394,41 @@ class RobustOpsSpec extends SparkSuite {
     assert(plantedRows == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L,
       6L -> 6L, 7L -> 6L, 8L -> 8L))
   }
+
+  test("sql_recursive_closure materializes its recursion with distinct column names") {
+    // Spark warns from LogicalRDD when it cannot match a materialized
+    // recursion step's output columns by name between the step's logical
+    // and optimized plans, which an anchor selecting `doc_id` twice causes
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    import spark.implicits._
+    spark.sparkContext // started first: starting a session reconfigures logging
+    val name = "org.apache.spark.sql.execution.LogicalRDD"
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("rcte-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val capture = new LoggerConfig(name, Level.WARN, true)
+    capture.addAppender(appender, null, null)
+    ctx.getConfiguration.addLogger(name, capture)
+    ctx.updateLoggers()
+    try {
+      ctx.getLogger(name).warn("capture check")
+      assert(warned.contains("capture check"), warned)
+      warned.clear()
+      val planted = java.nio.file.Files.createTempDirectory("rcte_warn").toString
+      Seq[(Long, String)]((1L, "a b c d e"), (2L, "a b c d e f"), (3L, "x y z w"))
+        .toDF("doc_id", "text").write.parquet(s"$planted/documents.parquet")
+      Seq(sf, planted).foreach(graft.tools.Probe.pass(spark, _, "sql_recursive_closure"))
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(warned.isEmpty, warned)
+  }
 }
