@@ -9,9 +9,10 @@ import graft.tools.Probe
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Runs on [[GraftSession.local]]
   * with `$SPARK_GRAFT_CPUS` cores (default: all) — the shipped session
-  * defaults, as Verify and the specs run them; an untimed warmup pass absorbs
-  * JVM/codegen JIT so per-query numbers reflect steady-state. The warmup
-  * also absorbs the ann_* family's MEMOIZED index builds (ivfCentroids /
+  * defaults, as Verify and the specs run them; an untimed warmup pass right
+  * before each query's timed passes absorbs JVM/codegen JIT so per-query
+  * numbers reflect steady-state. The warmup also absorbs the ann_*
+  * family's MEMOIZED index builds (ivfCentroids /
   * pqCodebooks KMeans training, ≈9.4 s and ≈4.3 s cold at sf0.1 — see
   * BASELINE.md "r18 ivf index-build vs query-time split"): timed passes
   * measure query time against a built index, the way an ANN service is
@@ -239,7 +240,7 @@ object Bench {
     println(line)
   }
 
-  /** Times `names` at `sfDir` on `spark`: a warm pass, `n` timed passes per
+  /** Times `names` at `sfDir` on `spark`: a warm pass and `n` timed passes per
     * query, the re-measure of flagged queries and the drift probe. Writes
     * the per-query details to `detailsPath` and returns the stdout line.
     * The cross-run sentinel reads its prior medians from `priorPath`.
@@ -260,18 +261,20 @@ object Bench {
         (-1.0, Compiles.zero)
       }
     val qs = names.distinct
-    // Warm pass: run every query once untimed. First evaluation of a plan
-    // pays Janino codegen compile + JVM JIT of its expression trees —
-    // driver-side fixed costs independent of data volume (measured ~7 s on
-    // the heaviest expression trees vs <2 s steady-state). The timed passes
-    // then measure steady-state throughput, which is what scales with SF.
-    qs.foreach(pass)
+    // Every timed pass of a query — sweep, re-measure, drift probe — comes
+    // right after an untimed warm pass of the same query. The warm pass pays
+    // Janino codegen compile + JVM JIT of its expression trees — driver-side
+    // fixed costs independent of data volume (measured ~7 s on the heaviest
+    // expression trees vs <2 s steady-state) — and it must come RIGHT
+    // before: the 351 queries' classes overflow the 1000-entry codegen
+    // cache, so a query warmed earlier in the run recompiles when timed.
+    def warm(q: String): Unit = pass(q)
     // n timed passes per query (query-major so each query's samples are
     // back-to-back — comparable load conditions within a sample set), with
-    // each query's generated-code compiles over its timed passes (0 once
-    // the warm pass has filled the codegen cache).
+    // the generated-code compiles over its timed passes.
     val compiles = collection.mutable.Map[String, Compiles]()
     val samples: Map[String, Seq[Double]] = qs.map { name =>
+      warm(name)
       name -> (1 to n).map { _ =>
         val (secs, c) = pass(name)
         compiles(name) = compiles.getOrElse(name, Compiles.zero) + c
@@ -334,7 +337,7 @@ object Bench {
     // needed manual same-commit cross-referencing of the flags; this bakes
     // that step into the run). Bounded by n_flagged.
     val reMeasured: Seq[(String, Double)] =
-      flaggedSet.toSeq.sorted.map(q => q -> pass(q)._1).filter(_._2 >= 0)
+      flaggedSet.toSeq.sorted.map { q => warm(q); q -> pass(q)._1 }.filter(_._2 >= 0)
     val reMeasMap = reMeasured.toMap
     // capped at the 10 slowest re-measures (the damning ones) so a fully
     // noisy run can't push the summary line past the capture window; the
@@ -354,9 +357,10 @@ object Bench {
     // the probe) shows up as a ratio far from 1.
     val probeName = "ohlcv_1min"
     val drift: Option[(Double, Double)] =
-      med.get(probeName).filter(_ > 0).flatMap { warm =>
+      med.get(probeName).filter(_ > 0).flatMap { swept =>
+        warm(probeName)
         val probe = pass(probeName)._1
-        if (probe < 0) None else Some((probe, probe / warm))
+        if (probe < 0) None else Some((probe, probe / swept))
       }
     // A failed probe (None) also reads non-canonical: the fixed probe
     // query breaking mid-run is itself disqualifying.

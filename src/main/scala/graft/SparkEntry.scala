@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.model.Tables
 import graft.ops._
 
 /** Driver contract — the engine's declared query surface (SURVEY.md §2).
@@ -163,6 +164,20 @@ object SparkEntry {
       |              p -> (p[1]-p[2])*(p[1]-p[2]))), c.cid) AS rn
       |        FROM e, c3 c) WHERE rn = 1)
       |""").stripMargin
+
+  /** The tables a [[sqlQuery]] text reads by name. */
+  private val TpchTables =
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
+
+  /** A SQL-surface query: one text is both the Spark build, run by
+    * [[Tables.sql]] over the TPC-H tables bound as temp views, and the
+    * DuckDB oracle — the check is Spark against DuckDB on the same SQL.
+    */
+  private def sqlQuery(name: String, text: String): QuerySpec =
+    QuerySpec(name,
+      (spark, dir) => Tables.sql(spark, text,
+        TpchTables.map(t => t -> Tables.table(spark, dir, t)): _*),
+      Sql(text))
 
   /** Declared after the shared SQL fragments above: an object's vals
     * initialise in order, and a fragment read before its own val has run
@@ -857,15 +872,19 @@ object SparkEntry {
     QuerySpec("cross_join_dims", RelationalOps.crossJoinDims, Sql(
       """SELECT r_regionkey, r_name, n_nationkey, n_name
         |FROM region CROSS JOIN nation""".stripMargin)),
-    QuerySpec("exists_subquery", RelationalOps.existsSubquery, Sql(
+    // Catalyst decorrelates the correlated EXISTS into a left semi join:
+    // no per-customer probe runs row-at-a-time.
+    sqlQuery("exists_subquery",
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > 300000)""".stripMargin)),
-    QuerySpec("not_in_subquery", RelationalOps.notInSubquery, Sql(
+        |                AND o.o_totalprice > 300000)""".stripMargin),
+    // NOT IN plans as a null-aware anti join: one NULL in the subquery
+    // result empties the output, which a plain anti join cannot express.
+    sqlQuery("not_in_subquery",
       """SELECT c_custkey, c_mktsegment FROM customer
         |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders
-        |                        WHERE o_totalprice > 400000)""".stripMargin)),
+        |                        WHERE o_totalprice > 400000)""".stripMargin),
     QuerySpec("part_revenue", RelationalOps.partRevenue, Sql(
       """WITH l AS (
         |  SELECT p_brand, p_type,
@@ -878,7 +897,9 @@ object SparkEntry {
         |                ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) * 100.0
         |    / CAST(sum(disc) AS DOUBLE) AS promo_share
         |FROM l GROUP BY 1""".stripMargin)),
-    QuerySpec("sql_q3", RelationalOps.sqlQ3, Sql(
+    // TPC-H Q3 (shipping priority): the SQL surface reaches the same
+    // Catalyst plan as the DataFrame form.
+    sqlQuery("sql_q3",
       """SELECT l_orderkey,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -891,8 +912,12 @@ object SparkEntry {
         |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin)),
-    QuerySpec("sql_q5", RelationalOps.sqlQ5, Sql(
+        |LIMIT 10""".stripMargin),
+    // TPC-H Q5 (local-supplier volume): a six-table join whose extra
+    // c_nationkey = s_nationkey equality makes it the join-order stress
+    // test. Every dimension is per-nation bounded and broadcasts; only
+    // orders ⋈ lineitem shuffles.
+    sqlQuery("sql_q5",
       """SELECT n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -907,8 +932,10 @@ object SparkEntry {
         |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin)),
-    QuerySpec("sql_q7", RelationalOps.sqlQ7, Sql(
+        |ORDER BY revenue DESC, n_name""".stripMargin),
+    // TPC-H Q7 (volume shipping): nation joined twice in two roles; the
+    // nation filters push into both broadcast sides before the fact join.
+    sqlQuery("sql_q7",
       """SELECT supp_nation, cust_nation, CAST(l_year AS INTEGER) AS l_year,
         |  CAST(sum(volume) AS DOUBLE) AS revenue,
         |  CAST(count(*) AS BIGINT) AS n_items
@@ -925,8 +952,11 @@ object SparkEntry {
         |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
         |  WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
         |     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |GROUP BY supp_nation, cust_nation, l_year""".stripMargin)),
-    QuerySpec("sql_q18", RelationalOps.sqlQ18, Sql(
+        |GROUP BY supp_nation, cust_nation, l_year""".stripMargin),
+    // TPC-H Q18 (large-volume customers): the HAVING-filtered lineitem
+    // aggregate runs once (~1% of orders survive) before the joins; the
+    // top-20 is TakeOrderedAndProject, never a global sort.
+    sqlQuery("sql_q18",
       """SELECT c_name, o_orderkey,
         |  CAST(o_totalprice AS DOUBLE) AS o_totalprice,
         |  CAST(t.total_qty AS DOUBLE) AS total_qty
@@ -938,8 +968,10 @@ object SparkEntry {
         |      HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250) t
         |  ON o_orderkey = t.l_orderkey
         |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 20""".stripMargin)),
-    QuerySpec("lateral_topn", RelationalOps.lateralTopn, Sql(
+        |LIMIT 20""".stripMargin),
+    // LATERAL ... ORDER BY/LIMIT 2 decorrelates into a window rank over one
+    // orders shuffle on o_custkey, not a per-customer re-execution.
+    sqlQuery("lateral_topn",
       """SELECT c.c_custkey, t.o_orderkey,
         |  CAST(t.o_totalprice AS DOUBLE) AS o_totalprice
         |FROM customer c,
@@ -947,12 +979,14 @@ object SparkEntry {
         |         FROM orders o
         |         WHERE o.o_custkey = c.c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey
-        |         LIMIT 2) t""".stripMargin)),
-    QuerySpec("scalar_subquery", RelationalOps.scalarSubquery, Sql(
+        |         LIMIT 2) t""".stripMargin),
+    // The correlated scalar subquery decorrelates into an aggregate + join:
+    // one shuffle pair, no per-row subquery execution.
+    sqlQuery("scalar_subquery",
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders o
         |WHERE o_totalprice > (SELECT avg(i.o_totalprice) FROM orders i
-        |                      WHERE i.o_custkey = o.o_custkey)""".stripMargin)),
+        |                      WHERE i.o_custkey = o.o_custkey)""".stripMargin),
     // ---- statistical / analytical surface (SURVEY §2.5) ----
     QuerySpec("stats_agg", StatsOps.statsAgg, Sql(
       """WITH t AS (
@@ -2154,7 +2188,11 @@ object SparkEntry {
         |  CAST(dur_us AS DOUBLE) / CAST(n_sessions AS DOUBLE) / 1000000.0
         |    AS avg_duration_sec
         |FROM tot""".stripMargin)),
-    QuerySpec("sql_q4", RelationalOps.sqlQ4, Sql(
+    // TPC-H Q4 (order-priority checking), adapted: no commit/receipt
+    // dates, so "late" = shipped >60 days after the order date. The
+    // correlated non-equi EXISTS decorrelates to one semi join carrying
+    // the residual.
+    sqlQuery("sql_q4",
       """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
         |FROM orders o
         |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -2163,8 +2201,10 @@ object SparkEntry {
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)),
-    QuerySpec("sql_q12", RelationalOps.sqlQ12, Sql(
+        |ORDER BY o_orderpriority""".stripMargin),
+    // TPC-H Q12 (shipping-priority split), adapted: grouped by
+    // l_returnflag (no l_shipmode). One joined scan, two CASE sums.
+    sqlQuery("sql_q12",
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -2175,8 +2215,12 @@ object SparkEntry {
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)),
-    QuerySpec("sql_q22", RelationalOps.sqlQ22, Sql(
+        |ORDER BY l_returnflag""".stripMargin),
+    // TPC-H Q22 (global-customer relationship), adapted: grouped by
+    // nation (no c_phone). The mean balance is an exact decimal sum /
+    // count with one IEEE division (a float avg sums in engine order),
+    // planned once; NOT EXISTS is an anti join.
+    sqlQuery("sql_q22",
       """SELECT c_nationkey,
         |  CAST(count(*) AS BIGINT) AS numcust,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
@@ -2186,24 +2230,34 @@ object SparkEntry {
         |                   FROM customer WHERE c_acctbal > 0.0)
         |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
         |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin)),
-    QuerySpec("sql_q13", RelationalOps.sqlQ13, Sql(
+        |ORDER BY c_nationkey""".stripMargin),
+    // TPC-H Q13 (order-count distribution), adapted: '5-LOW' orders are
+    // excluded in the outer join's ON clause (in WHERE, zero-order
+    // customers would vanish); count(o_orderkey) counts them as zero.
+    sqlQuery("sql_q13",
       """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
         |FROM (SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
         |      FROM customer LEFT OUTER JOIN orders
         |        ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
         |      GROUP BY c_custkey) c_orders
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
-    QuerySpec("sql_q17", RelationalOps.sqlQ17, Sql(
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    // TPC-H Q17 (small-quantity-order revenue): the mean is sum/count, not
+    // avg — l_quantity is integer-valued, so the sum is exact in double
+    // and row membership does not depend on partition order. The
+    // correlated subquery decorrelates to one per-part aggregate.
+    sqlQuery("sql_q17",
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
         |       / 7.0 AS avg_yearly
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE p_brand = 'Brand#23'
         |  AND l_quantity < (SELECT 0.2 * (sum(l_quantity) / count(*))
         |                    FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin)),
-    QuerySpec("sql_q19", RelationalOps.sqlQ19, Sql(
+        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin),
+    // TPC-H Q19 (discounted revenue): Catalyst extracts the
+    // p_partkey = l_partkey equi-key, keeps the OR-of-ANDs as the join
+    // residual and pushes each side's implied disjunction into its scan.
+    sqlQuery("sql_q19",
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -2212,8 +2266,11 @@ object SparkEntry {
         |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
         |       AND l_quantity >= 10 AND l_quantity <= 20)
         |   OR (p_brand = 'Brand#14' AND p_size BETWEEN 1 AND 35
-        |       AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin)),
-    QuerySpec("sql_q21", RelationalOps.sqlQ21, Sql(
+        |       AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin),
+    // TPC-H Q21 (suppliers who kept orders waiting), adapted: the fault
+    // marker is l_returnflag = 'R'. The EXISTS + NOT EXISTS stack plans
+    // as one semi and one anti join; the top-100 is TakeOrderedAndProject.
+    sqlQuery("sql_q21",
       """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
         |FROM supplier
         |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
@@ -2229,16 +2286,22 @@ object SparkEntry {
         |                    AND l3.l_returnflag = 'R')
         |GROUP BY s_name
         |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin)),
-    QuerySpec("sql_q6", RelationalOps.sqlQ6, Sql(
+        |LIMIT 100""".stripMargin),
+    // TPC-H Q6 (forecast revenue change): scan-local — every predicate
+    // pushes to the parquet scan; the discount band compares in
+    // DECIMAL(18,2), so membership is exact digit equality.
+    sqlQuery("sql_q6",
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |           * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND CAST(l_discount AS DECIMAL(18,2)) BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin)),
-    QuerySpec("sql_q8", RelationalOps.sqlQ8, Sql(
+        |  AND l_quantity < 24""".stripMargin),
+    // TPC-H Q8 (national market share): an 8-table snowflake whose two
+    // nation aliases broadcast; the share is two decimal-exact sums from
+    // one aggregate and one double division.
+    sqlQuery("sql_q8",
       """SELECT o_year,
         |  CAST(sum(CASE WHEN nation = 'NATION_3' THEN volume
         |                ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
@@ -2260,8 +2323,11 @@ object SparkEntry {
         |        AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
         |        AND p_type = 'PROMO') all_nations
         |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin)),
-    QuerySpec("sql_q10", RelationalOps.sqlQ10, Sql(
+        |ORDER BY o_year""".stripMargin),
+    // TPC-H Q10 (returned items), adapted to the fixture's customer
+    // columns. The revenue tie breaks on the unique c_custkey, so the
+    // top-20 SET is deterministic across engines, not just its order.
+    sqlQuery("sql_q10",
       """SELECT c_custkey, c_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
         |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -2275,8 +2341,10 @@ object SparkEntry {
         |  AND l_returnflag = 'R'
         |GROUP BY c_custkey, c_name, c_acctbal, n_name
         |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin)),
-    QuerySpec("sql_q14", RelationalOps.sqlQ14, Sql(
+        |LIMIT 20""".stripMargin),
+    // TPC-H Q14 (promotion effect): numerator and denominator come from
+    // one aggregate; `100 *` stays in decimal, then one double division.
+    sqlQuery("sql_q14",
       """SELECT CAST(100 * sum(CASE WHEN p_type = 'PROMO'
         |               THEN CAST(l_extendedprice AS DECIMAL(18,2))
         |                    * (1 - CAST(l_discount AS DECIMAL(18,2)))
@@ -2286,8 +2354,11 @@ object SparkEntry {
         |       AS promo_revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'""".stripMargin)),
-    QuerySpec("sql_q15", RelationalOps.sqlQ15, Sql(
+        |  AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'""".stripMargin),
+    // TPC-H Q15 (top supplier): the revenue CTE is referenced twice, and
+    // the max compares DECIMAL sums, so "equal to the maximum" is exact
+    // (double sums would make the answer partition-order dependent).
+    sqlQuery("sql_q15",
       """WITH revenue0 AS (
         |  SELECT l_suppkey AS supplier_no,
         |         sum(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -2300,8 +2371,12 @@ object SparkEntry {
         |FROM supplier
         |JOIN revenue0 ON s_suppkey = supplier_no
         |WHERE total_rev = (SELECT max(total_rev) FROM revenue0)
-        |ORDER BY s_suppkey""".stripMargin)),
-    QuerySpec("sql_q1", RelationalOps.sqlQ1, Sql(
+        |ORDER BY s_suppkey""".stripMargin),
+    // TPC-H Q1 (pricing summary): factors cast to DECIMAL(12,2), so the
+    // three-factor sum_charge lands at DECIMAL(38,6) without truncation
+    // ((18,2) factors would overflow 38 digits); avg_qty is an exact
+    // decimal sum / count with one IEEE division.
+    sqlQuery("sql_q1",
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
@@ -2319,7 +2394,7 @@ object SparkEntry {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
     QuerySpec("pit_features", RelationalOps.pitFeatures, Sql(
       """WITH labels AS (SELECT event_id, user_id, ts FROM events
         |               WHERE event_type = 'purchase'),
@@ -2361,7 +2436,11 @@ object SparkEntry {
         |    AS n_priority_changed
         |FROM base FULL OUTER JOIN next USING (k)
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
-    QuerySpec("sql_q2", RelationalOps.sqlQ2, Sql(
+    // TPC-H Q2 (minimum-cost supplier), adapted: no partsupp, so the
+    // catalog is derived from lineitem (min unit cost per part and
+    // supplier). The correlated min decorrelates to a grouped min joined
+    // back; min over doubles is order-insensitive.
+    sqlQuery("sql_q2",
       """WITH cost AS (
         |  SELECT l_partkey, l_suppkey,
         |         min(l_extendedprice / l_quantity) AS unit_cost
@@ -2379,8 +2458,11 @@ object SparkEntry {
         |                     AND s2.s_nationkey = n2.n_nationkey
         |                     AND n2.n_regionkey = r2.r_regionkey
         |                     AND r2.r_name = 'EUROPE')
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey""".stripMargin)),
-    QuerySpec("sql_q9", RelationalOps.sqlQ9, Sql(
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey""".stripMargin),
+    // TPC-H Q9 (product-type profit), adapted: no partsupp, so the supply
+    // cost is 60% of p_retailprice. (12,2) factors keep every
+    // intermediate inside DECIMAL(38,·), cast to DOUBLE once after the sum.
+    sqlQuery("sql_q9",
       """SELECT n_name AS nation,
         |  CAST(year(o_orderdate) AS INTEGER) AS o_year,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -2395,8 +2477,12 @@ object SparkEntry {
         |JOIN nation   ON s_nationkey = n_nationkey
         |WHERE p_name LIKE '%gear%'
         |GROUP BY n_name, year(o_orderdate)
-        |ORDER BY nation, o_year DESC""".stripMargin)),
-    QuerySpec("sql_q11", RelationalOps.sqlQ11, Sql(
+        |ORDER BY nation, o_year DESC""".stripMargin),
+    // TPC-H Q11 (important stock), adapted: lineitem plays partsupp. The
+    // grand total is one reused scalar subquery; the exact sums are cast
+    // to DOUBLE before the 1/1000 compare (×1000 on the DECIMAL(38,·) sum
+    // would overflow).
+    sqlQuery("sql_q11",
       """WITH sval AS (
         |  SELECT l_partkey,
         |         sum(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -2410,8 +2496,11 @@ object SparkEntry {
         |FROM sval
         |WHERE CAST(val AS DOUBLE)
         |      > CAST((SELECT sum(val) FROM sval) AS DOUBLE) / 1000
-        |ORDER BY part_value DESC, p_partkey""".stripMargin)),
-    QuerySpec("sql_q16", RelationalOps.sqlQ16, Sql(
+        |ORDER BY part_value DESC, p_partkey""".stripMargin),
+    // TPC-H Q16 (parts/supplier relationship), adapted: lineitem bridges
+    // part and supplier, and the exclusion list is the negative-balance
+    // suppliers. NOT IN over a non-null key plans as an anti join.
+    sqlQuery("sql_q16",
       """SELECT p_brand, p_type, p_size,
         |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
         |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -2419,8 +2508,11 @@ object SparkEntry {
         |  AND l_suppkey NOT IN
         |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
-    QuerySpec("sql_q20", RelationalOps.sqlQ20, Sql(
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    // TPC-H Q20 (potential part promotion), adapted: the availability
+    // threshold is a shipped-quantity floor over two years. Both IN
+    // levels plan as semi joins; the HAVING sum compares in DECIMAL.
+    sqlQuery("sql_q20",
       """SELECT s_name, s_acctbal
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |WHERE n_regionkey IN
@@ -2433,7 +2525,7 @@ object SparkEntry {
         |      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
         |    GROUP BY l_suppkey
         |    HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 50)
-        |ORDER BY s_name""".stripMargin)),
+        |ORDER BY s_name""".stripMargin),
     QuerySpec("semdedup", SimilarityOps.semDedup,
       RowsOnly("float cosine groups within trained cells")),
     QuerySpec("winsorize", StatsOps.winsorize, Sql(

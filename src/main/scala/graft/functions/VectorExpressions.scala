@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -119,9 +118,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Registration: either per-session ([[GraftFunctions.register]]) or via
-  * `spark.sql.extensions=graft.functions.GraftExtensions` at session build.
-  * After registration the functions resolve in SQL and `expr(...)`.
+/** The native functions, registered through
+  * `spark.sql.extensions=graft.functions.GraftExtensions` at session build
+  * (every `GraftSession` sets it); they resolve in SQL and `expr(...)`.
   */
 object GraftFunctions {
   /** Fixed-arity builder guard: a wrong-arity SQL call fails analysis with
@@ -213,16 +212,6 @@ object GraftFunctions {
                codebooks: Array[Array[Array[Double]]]): org.apache.spark.sql.Column =
     org.apache.spark.sql.GraftBridge.column(
       PqEncode(org.apache.spark.sql.GraftBridge.expression(child), codebooks))
-
-  /** Idempotent per-session registration, for a session built without
-    * [[GraftExtensions]]: names the registry already has are left alone.
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    fns.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
-    }
-  }
 }
 
 /** `spark.sql.extensions` entry point: native functions + the as-of join

@@ -152,6 +152,19 @@ object Tables {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint(true)
 
+  /** `spark.sql(text)` over `views` bound as temp views for the call only:
+    * the views are created, the text is analyzed (`spark.sql` analyzes
+    * eagerly, and runs a command such as INSERT), and the views are
+    * dropped in a `finally`. The result holds the views' plans, not their
+    * names, so nothing is left behind in the session catalog. The one
+    * place main code creates a temp view.
+    */
+  def sql(spark: SparkSession, text: String, views: (String, DataFrame)*): DataFrame = {
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    try spark.sql(text)
+    finally views.foreach { case (name, _) => spark.catalog.dropTempView(name) }
+  }
+
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
   def customer(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "customer")

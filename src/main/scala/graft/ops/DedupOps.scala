@@ -634,17 +634,16 @@ object DedupOps {
     * above any real near-dup chain.
     */
   def sqlRecursiveClosure(spark: SparkSession, dir: String): DataFrame = {
-    Tables.balanced(Tables.documents(spark, dir))
-      .createOrReplaceTempView("graft_docs_rcte")
+    val docs = "graft_docs_rcte" -> Tables.balanced(Tables.documents(spark, dir))
     // Pre-materialize the adjacent-pair near-dup edge list ONCE behind a
-    // checkpointed temp view: the recursive arm references the pair CTE at
+    // checkpointed view: the recursive arm references the pair CTE at
     // every unrolled step, and an inlined `p` re-ran the whole shingling +
     // Jaccard self-join per step (4 × ~0.35 s of the op's 2.5 s at sf0.1,
     // r17 profile — the §3.3 "materialize an intermediate to truncate the
     // plan" case). The edge definition is byte-identical SQL; the WALK —
     // the recursion this op exercises — stays a SQL-surface
     // WITH RECURSIVE, and the DuckDB oracle is unchanged.
-    Tables.ckpt(spark.sql(
+    val pairs = "graft_docs_rcte_pairs" -> Tables.ckpt(Tables.sql(spark,
       """WITH d AS (
         |  SELECT doc_id, array_distinct(transform(sequence(0, size(w) - 3),
         |           i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS sh
@@ -654,13 +653,11 @@ object DedupOps {
         |FROM d a JOIN d b ON b.doc_id = a.doc_id + 1
         |WHERE CAST(size(array_intersect(a.sh, b.sh)) AS DOUBLE)
         |        / size(array_union(a.sh, b.sh)) >= 0.5
-        |""".stripMargin)).createOrReplaceTempView("graft_docs_rcte_pairs")
-    // spark.sql analyzes eagerly: the result holds the views' plans, so
-    // both views are dropped before it is returned. The anchor names its
-    // second column itself: Spark materializes each recursion step as a
-    // LogicalRDD, and a step with two `doc_id` columns cannot have its
-    // output matched by name (it logs a WARN per step).
-    val closure = spark.sql(
+        |""".stripMargin, docs))
+    // The anchor names its second column itself: Spark materializes each
+    // recursion step as a LogicalRDD, and a step with two `doc_id` columns
+    // cannot have its output matched by name (it logs a WARN per step).
+    Tables.sql(spark,
       """WITH RECURSIVE
         |walk(doc_id, lab) AS (
         |  SELECT doc_id, doc_id AS lab FROM graft_docs_rcte
@@ -670,9 +667,7 @@ object DedupOps {
         |SELECT doc_id, cluster_id,
         |  CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
         |FROM (SELECT doc_id, min(lab) AS cluster_id FROM walk GROUP BY doc_id) t
-        |""".stripMargin)
-    Seq("graft_docs_rcte", "graft_docs_rcte_pairs").foreach(spark.catalog.dropTempView)
-    closure
+        |""".stripMargin, docs, pairs)
   }
 
   /** Incremental batch-vs-corpus dedup — the production ingest shape: a

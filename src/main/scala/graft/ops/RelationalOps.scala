@@ -7,7 +7,11 @@ import org.apache.spark.sql.types._
 import graft.model.Tables
 
 /** Relational batch surface (SURVEY §2.5): joins, window functions, sort /
-  * top-k, set ops, array functions, deduplication, as-of.
+  * top-k, set ops, array functions, deduplication, as-of — the DataFrame
+  * form. The SQL-surface queries (the TPC-H shapes `sql_q*`, the EXISTS /
+  * NOT IN / scalar subqueries and `lateral_topn`) have no op here: each is
+  * one `SparkEntry.sqlQuery` text that Spark runs through `Tables.sql` and
+  * DuckDB runs as the oracle.
   *
   * Scale notes, per operator family:
   *  - Equi-joins are declared, never hand-scheduled: Catalyst + AQE pick
@@ -263,45 +267,6 @@ object RelationalOps {
         expr("min_by(value, ts)").as("first_value"),
         count(lit(1)).as("n_dups"))
 
-  /** Correlated scalar subquery: orders above their customer's average
-    * order value. Catalyst decorrelates this into an aggregate + join — a
-    * single shuffle pair instead of a per-row subquery execution, which is
-    * the only shape that survives at scale.
-    */
-  def scalarSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders_sq")
-    spark.sql(
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(o_totalprice AS DOUBLE) AS o_totalprice
-        |FROM orders_sq o
-        |WHERE o_totalprice > (SELECT avg(i.o_totalprice) FROM orders_sq i
-        |                      WHERE i.o_custkey = o.o_custkey)""".stripMargin)
-  }
-
-  /** SQL entry point: the engine's surface is DataFrame AND SQL — same
-    * Catalyst plan either way. TPC-H Q3 shape (shipping priority) through
-    * `spark.sql` over temp views of the loaded tables.
-    */
-  def sqlQ3(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT l_orderkey,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  o_orderdate, o_orderpriority
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin)
-  }
-
   /** Fact ⋈ part dimension: revenue per brand, with the TPC-H Q14-style
     * promo share as a conditional aggregate. Declared equi-join — Catalyst
     * broadcasts part at small SF; at 100 TB part scales with SF so AQE
@@ -498,33 +463,6 @@ object RelationalOps {
         sum(dec2(col("l_extendedprice"))).cast(DoubleType).as("revenue"))
   }
 
-  /** Correlated EXISTS subquery — Catalyst decorrelates it into a left
-    * semi join, so the "per-customer probe" the SQL describes never
-    * executes row-at-a-time.
-    */
-  def existsSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND o.o_totalprice > 300000)""".stripMargin)
-  }
-
-  /** NOT IN subquery — plans as a null-aware anti join (NAAJ), the join
-    * variant with three-valued-logic semantics a plain anti join cannot
-    * express: one NULL in the subquery result empties the output.
-    */
-  def notInSubquery(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders
-        |                        WHERE o_totalprice > 400000)""".stripMargin)
-  }
-
   /** Explicit cross join of the two bounded dimensions — the one join type
     * that is ONLY safe when a side is provably tiny; both sides broadcast-
     * sized here (reference has no joins at all; SURVEY §2.5).
@@ -580,42 +518,6 @@ object RelationalOps {
         lead(col("value"), 1).over(ord).as("next_value"))
   }
 
-  /** TPC-H Q5 shape (local-supplier volume): a six-table join — two fact
-    * tables and four dimensions — with the extra non-join equality
-    * c_nationkey = s_nationkey that makes Q5 the classic join-order
-    * stress test. Declared as one SQL block: Catalyst reorders, pushes
-    * the region/date filters into the dim/fact scans, and broadcasts
-    * every dimension (region/nation/supplier/customer are per-nation
-    * bounded — they stay broadcastable at ANY corpus scale; only
-    * orders ⋈ lineitem shuffles, and AQE turns it into SMJ at 100 TB).
-    * Revenue aggregates in DECIMAL (exact, order-independent) and exits
-    * as DOUBLE.
-    */
-  def sqlQ5(spark: SparkSession, dir: String): DataFrame = {
-    Tables.region(spark, dir).createOrReplaceTempView("region")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT n_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM customer
-        |JOIN orders   ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation   ON s_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin)
-  }
-
   /** Null-safe equi-join (`<=>` / IS NOT DISTINCT FROM): two aggregates of
     * the event stream keyed by a NULLABLE derived key (error events map to
     * NULL) joined so the NULL groups MATCH — a plain `=` would silently
@@ -634,89 +536,6 @@ object RelationalOps {
       .select(
         coalesce(col("k"), lit("(error)")).as("event_key"),
         col("n_events"), col("sum_value"))
-  }
-
-  /** TPC-H Q7 shape (volume shipping): bilateral trade between two named
-    * nations by ship year — the two-role dimension pattern, nation joined
-    * TWICE under different aliases (supplier's nation vs customer's
-    * nation) with a symmetric pair predicate. The nation filters push into
-    * both broadcast sides BEFORE the fact join, so only lineitems of the
-    * two nations' suppliers/customers survive into the shuffle; year comes
-    * from the shipdate, not a calendar table.
-    */
-  def sqlQ7(spark: SparkSession, dir: String): DataFrame = {
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT supp_nation, cust_nation, l_year,
-        |  CAST(sum(volume) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM (
-        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |    year(l_shipdate) AS l_year,
-        |    CAST(l_extendedprice AS DECIMAL(18,2))
-        |      * (1 - CAST(l_discount AS DECIMAL(18,2))) AS volume
-        |  FROM supplier
-        |  JOIN lineitem ON s_suppkey = l_suppkey
-        |  JOIN orders   ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |GROUP BY supp_nation, cust_nation, l_year""".stripMargin)
-  }
-
-  /** TPC-H Q18 shape (large-volume customers): a HAVING-filtered
-    * aggregation subquery driving the join — the orders that pass the
-    * quantity threshold are found FIRST (one partial-aggregated pass over
-    * lineitem, ~1% survive), and only those survivors join to orders/customer.
-    * Catalyst evaluates the derived table once (no correlated re-scan);
-    * the top-20 is TakeOrderedAndProject, never a global sort. Quantity
-    * sums aggregate in DECIMAL and exit as DOUBLE.
-    */
-  def sqlQ18(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT c_name, o_orderkey,
-        |  CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-        |  CAST(t.total_qty AS DOUBLE) AS total_qty
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN (SELECT l_orderkey,
-        |        sum(CAST(l_quantity AS DECIMAL(18,2))) AS total_qty
-        |      FROM lineitem GROUP BY l_orderkey
-        |      HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250) t
-        |  ON o_orderkey = t.l_orderkey
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 20""".stripMargin)
-  }
-
-  /** Correlated LATERAL join (SQL:1999 lateral derived table, Spark ≥ 3.4):
-    * each customer's top-2 orders by price. Catalyst decorrelates the
-    * LATERAL ... ORDER BY/LIMIT 2 subquery into a window rank over one
-    * orders shuffle — NOT a per-customer re-execution — so the plan is the
-    * same shape as a hand-written rank filter and scales with one exchange
-    * on o_custkey. The per-driver alternative (a loop over customers) is
-    * exactly what LATERAL exists to avoid.
-    */
-  def lateralTopn(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT c.c_custkey, t.o_orderkey,
-        |       CAST(t.o_totalprice AS DOUBLE) AS o_totalprice
-        |FROM customer c,
-        |LATERAL (SELECT o_orderkey, o_totalprice
-        |         FROM orders o
-        |         WHERE o.o_custkey = c.c_custkey
-        |         ORDER BY o_totalprice DESC, o_orderkey
-        |         LIMIT 2) t""".stripMargin)
   }
 
   /** Batch MERGE (SCD-1 key upsert): apply a change set to a base table —
@@ -744,331 +563,6 @@ object RelationalOps {
         col("o_orderkey"),
         coalesce(col("c_totalprice"), col("o_totalprice")).as("o_totalprice"),
         coalesce(col("c_orderpriority"), col("o_orderpriority")).as("o_orderpriority"))
-  }
-
-  /** TPC-H Q4 shape (order-priority checking), adapted to the corpus
-    * schema (no l_commitdate/receiptdate: "late" = shipped >60 days after
-    * order date). The defining feature is the correlated EXISTS whose
-    * predicate references BOTH the correlation key and an outer column in
-    * a non-equi comparison — Catalyst decorrelates it to one left-semi
-    * join carrying the l_shipdate > o_orderdate + 60d residual condition;
-    * no per-row subquery re-execution, one fact shuffle.
-    */
-  def sqlQ4(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin)
-  }
-
-  /** TPC-H Q12 shape (shipping-priority split), adapted (no l_shipmode:
-    * grouped by l_returnflag; "late" as in [[sqlQ4]]). The shape: a
-    * fact-fact equi-join where BOTH aggregates are conditional on the
-    * dimension-side priority — one joined scan, two CASE sums, zero extra
-    * passes.
-    */
-  def sqlQ12(spark: SparkSession, dir: String): DataFrame = {
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin)
-  }
-
-  /** TPC-H Q22 shape (global-customer relationship), adapted (no c_phone:
-    * grouped by nation). Two decorrelation shapes in one query: an
-    * uncorrelated SCALAR subquery (the global above-zero mean balance —
-    * computed as exact decimal sum / count with ONE IEEE division, not a
-    * float avg whose summation order differs per engine) feeding a filter,
-    * plus a NOT EXISTS anti-join against orders. Catalyst plans the scalar
-    * once (subquery broadcast), the anti join as one hash exchange.
-    */
-  def sqlQ22(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT c_nationkey,
-        |  CAST(count(*) AS BIGINT) AS numcust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer c
-        |WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-        |                          / count(*)
-        |                   FROM customer WHERE c_acctbal > 0.0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |GROUP BY c_nationkey
-        |ORDER BY c_nationkey""".stripMargin)
-  }
-
-  /** TPC-H Q13 shape (customer order-count distribution), adapted (no
-    * o_comment: the join-side filter excludes '5-LOW' priority orders). Two
-    * defining features: the filter lives in the OUTER JOIN's ON clause —
-    * push it to WHERE and zero-order customers silently vanish — and the
-    * aggregation is two-level (per-customer order count, then a histogram
-    * of those counts). One outer-join shuffle on the customer key, one
-    * tiny re-aggregation on the count; `count(o_orderkey)` (not `*`)
-    * makes the null-extended rows count as zero in both engines.
-    */
-  def sqlQ13(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    spark.sql(
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM (SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-        |      FROM customer LEFT OUTER JOIN orders
-        |        ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-        |      GROUP BY c_custkey) c_orders
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin)
-  }
-
-  /** TPC-H Q17 shape (small-quantity-order revenue). The defining feature
-    * is the correlated SCALAR AVG subquery over the same fact — Catalyst
-    * decorrelates it to one per-part aggregate joined back to the
-    * filtered scan, not a per-row re-execution. The mean is written as
-    * sum/count, not `avg`: l_quantity is integer-valued, so the sum is
-    * EXACT in double regardless of partition order and the one division
-    * is reproducible across engines — a float `avg` fed into a filter
-    * comparison would make row membership itself order-dependent.
-    * Revenue sum is decimal-exact, one cast to DOUBLE, one /7.0.
-    */
-  def sqlQ17(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    spark.sql(
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |       / 7.0 AS avg_yearly
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#23'
-        |  AND l_quantity < (SELECT 0.2 * (sum(l_quantity) / count(*))
-        |                    FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin)
-  }
-
-  /** TPC-H Q19 shape (discounted-revenue, disjunctive predicate). The
-    * defining feature is the OR-of-ANDs residual spanning BOTH join sides:
-    * Catalyst extracts the common `p_partkey = l_partkey` equi-key, keeps
-    * the disjunction as the join residual, and pushes the per-side
-    * implied disjunctions (brand set, quantity envelope) down to each
-    * scan — the broadcast-hash join never sees rows no branch could
-    * accept. Revenue is the house decimal-exact pattern.
-    */
-  def sqlQ19(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    spark.sql(
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity >= 1 AND l_quantity <= 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-        |       AND l_quantity >= 10 AND l_quantity <= 20)
-        |   OR (p_brand = 'Brand#14' AND p_size BETWEEN 1 AND 35
-        |       AND l_quantity >= 20 AND l_quantity <= 30)""".stripMargin)
-  }
-
-  /** TPC-H Q21 shape (suppliers who kept orders waiting), adapted (no
-    * l_commitdate/receiptdate: the fault marker is `l_returnflag = 'R'`).
-    * The defining feature is the EXISTS + NOT EXISTS STACK over the same
-    * fact: "another supplier contributed to the order" (semi join) AND
-    * "no OTHER supplier's line was returned" (anti join) — three aliases
-    * of lineitem resolved as one scan + two orderkey-keyed joins carrying
-    * the suppkey-inequality residual, never a per-row subquery. Dim joins
-    * (supplier, 'F'-status orders) broadcast; final top-100 compiles to
-    * TakeOrderedAndProject.
-    */
-  def sqlQ21(spark: SparkSession, dir: String): DataFrame = {
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM supplier
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |WHERE o_orderstatus = 'F'
-        |  AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin)
-  }
-
-  /** TPC-H Q6 shape (forecast revenue change). The whole query is a
-    * scan-local reduction: every predicate (shipdate year, discount band,
-    * quantity cap) pushes to the parquet scan as `PushedFilters`, the
-    * projection prunes to three columns, and the aggregate is a two-stage
-    * partial sum — zero shuffles beyond the single-row final exchange. At
-    * 100 TB this is the canonical "scan speed is the only cost" query;
-    * anything in the plan besides scan+partial-agg would be a bug. The
-    * discount band compares in DECIMAL(18,2) so band membership is exact
-    * digit equality, not an IEEE epsilon question.
-    */
-  def sqlQ6(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND CAST(l_discount AS DECIMAL(18,2)) BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin)
-  }
-
-  /** TPC-H Q8 shape (national market share). The defining feature is the
-    * 8-table snowflake — fact lineitem joined to part/supplier/orders/
-    * customer plus nation TWICE (customer's nation restricts the market
-    * region; supplier's nation labels the share) and region. Catalyst
-    * resolves the two `nation` aliases as two broadcast joins of the same
-    * 25-row dim, and the selective `p_type`/`r_name` dims filter BEFORE
-    * the fact join so the big probe side shrinks first. The share is two
-    * decimal-exact sums per year with one final double division —
-    * numerator conditional on the supplier nation, denominator
-    * unconditional, both from the same grouped aggregate (one pass).
-    */
-  def sqlQ8(spark: SparkSession, dir: String): DataFrame = {
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    Tables.region(spark, dir).createOrReplaceTempView("region")
-    spark.sql(
-      """SELECT o_year,
-        |  CAST(sum(CASE WHEN nation = 'NATION_3' THEN volume
-        |                ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-        |  / CAST(sum(volume) AS DOUBLE) AS mkt_share
-        |FROM (SELECT year(o_orderdate) AS o_year,
-        |             CAST(l_extendedprice AS DECIMAL(18,2))
-        |               * (1 - CAST(l_discount AS DECIMAL(18,2))) AS volume,
-        |             n2.n_name AS nation
-        |      FROM part
-        |      JOIN lineitem ON p_partkey = l_partkey
-        |      JOIN supplier ON s_suppkey = l_suppkey
-        |      JOIN orders ON l_orderkey = o_orderkey
-        |      JOIN customer ON o_custkey = c_custkey
-        |      JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |      JOIN region ON n1.n_regionkey = r_regionkey
-        |      JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |      WHERE r_name = 'AMERICA'
-        |        AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-        |        AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |        AND p_type = 'PROMO') all_nations
-        |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin)
-  }
-
-  /** TPC-H Q10 shape (returned-item reporting), adapted to the fixture's
-    * customer columns (no address/phone/comment; the grouping keys are the
-    * ones that exist). A quarter of orders joined to their 'R'-flagged
-    * lines, grouped per customer, top-20 by lost revenue. The order-date
-    * filter applies to orders BEFORE the lineitem join (the planner pushes
-    * it below), so the fact join probes only one quarter of the orders;
-    * nation broadcasts. Top-20 compiles to TakeOrderedAndProject — no
-    * global sort. The revenue tie is broken by the unique c_custkey so the
-    * selected 20-row SET is deterministic across engines, not just the
-    * ordering (a revenue-only ORDER BY would make boundary membership a
-    * coin flip).
-    */
-  def sqlQ10(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir).createOrReplaceTempView("customer")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    spark.sql(
-      """SELECT c_custkey, c_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  c_acctbal, n_name
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
-        |  AND l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin)
-  }
-
-  /** TPC-H Q14 shape (promotion effect). One month of lineitem joined to
-    * part, and BOTH the promo-conditional numerator and the total
-    * denominator come out of the same single aggregate — one scan, one
-    * join, no second pass. Each sum is decimal-exact; the `* 100` stays in
-    * decimal (still exact — the product is far inside DECIMAL(38,·));
-    * exactly one double division at the end, so the percentage is
-    * bit-identical across engines and partition orders.
-    */
-  def sqlQ14(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    spark.sql(
-      """SELECT CAST(100 * sum(CASE WHEN p_type = 'PROMO'
-        |               THEN CAST(l_extendedprice AS DECIMAL(18,2))
-        |                    * (1 - CAST(l_discount AS DECIMAL(18,2)))
-        |               ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-        |     / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |                * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |       AS promo_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-10-01 00:00:00'""".stripMargin)
-  }
-
-  /** TPC-H Q15 shape (top supplier). The revenue CTE is referenced TWICE —
-    * once as the join input, once inside the scalar MAX subquery — and
-    * Catalyst plans the grouped aggregate once per reference over the same
-    * pruned scan (the 3-month shipdate filter pushes into both). The
-    * winner test `total_rev = (SELECT max…)` compares DECIMAL sums, so
-    * "equal to the maximum" is exact digit equality — running this over
-    * double sums would make the answer set partition-order-dependent,
-    * which is precisely the bug the house exact-sum discipline exists to
-    * prevent. Supplier join broadcasts (one row per supplier survives the
-    * agg).
-    */
-  def sqlQ15(spark: SparkSession, dir: String): DataFrame = {
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """WITH revenue0 AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |         sum(CAST(l_extendedprice AS DECIMAL(18,2))
-        |             * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_revenue
-        |FROM supplier
-        |JOIN revenue0 ON s_suppkey = supplier_no
-        |WHERE total_rev = (SELECT max(total_rev) FROM revenue0)
-        |ORDER BY s_suppkey""".stripMargin)
   }
 
   /** Full ANSI MERGE triad: WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT /
@@ -1099,214 +593,6 @@ object RelationalOps {
         col("o_orderkey"),
         coalesce(col("c_totalprice"), col("o_totalprice")).as("o_totalprice"),
         coalesce(col("c_orderpriority"), col("o_orderpriority")).as("o_orderpriority"))
-  }
-
-  /** TPC-H Q1 shape (pricing summary report): the canonical full-scan
-    * multi-aggregate — seven aggregates over two low-cardinality grouping
-    * keys, one scan, map-side partial agg, a 6-row final exchange. At
-    * 100 TB this is pure scan bandwidth; anything but scan+partial-agg in
-    * the plan is a bug. Every sum runs in DECIMAL: `sum_charge` is a
-    * THREE-factor product, so the factors cast to DECIMAL(12,2) —
-    * (12,2)×(12,2)×(12,2) lands at DECIMAL(38,6), exactly at Spark's and
-    * DuckDB's shared precision ceiling with zero truncation; (18,2)
-    * factors would overflow 38 digits and silently lose scale. `avg_qty`
-    * follows the house discipline: exact decimal sum ÷ exact count, ONE
-    * IEEE division at the end — never a streaming `avg` whose partial-merge
-    * order could differ between engines.
-    */
-  def sqlQ1(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    spark.sql(
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
-        |    AS sum_base_price,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE)
-        |    AS sum_disc_price,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-        |           * (1 - CAST(l_discount AS DECIMAL(12,2)))
-        |           * (1 + CAST(l_tax AS DECIMAL(12,2)))) AS DOUBLE)
-        |    AS sum_charge,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE) AS avg_qty,
-        |  CAST(count(*) AS BIGINT) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin)
-  }
-
-  /** TPC-H Q2 shape (minimum-cost supplier), adapted to the fixture's
-    * schema: there is no `partsupp`, so the part⇄supplier catalog is
-    * DERIVED from lineitem — `min(l_extendedprice / l_quantity)` per
-    * (part, supplier) is the observed unit cost. The defining feature
-    * survives intact: a correlated scalar subquery (`unit_cost = (SELECT
-    * min … WHERE c2.l_partkey = p_partkey)`) over the same
-    * region-restricted catalog, which Catalyst decorrelates into a grouped
-    * min joined back on the correlation key — NO per-row re-aggregation,
-    * no cartesian. The CTE is referenced twice; both references read the
-    * same pruned scan. Unit cost is one IEEE division per (part,supp)
-    * group and `min` over doubles is order-insensitive, so the equality
-    * test is bit-identical across engines and partition orders. Dims
-    * (supplier/nation/region) broadcast; the only big shuffle is the
-    * grouped min on (l_partkey, l_suppkey).
-    */
-  def sqlQ2(spark: SparkSession, dir: String): DataFrame = {
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    Tables.region(spark, dir).createOrReplaceTempView("region")
-    spark.sql(
-      """WITH cost AS (
-        |  SELECT l_partkey, l_suppkey,
-        |         min(l_extendedprice / l_quantity) AS unit_cost
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_brand, unit_cost
-        |FROM part, cost, supplier, nation, region
-        |WHERE p_partkey = cost.l_partkey AND s_suppkey = cost.l_suppkey
-        |  AND p_size <= 10 AND p_type = 'LARGE'
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'EUROPE'
-        |  AND unit_cost = (SELECT min(c2.unit_cost)
-        |                   FROM cost c2, supplier s2, nation n2, region r2
-        |                   WHERE c2.l_partkey = p_partkey
-        |                     AND s2.s_suppkey = c2.l_suppkey
-        |                     AND s2.s_nationkey = n2.n_nationkey
-        |                     AND n2.n_regionkey = r2.r_regionkey
-        |                     AND r2.r_name = 'EUROPE')
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey""".stripMargin)
-  }
-
-  /** TPC-H Q9 shape (product-type profit), adapted: no `partsupp`, so the
-    * supply cost is proxied as 60% of the part's retail price —
-    * `p_retailprice` plays `ps_supplycost`, preserving the defining shape:
-    * a 5-way snowflake (lineitem ⋈ orders ⋈ supplier ⋈ part ⋈ nation) with
-    * a LIKE-filtered part dim, grouped by (supplier nation, order year).
-    * The part filter applies BEFORE the fact join (the planner pushes the
-    * LIKE into the dim scan), nation broadcasts, and profit is an exact
-    * decimal expression per row — (12,2)×(12,2) products and a (2,1)
-    * literal keep every intermediate inside DECIMAL(38,·), with ONE double
-    * cast after the grouped sum.
-    */
-  def sqlQ9(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.orders(spark, dir).createOrReplaceTempView("orders")
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    spark.sql(
-      """SELECT n_name AS nation,
-        |  CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
-        |             * (1 - CAST(l_discount AS DECIMAL(12,2)))
-        |           - CAST(p_retailprice AS DECIMAL(12,2))
-        |             * CAST(l_quantity AS DECIMAL(12,2)) * 0.6) AS DOUBLE)
-        |    AS sum_profit
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN part     ON l_partkey = p_partkey
-        |JOIN nation   ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%gear%'
-        |GROUP BY n_name, year(o_orderdate)
-        |ORDER BY nation, o_year DESC""".stripMargin)
-  }
-
-  /** TPC-H Q11 shape (important stock identification), adapted: the
-    * "stock value" per part is the summed traded value
-    * (extendedprice × quantity) of that part through the chosen nations'
-    * suppliers — lineitem plays `partsupp`. The defining feature is the
-    * HAVING-against-a-scalar-subquery: the per-part grouped sum is
-    * compared to a fraction of the SAME aggregation's grand total, and
-    * Catalyst plans the total as one reused scalar subquery, not a per-row
-    * re-scan. Both sides aggregate in exact DECIMAL; the fraction compare
-    * happens on the final double cast (one cast each side, same bits in
-    * both engines — multiplying the DECIMAL(38,·) sum by 1000 would
-    * overflow the shared precision ceiling, so the exact sums are cast
-    * first and compared in IEEE).
-    */
-  def sqlQ11(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    spark.sql(
-      """WITH sval AS (
-        |  SELECT l_partkey,
-        |         sum(CAST(l_extendedprice AS DECIMAL(12,2))
-        |             * CAST(l_quantity AS DECIMAL(12,2))) AS val
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation   ON s_nationkey = n_nationkey
-        |  WHERE n_name IN ('NATION_7', 'NATION_8')
-        |  GROUP BY l_partkey)
-        |SELECT l_partkey AS p_partkey, CAST(val AS DOUBLE) AS part_value
-        |FROM sval
-        |WHERE CAST(val AS DOUBLE)
-        |      > CAST((SELECT sum(val) FROM sval) AS DOUBLE) / 1000
-        |ORDER BY part_value DESC, p_partkey""".stripMargin)
-  }
-
-  /** TPC-H Q16 shape (parts/supplier relationship): COUNT(DISTINCT
-    * supplier) per (brand, type, size) bucket with a NOT IN exclusion
-    * list. Adapted: lineitem is the part⇄supplier bridge (no `partsupp`),
-    * and the "customer complaints" exclusion becomes negative-balance
-    * suppliers. The shape pins three planner behaviors: the `p_size IN`
-    * set and type filter push into the part scan; NOT IN over a provably
-    * non-null key plans as an anti join against the tiny broadcast
-    * exclusion list (never null-aware nested-loop); and the distinct-agg
-    * expands to the two-phase (key+suppkey dedup, then count) aggregate so
-    * duplicate (part, supplier) lineitem pairs collapse map-side before
-    * the shuffle.
-    */
-  def sqlQ16(spark: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    spark.sql(
-      """SELECT p_brand, p_type, p_size,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_type <> 'PROMO' AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-        |  AND l_suppkey NOT IN
-        |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)
-  }
-
-  /** TPC-H Q20 shape (potential part promotion): the nested IN-subquery
-    * stack — suppliers IN (per-supplier grouped HAVING over lineitems of
-    * parts IN (name-filtered part list)) — restricted to one region's
-    * nations. Adapted: the availability threshold (`ps_availqty > ½
-    * shipped`) becomes a shipped-quantity floor over the two-year window,
-    * lineitem again playing `partsupp`. Both IN levels plan as semi joins
-    * (part list broadcast into the lineitem probe, qualifying suppkeys
-    * semi-joined into supplier); the HAVING sum runs in DECIMAL so the
-    * threshold is exact digit comparison, not an IEEE epsilon question.
-    * Region/nation broadcast; the single real shuffle is the per-supplier
-    * grouped sum.
-    */
-  def sqlQ20(spark: SparkSession, dir: String): DataFrame = {
-    Tables.supplier(spark, dir).createOrReplaceTempView("supplier")
-    Tables.nation(spark, dir).createOrReplaceTempView("nation")
-    Tables.region(spark, dir).createOrReplaceTempView("region")
-    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-    Tables.part(spark, dir).createOrReplaceTempView("part")
-    spark.sql(
-      """SELECT s_name, s_acctbal
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_regionkey IN
-        |      (SELECT r_regionkey FROM region WHERE r_name = 'ASIA')
-        |  AND s_suppkey IN (
-        |    SELECT l_suppkey FROM lineitem
-        |    WHERE l_partkey IN
-        |          (SELECT p_partkey FROM part WHERE p_name LIKE '%widget%')
-        |      AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |    GROUP BY l_suppkey
-        |    HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 50)
-        |ORDER BY s_name""".stripMargin)
   }
 
   /** Collation-aware distinct — Spark 4's native string collations

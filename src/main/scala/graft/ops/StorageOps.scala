@@ -580,10 +580,10 @@ object StorageOps {
       // silently diverge from the backfill's declared result). "Replace
       // with nothing" needs the STATIC partition-spec form, which
       // truncates the named partition regardless of row count.
-      backfill.createOrReplaceTempView("graft_dpo_backfill")
-      spark.sql(
+      Tables.sql(spark,
         s"INSERT OVERWRITE TABLE $staged PARTITION (event_type = 'click') " +
-        "SELECT event_id, ts, user_id, value FROM graft_dpo_backfill")
+        "SELECT event_id, ts, user_id, value FROM graft_dpo_backfill",
+        "graft_dpo_backfill" -> backfill)
     } else {
       // The mode flip is SESSION-wide (restored in finally, but not
       // atomic): a concurrent writer on this SparkSession would silently

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan, Project}
@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Native AS-OF join — the whole-operator extension tier (SURVEY §2.5(c)):
   * a custom `LogicalPlan` + optimizer `Rule` + `SparkStrategy` +
-  * `SparkPlan`, registered per session or via `SparkSessionExtensions`.
+  * `SparkPlan`, injected through `SparkSessionExtensions`.
   *
   * Semantics: for each left row, append the LATEST right row of the same
   * key with `right.time <= left.time` (nulls when none) — LEFT OUTER as-of,
@@ -197,21 +197,10 @@ object PruneColumnsThroughAsofJoin extends Rule[LogicalPlan] {
   }
 }
 
-/** User-facing API + per-session registration. */
+/** User-facing API. The planner strategy and both rules come from
+  * `graft.functions.GraftExtensions`, which every `GraftSession` injects.
+  */
 object AsofJoinOps {
-
-  /** Idempotent registration of the strategy + pushdown rule on a session
-    * (for sessions not built with `spark.sql.extensions =
-    * graft.functions.GraftExtensions`, which injects both).
-    */
-  def register(spark: SparkSession): Unit = synchronized {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(AsofJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsofJoinStrategy
-    if (!exp.extraOptimizations.contains(PushFilterThroughAsofJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+
-        PushFilterThroughAsofJoin :+ PruneColumnsThroughAsofJoin
-  }
 
   /** `left ASOF LEFT JOIN right ON on... AND right.time <= left.time`.
     *
@@ -224,7 +213,6 @@ object AsofJoinOps {
                leftTimeCol: String, rightTimeCol: String,
                rightSuffix: String = "_r"): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
     val renamed = right.select(right.columns.map(c => right(c).as(c + rightSuffix)): _*)
     val lPlan = left.queryExecution.analyzed
     val rPlan = renamed.queryExecution.analyzed

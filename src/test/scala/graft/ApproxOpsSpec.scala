@@ -631,7 +631,6 @@ class ApproxOpsSpec extends SparkSuite {
   }
 
   test("md5_prefix60 kernel == conv(substr(md5)) composed form, on real fixture strings") {
-    graft.functions.GraftFunctions.register(spark)
     // every props/event_type string at sf0.001, plus edge literals, through
     // BOTH derivations in one plan — any divergence fails the equality
     val bad = graft.model.Tables.events(spark, sf)

@@ -29,6 +29,9 @@ class BatchOpsSpec extends SparkSuite {
   test("every registered query executes at sf0.001") {
     // noop write, not count(): count() prunes every column it does not
     // need, so a throwing projection would go unevaluated
+    def tempViews(): Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val viewsBefore = tempViews()
     val unpartitioned = Set.newBuilder[String]
     val failures = SparkEntry.queries.flatMap { case (name, fn) =>
       try {
@@ -42,6 +45,9 @@ class BatchOpsSpec extends SparkSuite {
     }
     assert(failures.isEmpty, failures.mkString("\n"))
     assert(unpartitioned.result() == UnpartitionedWindows)
+    // a build binds its temp views only while its SQL is analyzed
+    val leaked = tempViews() -- viewsBefore
+    assert(leaked.isEmpty, leaked.toSeq.sorted.mkString(", "))
   }
 
   test("flagship entry returns rows") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Ground-truth specs for the pair-local generation-eval kernels
   * (clipped_ngram_overlaps, lcs_length) against brute-force Scala
@@ -43,7 +42,6 @@ class EvalExpressionsSpec extends SparkSuite {
 
   test("clipped_ngram_overlaps matches brute-force multiset-min, codegen path") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = randomDocs(41, 200)
     val out = docs.toDF("r", "c")
       .select(col("r"), col("c"),
@@ -59,7 +57,6 @@ class EvalExpressionsSpec extends SparkSuite {
 
   test("clipping is real: repeated candidate tokens can't inflate the match") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val out = Seq((Seq("a", "b"), Seq("a", "a", "a", "b")))
       .toDF("r", "c")
       .select(expr("clipped_ngram_overlaps(r, c, 2)").as("m"))
@@ -70,7 +67,6 @@ class EvalExpressionsSpec extends SparkSuite {
 
   test("lcs_length matches brute-force DP, codegen path") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = randomDocs(43, 200)
     val out = docs.toDF("r", "c")
       .select(col("r"), col("c"), expr("lcs_length(r, c)").as("lcs"))
@@ -84,7 +80,6 @@ class EvalExpressionsSpec extends SparkSuite {
 
   test("lcs_length is subsequence (non-contiguous), order-sensitive, bounded") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val cases = Seq(
       (Seq("a", "x", "b", "y", "c"), Seq("a", "b", "c"), 3L), // gaps ok
       (Seq("a", "b", "c"), Seq("c", "b", "a"), 1L),           // order matters
@@ -103,7 +98,6 @@ class EvalExpressionsSpec extends SparkSuite {
     // (the default fallback hides a broken codegen from every other test).
     // A parquet scan, not a local Seq: the optimizer folds projections
     // over local data on the driver, so no generated code would run.
-    GraftFunctions.register(spark)
     val key = "spark.sql.codegen.fallback"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")

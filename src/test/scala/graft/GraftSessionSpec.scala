@@ -29,9 +29,7 @@ class GraftSessionSpec extends SparkSuite {
   test("extensions injection registers every native function — no manual register") {
     // newSession() rebuilds SessionState from the session's extensions, so
     // a fresh function registry here proves the spark.sql.extensions path
-    // (SparkSuite builds the shared session through GraftSession.builder);
-    // per-session GraftFunctions.register calls from other suites can't
-    // leak into it.
+    // (SparkSuite builds the shared session through GraftSession.builder).
     val fresh = spark.newSession()
     val ids = graft.functions.GraftFunctions.fns.map(_._1)
     assert(ids.size == 16)
@@ -44,17 +42,16 @@ class GraftSessionSpec extends SparkSuite {
     assert(r.getDouble(0) == 11.0)
   }
 
-  test("register leaves functions the session already has in place") {
-    // extension-injected builders are kept, not replaced (a replacement
-    // logs a WARN per function per call)
+  test("an as-of join plans through the injected strategy and leaves spark.experimental empty") {
+    // GraftExtensions injects AsofJoinStrategy and both as-of rules into
+    // every session; building the query must not add them again to the
+    // session's experimental strategies and optimizations
     val fresh = spark.newSession()
-    val registry = fresh.sessionState.functionRegistry
-    val ids = graft.functions.GraftFunctions.fns.map(_._1)
-    val before = ids.map(id => registry.lookupFunctionBuilder(id).get)
-    graft.functions.GraftFunctions.register(fresh)
-    ids.zip(before).foreach { case (id, b) =>
-      assert(registry.lookupFunctionBuilder(id).get eq b, id)
-    }
+    val df = SparkEntry.queries("asof_join_price")(fresh, "/root/testdata/sf0.001")
+    df.write.mode("overwrite").format("noop").save()
+    assert(df.queryExecution.executedPlan.toString.contains("AsofJoin"))
+    assert(fresh.experimental.extraStrategies.isEmpty)
+    assert(fresh.experimental.extraOptimizations.isEmpty)
   }
 
   test("builder applies every default") {

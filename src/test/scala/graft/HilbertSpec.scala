@@ -76,7 +76,6 @@ class HilbertSpec extends SparkSuite {
   }
 
   test("SQL ergonomics: integral args widen implicitly; wrong arity fails analysis") {
-    graft.functions.GraftFunctions.register(spark)
     // INT literals (and by extension INT columns) widen to BIGINT inside
     // the kernel — no manual CAST required (r15 ADVICE)
     val h = spark.sql("SELECT hilbert_index(3, 7) AS h").collect()(0).getLong(0)

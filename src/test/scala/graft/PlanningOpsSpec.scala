@@ -105,7 +105,6 @@ class PlanningOpsSpec extends SparkSuite {
   test("hilbert_index resolves as a SQL function through GraftExtensions' registry list") {
     // the fused kernel is registered alongside dot_product/minhash_sig
     // etc. — a SQL user gets the layout key without the Scala API
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.sql(
       "SELECT hilbert_index(CAST(3 AS BIGINT), CAST(4 AS BIGINT)) AS h," +
         " hilbert_index(CAST(65536 AS BIGINT), CAST(0 AS BIGINT)) AS hm")

@@ -20,7 +20,6 @@ class PqExpressionsSpec extends SparkSuite {
 
   test("pq_encode is bit-identical to the struct-argmin HOF form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val cb = codebooks(29)
     val rnd = new scala.util.Random(31)
     val rows = (1 to 300).map(_ => Tuple1(Array.fill(M * SubDim)(rnd.nextDouble() * 2 - 1)))
@@ -41,7 +40,6 @@ class PqExpressionsSpec extends SparkSuite {
 
   test("pq_adc is bit-identical to the aggregate fold") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(37)
     val rows = (1 to 300).map { _ =>
       (Array.fill(M)(rnd.nextInt(K)),
@@ -58,7 +56,6 @@ class PqExpressionsSpec extends SparkSuite {
 
   test("short vectors and bad codes yield null, matching the HOF forms") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // a vector shorter than M*SubDim must NOT be encoded from garbage reads
     val short = Seq(Tuple1(Array(1.0, 2.0))).toDF("u")
       .select(GraftFunctions.pqEncode(col("u"), codebooks(43)).as("c")).collect()(0)
@@ -79,7 +76,6 @@ class PqExpressionsSpec extends SparkSuite {
 
   test("null inputs propagate to null") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq(Tuple1(Option.empty[Array[Double]])).toDF("u")
       .select(GraftFunctions.pqEncode(col("u"), codebooks(41)).as("c")).collect()(0)
     assert(r.isNullAt(0))

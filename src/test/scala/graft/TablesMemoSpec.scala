@@ -114,21 +114,31 @@ class TablesMemoSpec extends SparkSuite {
     assert(live <= Tables.MaxSessions, s"$live of 20 dropped sessions still reachable")
   }
 
-  test("Tables.scala is the only main file that constructs a concurrent or weak map") {
-    // one build-once cache: a second memo in src/main would be a second
-    // place where a rewritten source goes stale or a session is pinned
+  /** src/main files other than model/Tables.scala whose text matches `re`. */
+  private def offendersBesideTables(re: scala.util.matching.Regex): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root),
       s"run from the repository root, not ${Paths.get("").toAbsolutePath}")
-    val construct =
-      """new\s+[\w.]*(ConcurrentHashMap|WeakHashMap|TrieMap)\b|\bTrieMap\s*[.\[(]""".r
     val files = Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.exists(_.endsWith(Paths.get("model", "Tables.scala"))))
-    val offenders = files.filter { f =>
-      !f.endsWith(Paths.get("model", "Tables.scala")) &&
-        construct.findFirstIn(Files.readString(f)).isDefined
-    }
+    val tables = Paths.get("model", "Tables.scala")
+    assert(files.exists(_.endsWith(tables)))
+    files.filter(f => !f.endsWith(tables) && re.findFirstIn(Files.readString(f)).isDefined)
+      .map(_.toString)
+  }
+
+  test("Tables.scala is the only main file that constructs a concurrent or weak map") {
+    // one build-once cache: a second memo in src/main would be a second
+    // place where a rewritten source goes stale or a session is pinned
+    val offenders = offendersBesideTables(
+      """new\s+[\w.]*(ConcurrentHashMap|WeakHashMap|TrieMap)\b|\bTrieMap\s*[.\[(]""".r)
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("Tables.scala is the only main file that creates a temp view") {
+    // Tables.sql drops the views it binds once the text is analyzed; a
+    // temp view created anywhere else outlives its query in the session
+    val offenders = offendersBesideTables("""createOrReplaceTempView""".r)
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, VarintCodec}
+import graft.functions.VarintCodec
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Ground truth for the delta-varint adjacency codec (r18, the
@@ -57,7 +57,6 @@ class VarintExpressionsSpec extends SparkSuite {
 
   test("SQL codegen path: varint walk equals sorted_intersect_count") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val sets = randomSortedSets(23, 200)
     val rnd = new scala.util.Random(29)
     val pairs = (1 to 200).map { _ =>

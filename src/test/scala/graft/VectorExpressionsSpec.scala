@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Specs for the native codegen vector expressions: correctness against
   * hand-computed values, agreement with the higher-order-function form
@@ -11,7 +10,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("dot_product and cosine_sim match hand-computed values") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, -5.0, 6.0)))
       .toDF("x", "y")
       .select(
@@ -25,7 +23,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("dot_product is bit-identical to the zip_with/aggregate fold") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map { _ =>
       (Array.fill(64)(rnd.nextDouble()), Array.fill(64)(rnd.nextDouble()))
@@ -41,7 +38,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("sorted_intersect_count equals size(array_intersect) on sorted distinct sets") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (1 to 300).map { _ =>
       def set() = Array.fill(rnd.nextInt(40))(rnd.nextInt(60).toLong)
@@ -58,7 +54,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("null inputs propagate to null") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq((Some(Array(1.0)), Option.empty[Array[Double]]))
       .toDF("x", "y")
       .select(expr("dot_product(x, y)").as("dot"))
@@ -67,7 +62,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("minhash_sig is bit-identical to the interpreted transform/array_min form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (1 to 100).map(_ => Tuple1(Array.fill(1 + rnd.nextInt(40))(rnd.nextLong())))
     val diff = rows.toDF("hh")
@@ -85,7 +79,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("simhash64 is bit-identical to the interpreted double-aggregate fold") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     val rows = (1 to 100).map(_ => Tuple1(Array.fill(1 + rnd.nextInt(60))(rnd.nextLong())))
     val diff = rows.toDF("hashes")
@@ -101,7 +94,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("signlsh_buckets is bit-identical to the interpreted triple-aggregate form") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(17)
     val rows = (1 to 100).map(_ => Tuple1(Array.fill(64)(rnd.nextDouble() * 2 - 1)))
     val diff = rows.toDF("v")
@@ -120,7 +112,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("char_ngrams3 is identical to the substring-per-position form, incl. multi-byte") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(19)
     val alphabet = "abc déß€?! é世界"
     val rows = (1 to 200).map { _ =>
@@ -142,7 +133,6 @@ class VectorExpressionsSpec extends SparkSuite {
 
   test("word3gram_hashes is identical to the split/shingle/xxhash64 pipeline") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(23)
     val words = Vector("the", "cat", "sat", "on", "", "mat", "déjà", "世界", "x")
     val synthetic = (1 to 300).map { _ =>
@@ -173,7 +163,6 @@ class VectorExpressionsSpec extends SparkSuite {
   }
 
   test("expressions run inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = spark.range(100)
       .selectExpr(
         "transform(sequence(0, 7), i -> cast(id + i as double)) AS x",
