@@ -65,6 +65,13 @@ object GraftSession {
     // first generates code: it takes effect only through the builder that
     // starts the JVM's first SparkContext
     "spark.sql.codegen.cache.maxEntries" -> "1000",
+    // the cache above keys on the generated source, which by default names
+    // each class after its codegen stage id. AQE numbers stages in the
+    // order their query stages finish, which varies between runs, so the
+    // same code under a new name missed the cache and recompiled on warm
+    // passes. Without the id every class is `GeneratedIterator`; the plan's
+    // `*(n)` markers still carry the stage id
+    "spark.sql.codegen.useIdInClassName" -> "false",
     // one task class loader for every session: with isolation on, each
     // SparkSession runs its tasks under its own loader, so a new session
     // misses the cache above and recompiles every task-side class (414

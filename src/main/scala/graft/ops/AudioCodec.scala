@@ -6,9 +6,10 @@ package graft.ops
   * little-endian PCM sample extraction, unknown chunks skipped the way
   * a real reader must (a LIST/INFO chunk before `data` is routine).
   * Malformed payloads fail as IllegalArgumentException so the decode
-  * slot's quarantine catch ([[AudioOps]]) stays total — the
-  * crafted-header discipline of [[ImageCodec.decodeBmp]]: every int32
-  * field is untrusted, bounds-checked, and size arithmetic runs in Long.
+  * slot's quarantine catch ([[AudioOps]]) stays total: every field is
+  * untrusted and read under the [[Bytes]] bounds rule, and size
+  * arithmetic runs in Long. The RIFF chunk walk, the PCM format block and
+  * s16le sample packing below are shared with [[AviCodec]].
   *
   * Layout (canonical minimal writer, tolerant reader):
   *   "RIFF" <fileSize-8 : u32le> "WAVE"
@@ -35,97 +36,122 @@ object AudioCodec {
   val MaxRate: Int = 1 << 20
   val MaxChannels: Int = 64
 
-  private def putIntLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-    a(off + 2) = ((v >>> 16) & 0xff).toByte
-    a(off + 3) = ((v >>> 24) & 0xff).toByte
+  /** One RIFF chunk: four-character `id`, header offset `off`, payload
+    * `size`; the payload runs from [[data]] to [[end]].
+    */
+  private[ops] final case class Chunk(id: String, off: Int, size: Int) {
+    def data: Int = off + 8
+    def end: Int = off + 8 + size
   }
 
-  private def putShortLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
+  /** The one RIFF chunk walk (WAV's top level and all four of AVI's):
+    * chunks in `[from, end)`, each size checked against `end` (the message
+    * names the codec and the enclosing `scope`), odd sizes followed by
+    * their pad byte.
+    */
+  private[ops] def chunks(a: Array[Byte], from: Int, end: Int,
+      codec: String, scope: String): Iterator[Chunk] = new Iterator[Chunk] {
+    private var pos = from
+    def hasNext: Boolean = pos + 8 <= end
+    def next(): Chunk = {
+      val id = Bytes.tag(a, pos, end)
+      val sz = Bytes.i32le(a, pos + 4, end)
+      require(sz >= 0 && pos + 8L + sz <= end,
+        s"$codec: chunk '$id' size $sz overruns $scope")
+      val c = Chunk(id, pos, sz)
+      pos += 8 + sz + (sz & 1)
+      c
+    }
   }
 
-  private def getIntLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8) |
-      ((a(off + 2) & 0xff) << 16) | ((a(off + 3) & 0xff) << 24)
+  /** The 16-byte PCMWAVEFORMAT block (WAV's `fmt `, AVI's audio `strf`),
+    * fields as read; each decoder applies its own checks.
+    */
+  private[ops] final case class PcmFormat(
+      formatTag: Int, channels: Int, rate: Int, byteRate: Int,
+      blockAlign: Int, bits: Int)
 
-  private def getShortLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8)
+  private[ops] def readPcmFormat(a: Array[Byte], off: Int, end: Int): PcmFormat =
+    PcmFormat(Bytes.u16le(a, off, end), Bytes.u16le(a, off + 2, end),
+      Bytes.i32le(a, off + 4, end), Bytes.i32le(a, off + 8, end),
+      Bytes.u16le(a, off + 12, end), Bytes.u16le(a, off + 14, end))
 
-  private def tag(a: Array[Byte], off: Int): String =
-    new String(a, off, 4, "US-ASCII")
+  /** Writes the 16-bit PCM format block for `clip` at `off`. */
+  private[ops] def writePcmFormat(a: Array[Byte], off: Int, clip: Audio): Unit = {
+    Bytes.putU16le(a, off, 1)                                       // PCM
+    Bytes.putU16le(a, off + 2, clip.channels)
+    Bytes.putI32le(a, off + 4, clip.sampleRate)
+    Bytes.putI32le(a, off + 8, clip.sampleRate * clip.channels * 2) // byte rate
+    Bytes.putU16le(a, off + 12, clip.channels * 2)                  // block align
+    Bytes.putU16le(a, off + 14, 16)                                 // bits/sample
+  }
+
+  /** Packs `samples(from until until)` as s16le at `off`. */
+  private[ops] def packS16(samples: Array[Short], from: Int, until: Int,
+      out: Array[Byte], off: Int): Unit = {
+    var i = from
+    while (i < until) {
+      Bytes.putU16le(out, off + 2 * (i - from), samples(i))
+      i += 1
+    }
+  }
+
+  /** Unpacks `n` s16le samples at `off`; the span is checked against `end`
+    * once.
+    */
+  private[ops] def unpackS16(a: Array[Byte], off: Int, n: Int, end: Int): Array[Short] = {
+    Bytes.need(a, off, 2 * n, end)
+    val samples = new Array[Short](n)
+    var i = 0
+    while (i < n) {
+      samples(i) = ((a(off + 2 * i) & 0xff) | ((a(off + 2 * i + 1) & 0xff) << 8)).toShort
+      i += 1
+    }
+    samples
+  }
 
   def encodeWav(clip: Audio): Array[Byte] = {
     val dataBytes = 2 * clip.samples.length
     val out = new Array[Byte](44 + dataBytes)
-    out(0) = 'R'; out(1) = 'I'; out(2) = 'F'; out(3) = 'F'
-    putIntLE(out, 4, out.length - 8)
-    out(8) = 'W'; out(9) = 'A'; out(10) = 'V'; out(11) = 'E'
-    out(12) = 'f'; out(13) = 'm'; out(14) = 't'; out(15) = ' '
-    putIntLE(out, 16, 16)               // fmt chunk size
-    putShortLE(out, 20, 1)              // PCM
-    putShortLE(out, 22, clip.channels)
-    putIntLE(out, 24, clip.sampleRate)
-    putIntLE(out, 28, clip.sampleRate * clip.channels * 2) // byte rate
-    putShortLE(out, 32, clip.channels * 2)                 // block align
-    putShortLE(out, 34, 16)                                // bits/sample
-    out(36) = 'd'; out(37) = 'a'; out(38) = 't'; out(39) = 'a'
-    putIntLE(out, 40, dataBytes)
-    var i = 0
-    while (i < clip.samples.length) {
-      putShortLE(out, 44 + 2 * i, clip.samples(i) & 0xffff)
-      i += 1
-    }
+    Bytes.putTag(out, 0, "RIFF"); Bytes.putI32le(out, 4, out.length - 8)
+    Bytes.putTag(out, 8, "WAVE")
+    Bytes.putTag(out, 12, "fmt "); Bytes.putI32le(out, 16, 16)
+    writePcmFormat(out, 20, clip)
+    Bytes.putTag(out, 36, "data"); Bytes.putI32le(out, 40, dataBytes)
+    packS16(clip.samples, 0, clip.samples.length, out, 44)
     out
   }
 
   def decodeWav(bytes: Array[Byte]): Audio = {
-    require(bytes.length >= 44 && tag(bytes, 0) == "RIFF" && tag(bytes, 8) == "WAVE",
-      "not a RIFF/WAVE payload")
-    // walk chunks: fmt must precede data; unknown chunks skipped
-    var pos = 12
-    var haveFmt = false
-    var channels = 0
-    var rate = 0
-    while (pos + 8 <= bytes.length) {
-      val id = tag(bytes, pos)
-      val sz = getIntLE(bytes, pos + 4)
-      require(sz >= 0 && pos + 8L + sz <= bytes.length,
-        s"WAV: chunk '$id' size $sz overruns payload")
-      if (id == "fmt ") {
-        require(sz >= 16, s"WAV: fmt chunk size $sz")
-        require(getShortLE(bytes, pos + 8) == 1, "WAV: only PCM supported")
-        channels = getShortLE(bytes, pos + 10)
-        require(channels >= 1 && channels <= MaxChannels, s"WAV: $channels channels")
-        rate = getIntLE(bytes, pos + 12)
-        require(rate >= 1 && rate <= MaxRate, s"WAV: bad sample rate $rate")
-        require(getShortLE(bytes, pos + 22) == 16, "WAV: only 16-bit supported")
-        haveFmt = true
-      } else if (id == "data") {
-        require(haveFmt, "WAV: data chunk before fmt")
-        require(sz % 2 == 0, s"WAV: odd data size $sz")
-        require(sz.toLong % (2L * channels) == 0,
-          s"WAV: $sz data bytes not whole frames of $channels channels")
-        val n = sz / 2
-        val samples = new Array[Short](n)
-        var i = 0
-        while (i < n) {
-          samples(i) = getShortLE(bytes, pos + 8 + 2 * i).toShort
-          i += 1
-        }
-        return Audio(rate, channels, samples)
+    require(sniff(bytes) && bytes.length >= 44, "not a RIFF/WAVE payload")
+    // fmt must precede data; unknown chunks skipped
+    var fmt: PcmFormat = null
+    val it = chunks(bytes, 12, bytes.length, "WAV", "payload")
+    while (it.hasNext) {
+      val c = it.next()
+      if (c.id == "fmt ") {
+        require(c.size >= 16, s"WAV: fmt chunk size ${c.size}")
+        fmt = readPcmFormat(bytes, c.data, c.end)
+        require(fmt.formatTag == 1, "WAV: only PCM supported")
+        require(fmt.channels >= 1 && fmt.channels <= MaxChannels,
+          s"WAV: ${fmt.channels} channels")
+        require(fmt.rate >= 1 && fmt.rate <= MaxRate, s"WAV: bad sample rate ${fmt.rate}")
+        require(fmt.bits == 16, "WAV: only 16-bit supported")
+      } else if (c.id == "data") {
+        require(fmt != null, "WAV: data chunk before fmt")
+        require(c.size % 2 == 0, s"WAV: odd data size ${c.size}")
+        require(c.size.toLong % (2L * fmt.channels) == 0,
+          s"WAV: ${c.size} data bytes not whole frames of ${fmt.channels} channels")
+        return Audio(fmt.rate, fmt.channels, unpackS16(bytes, c.data, c.size / 2, c.end))
       }
-      // chunks are word-aligned: odd sizes carry a pad byte
-      pos += 8 + sz + (sz & 1)
     }
     throw new IllegalArgumentException("WAV: no data chunk")
   }
 
   /** Magic sniff: RIFF/WAVE container. */
   def sniff(bytes: Array[Byte]): Boolean =
-    bytes.length >= 12 && tag(bytes, 0) == "RIFF" && tag(bytes, 8) == "WAVE"
+    bytes.length >= 12 && Bytes.tag(bytes, 0, 12) == "RIFF" &&
+      Bytes.tag(bytes, 8, 12) == "WAVE"
 
   /** 64-bit energy-gradient fingerprint — the audio twin of
     * [[ImageCodec.dhash64]]: per-channel-agnostic |sample| energy summed

@@ -31,12 +31,13 @@ package graft.ops
   *                              offset-from-movi-list-start size
   * }}}
   *
-  * Untrusted-header hardening (the [[ImageCodec.decodeBmp]] house rules):
-  * every u32 field is bounds-checked, all size arithmetic runs in Long,
-  * dimension/frame-count caps reject absurd headers outright, and every
-  * malformed payload fails as IllegalArgumentException so the decode
-  * slot's quarantine catch stays total. Unknown chunks and LISTs are
-  * skipped the way a real reader must (odd sizes carry a pad byte).
+  * Untrusted-header hardening: every field is read under the [[Bytes]]
+  * bounds rule, all size arithmetic runs in Long, dimension/frame-count
+  * caps reject absurd headers outright, and every malformed payload fails
+  * as IllegalArgumentException so the decode slot's quarantine catch
+  * stays total. The RIFF chunk walk (which skips unknown chunks and LISTs
+  * the way a real reader must, pad bytes included), the PCM format block
+  * and s16le packing are [[AudioCodec]]'s, shared with WAV.
   */
 object AviCodec {
 
@@ -71,39 +72,19 @@ object AviCodec {
   /** Cap on total interleaved PCM bytes a header may declare. */
   val MaxAudioBytes: Long = 1L << 28
 
-  private def putIntLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-    a(off + 2) = ((v >>> 16) & 0xff).toByte
-    a(off + 3) = ((v >>> 24) & 0xff).toByte
-  }
-
-  private def putShortLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-  }
-
-  private def putTag(a: Array[Byte], off: Int, t: String): Unit = {
-    var i = 0
-    while (i < 4) { a(off + i) = t.charAt(i).toByte; i += 1 }
-  }
-
-  private def getIntLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8) |
-      ((a(off + 2) & 0xff) << 16) | ((a(off + 3) & 0xff) << 24)
-
-  private def getShortLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8)
-
-  private def tag(a: Array[Byte], off: Int): String =
-    new String(a, off, 4, "US-ASCII")
-
-  /** Encode pre-encoded JPEG frame payloads as a minimal MJPEG AVI.
-    * Deterministic byte-for-byte (AviCodecSpec pins a hand-built file).
+  /** Encode pre-encoded JPEG frame payloads as a minimal MJPEG AVI; with
+    * `audio`, the canonical two-stream A/V form: a second 'strl' (strh
+    * 'auds' + 16-byte PCMWAVEFORMAT strf with the MS PCM conventions
+    * dwScale = nBlockAlign, dwRate = nAvgBytesPerSec, dwSampleSize =
+    * nBlockAlign, dwLength = sample-frames), and the audio split into one
+    * '01wb' chunk per video frame, interleaved 00dc/01wb the way a real
+    * muxer keeps streams seekable; idx1 indexes every stream chunk in file
+    * order. Deterministic byte-for-byte (AviCodecSpec pins a hand-built
+    * file of each form).
     */
   def encodeAvi(
-      width: Int, height: Int, fps: Int,
-      frames: Seq[Array[Byte]]): Array[Byte] = {
+      width: Int, height: Int, fps: Int, frames: Seq[Array[Byte]],
+      audio: Option[AudioCodec.Audio] = None): Array[Byte] = {
     require(width >= 1 && width <= MaxDim && height >= 1 && height <= MaxDim,
       s"AVI: bad dimensions $width x $height")
     // canonical-writer invariants tighter than the tolerant reader's caps:
@@ -116,229 +97,121 @@ object AviCodec {
     require(fps >= 1 && fps <= MaxRate, s"AVI: bad fps $fps")
     require(frames.nonEmpty && frames.length <= MaxFrames,
       s"AVI: ${frames.length} frames")
+    audio.foreach { a =>
+      require(a.sampleRate >= 1 && a.sampleRate <= AudioCodec.MaxRate,
+        s"AVI: bad audio rate ${a.sampleRate}")
+      require(a.channels <= AudioCodec.MaxChannels, s"AVI: ${a.channels} channels")
+      require(2L * a.samples.length <= MaxAudioBytes, "AVI: audio too long")
+    }
     val n = frames.length
-    val hdrlSize = 4 + (8 + 56) + (8 + 4 + (8 + 56) + (8 + 40))
-    val moviPayload = frames.map(f => 8L + f.length + (f.length & 1)).sum
-    val moviSize = 4 + moviPayload
-    val idx1Size = 16L * n
+    val blockAlign = audio.fold(0)(2 * _.channels)
+    // even split of the audio across n interleaved '01wb' chunks: chunk i
+    // carries sample-frames [aFrames·i/n, aFrames·(i+1)/n)
+    def sliceStart(i: Int): Int = audio.fold(0)(a => ((a.frames.toLong * i) / n).toInt)
+    // movi chunks in file order: (id, payload size)
+    val chunks = (0 until n).flatMap { i =>
+      ("00dc", frames(i).length) +: audio.toSeq.map(_ =>
+        ("01wb", (sliceStart(i + 1) - sliceStart(i)) * blockAlign))
+    }
+    val hdrlSize = 4 + (8 + 56) +
+      (8 + 4 + (8 + 56) + (8 + 40)) +                  // video strl
+      audio.fold(0)(_ => 8 + 4 + (8 + 56) + (8 + 16))  // audio strl
+    val moviSize = 4 + chunks.map { case (_, sz) => 8L + sz + (sz & 1) }.sum
+    val idx1Size = 16L * chunks.length
     val riffSize = 4L + (8 + hdrlSize) + (8 + moviSize) + (8 + idx1Size)
     require(riffSize + 8 <= Int.MaxValue, "AVI: file exceeds RIFF 1.0 bounds")
     val out = new Array[Byte]((riffSize + 8).toInt)
     var p = 0
     def chunkHeader(t: String, sz: Int): Unit = {
-      putTag(out, p, t); putIntLE(out, p + 4, sz); p += 8
+      Bytes.putTag(out, p, t); Bytes.putI32le(out, p + 4, sz); p += 8
     }
-    putTag(out, 0, "RIFF"); putIntLE(out, 4, riffSize.toInt)
-    putTag(out, 8, "AVI "); p = 12
-    chunkHeader("LIST", hdrlSize); putTag(out, p, "hdrl"); p += 4
+    def list(sz: Int, t: String): Unit = {
+      chunkHeader("LIST", sz); Bytes.putTag(out, p, t); p += 4
+    }
+    def i32(off: Int, v: Int): Unit = Bytes.putI32le(out, p + off, v)
+    // zero fields are left as allocated
+    chunkHeader("RIFF", riffSize.toInt); Bytes.putTag(out, p, "AVI "); p += 4
+    list(hdrlSize, "hdrl")
     chunkHeader("avih", 56)
-    putIntLE(out, p, 1000000 / fps)       // dwMicroSecPerFrame
-    putIntLE(out, p + 4, 0)               // dwMaxBytesPerSec
-    putIntLE(out, p + 8, 0)               // dwPaddingGranularity
-    putIntLE(out, p + 12, 0x10)           // dwFlags: AVIF_HASINDEX
-    putIntLE(out, p + 16, n)              // dwTotalFrames
-    putIntLE(out, p + 20, 0)              // dwInitialFrames
-    putIntLE(out, p + 24, 1)              // dwStreams
-    putIntLE(out, p + 28, 0)              // dwSuggestedBufferSize
-    putIntLE(out, p + 32, width)
-    putIntLE(out, p + 36, height)
-    // dwReserved[4] already zero
+    i32(0, 1000000 / fps)                   // dwMicroSecPerFrame
+    i32(12, 0x10)                           // dwFlags: AVIF_HASINDEX
+    i32(16, n)                              // dwTotalFrames
+    i32(24, 1 + audio.size)                 // dwStreams
+    i32(32, width); i32(36, height)
     p += 56
-    chunkHeader("LIST", 4 + 64 + 48); putTag(out, p, "strl"); p += 4
+    list(4 + 64 + 48, "strl")
     chunkHeader("strh", 56)
-    putTag(out, p, "vids"); putTag(out, p + 4, "MJPG")
-    putIntLE(out, p + 8, 0)               // dwFlags
-    putShortLE(out, p + 12, 0)            // wPriority
-    putShortLE(out, p + 14, 0)            // wLanguage
-    putIntLE(out, p + 16, 0)              // dwInitialFrames
-    putIntLE(out, p + 20, 1)              // dwScale
-    putIntLE(out, p + 24, fps)            // dwRate
-    putIntLE(out, p + 28, 0)              // dwStart
-    putIntLE(out, p + 32, n)              // dwLength (frames)
-    putIntLE(out, p + 36, 0)              // dwSuggestedBufferSize
-    putIntLE(out, p + 40, -1)             // dwQuality (default)
-    putIntLE(out, p + 44, 0)              // dwSampleSize
-    putShortLE(out, p + 48, 0); putShortLE(out, p + 50, 0)     // rcFrame l,t
-    putShortLE(out, p + 52, width); putShortLE(out, p + 54, height)
+    Bytes.putTag(out, p, "vids"); Bytes.putTag(out, p + 4, "MJPG")
+    i32(20, 1)                              // dwScale
+    i32(24, fps)                            // dwRate
+    i32(32, n)                              // dwLength (frames)
+    i32(40, -1)                             // dwQuality (default)
+    Bytes.putU16le(out, p + 52, width); Bytes.putU16le(out, p + 54, height) // rcFrame r,b
     p += 56
     chunkHeader("strf", 40)
-    putIntLE(out, p, 40)                  // biSize
-    putIntLE(out, p + 4, width)
-    putIntLE(out, p + 8, height)
-    putShortLE(out, p + 12, 1)            // biPlanes
-    putShortLE(out, p + 14, 24)           // biBitCount
-    putTag(out, p + 16, "MJPG")           // biCompression
-    putIntLE(out, p + 20, 3 * width * height) // biSizeImage (uncompressed)
-    // biXPels/biYPels/biClrUsed/biClrImportant already zero
+    i32(0, 40)                              // biSize
+    i32(4, width); i32(8, height)
+    Bytes.putU16le(out, p + 12, 1)          // biPlanes
+    Bytes.putU16le(out, p + 14, 24)         // biBitCount
+    Bytes.putTag(out, p + 16, "MJPG")       // biCompression
+    i32(20, 3 * width * height)             // biSizeImage (uncompressed)
     p += 40
-    chunkHeader("LIST", moviSize.toInt)
-    val moviListStart = p // offset of 'movi' tag — idx1 offsets are
-    putTag(out, p, "movi"); p += 4 //      relative to this position
-    val offsets = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      offsets(i) = p - moviListStart
-      chunkHeader("00dc", frames(i).length)
-      System.arraycopy(frames(i), 0, out, p, frames(i).length)
-      p += frames(i).length + (frames(i).length & 1) // even alignment
-      i += 1
+    audio.foreach { a =>
+      list(4 + 64 + 24, "strl")
+      chunkHeader("strh", 56)
+      Bytes.putTag(out, p, "auds")          // fccType; fccHandler stays 0
+      i32(20, blockAlign)                   // dwScale = nBlockAlign
+      i32(24, a.sampleRate * blockAlign)    // dwRate = nAvgBytesPerSec
+      i32(32, a.frames)                     // dwLength (sample-frames)
+      i32(40, -1)                           // dwQuality (default)
+      i32(44, blockAlign)                   // dwSampleSize
+      p += 56
+      chunkHeader("strf", 16)
+      AudioCodec.writePcmFormat(out, p, a)
+      p += 16
+    }
+    list(moviSize.toInt, "movi")
+    val moviListStart = p - 4 // idx1 offsets are relative to the 'movi' tag
+    val offsets = new Array[Int](chunks.length)
+    var k = 0
+    while (k < chunks.length) {
+      val (id, sz) = chunks(k)
+      val i = k / (1 + audio.size) // the video frame this chunk rides with
+      offsets(k) = p - moviListStart
+      chunkHeader(id, sz)
+      if (id == "00dc") System.arraycopy(frames(i), 0, out, p, sz)
+      else audio.foreach(a => AudioCodec.packS16(a.samples,
+        sliceStart(i) * a.channels, sliceStart(i + 1) * a.channels, out, p))
+      p += sz + (sz & 1) // even alignment
+      k += 1
     }
     chunkHeader("idx1", idx1Size.toInt)
-    i = 0
-    while (i < n) {
-      putTag(out, p, "00dc")
-      putIntLE(out, p + 4, 0x10)          // AVIIF_KEYFRAME
-      putIntLE(out, p + 8, offsets(i))
-      putIntLE(out, p + 12, frames(i).length)
+    k = 0
+    while (k < chunks.length) {
+      val (id, sz) = chunks(k)
+      Bytes.putTag(out, p, id)
+      i32(4, if (id == "00dc") 0x10 else 0) // AVIIF_KEYFRAME on video
+      i32(8, offsets(k))
+      i32(12, sz)
       p += 16
-      i += 1
+      k += 1
     }
     out
   }
 
-  /** Encode an A/V file: MJPEG frames + an interleaved 16-bit PCM audio
-    * stream ([[AudioCodec.Audio]] supplies the payload — the WAV lane's
-    * clip type, muxed instead of wrapped). Canonical two-stream form:
-    * a second 'strl' (strh 'auds' + 16-byte PCMWAVEFORMAT strf with the
-    * MS PCM conventions dwScale = nBlockAlign, dwRate = nAvgBytesPerSec,
-    * dwSampleSize = nBlockAlign, dwLength = sample-frames), and the
-    * audio split into one '01wb' chunk per video frame, interleaved
-    * 00dc/01wb the way a real muxer keeps streams seekable; idx1 indexes
-    * both streams' chunks in file order. Deterministic byte-for-byte
-    * (AviCodecSpec pins a hand-built A/V file).
+  /** The A/V form of [[encodeAvi]]: MJPEG frames + an interleaved 16-bit
+    * PCM stream ([[AudioCodec.Audio]] supplies the payload — the WAV
+    * lane's clip type, muxed instead of wrapped).
     */
   def encodeAviAv(
       width: Int, height: Int, fps: Int,
-      frames: Seq[Array[Byte]], audio: AudioCodec.Audio): Array[Byte] = {
-    require(width >= 1 && width <= 0xffff && height >= 1 && height <= 0xffff,
-      s"AVI: bad dimensions $width x $height")
-    require(width.toLong * height <= MaxPixels,
-      s"AVI: $width x $height exceeds MaxPixels")
-    require(fps >= 1 && fps <= MaxRate, s"AVI: bad fps $fps")
-    require(frames.nonEmpty && frames.length <= MaxFrames,
-      s"AVI: ${frames.length} frames")
-    require(audio.sampleRate >= 1 && audio.sampleRate <= AudioCodec.MaxRate,
-      s"AVI: bad audio rate ${audio.sampleRate}")
-    require(audio.channels <= AudioCodec.MaxChannels,
-      s"AVI: ${audio.channels} channels")
-    val n = frames.length
-    val blockAlign = 2 * audio.channels
-    val byteRate = audio.sampleRate * blockAlign
-    val aFrames = audio.frames
-    require(2L * audio.samples.length <= MaxAudioBytes, "AVI: audio too long")
-    // even split of the audio across n interleaved '01wb' chunks: chunk i
-    // carries sample-frames [aFrames·i/n, aFrames·(i+1)/n)
-    def sliceStart(i: Int): Int = ((aFrames.toLong * i) / n).toInt
-    val hdrlSize = 4 + (8 + 56) +
-      (8 + 4 + (8 + 56) + (8 + 40)) + // video strl
-      (8 + 4 + (8 + 56) + (8 + 16))   // audio strl (PCMWAVEFORMAT strf)
-    val moviPayload =
-      frames.map(f => 8L + f.length + (f.length & 1)).sum +
-        (0 until n).map { i =>
-          val b = (sliceStart(i + 1) - sliceStart(i)).toLong * blockAlign
-          8L + b + (b & 1)
-        }.sum
-    val moviSize = 4 + moviPayload
-    val idx1Size = 16L * (2 * n)
-    val riffSize = 4L + (8 + hdrlSize) + (8 + moviSize) + (8 + idx1Size)
-    require(riffSize + 8 <= Int.MaxValue, "AVI: file exceeds RIFF 1.0 bounds")
-    val out = new Array[Byte]((riffSize + 8).toInt)
-    var p = 0
-    def chunkHeader(t: String, sz: Int): Unit = {
-      putTag(out, p, t); putIntLE(out, p + 4, sz); p += 8
-    }
-    putTag(out, 0, "RIFF"); putIntLE(out, 4, riffSize.toInt)
-    putTag(out, 8, "AVI "); p = 12
-    chunkHeader("LIST", hdrlSize); putTag(out, p, "hdrl"); p += 4
-    chunkHeader("avih", 56)
-    putIntLE(out, p, 1000000 / fps)
-    putIntLE(out, p + 12, 0x10)           // AVIF_HASINDEX
-    putIntLE(out, p + 16, n)              // dwTotalFrames
-    putIntLE(out, p + 24, 2)              // dwStreams
-    putIntLE(out, p + 32, width)
-    putIntLE(out, p + 36, height)
-    p += 56
-    // ---- video strl (same as encodeAvi) ----
-    chunkHeader("LIST", 4 + 64 + 48); putTag(out, p, "strl"); p += 4
-    chunkHeader("strh", 56)
-    putTag(out, p, "vids"); putTag(out, p + 4, "MJPG")
-    putIntLE(out, p + 20, 1)              // dwScale
-    putIntLE(out, p + 24, fps)            // dwRate
-    putIntLE(out, p + 32, n)              // dwLength
-    putIntLE(out, p + 40, -1)             // dwQuality (default)
-    putIntLE(out, p + 44, 0)              // dwSampleSize
-    putShortLE(out, p + 52, width); putShortLE(out, p + 54, height)
-    p += 56
-    chunkHeader("strf", 40)
-    putIntLE(out, p, 40)
-    putIntLE(out, p + 4, width)
-    putIntLE(out, p + 8, height)
-    putShortLE(out, p + 12, 1)
-    putShortLE(out, p + 14, 24)
-    putTag(out, p + 16, "MJPG")
-    putIntLE(out, p + 20, 3 * width * height)
-    p += 40
-    // ---- audio strl ----
-    chunkHeader("LIST", 4 + 64 + 24); putTag(out, p, "strl"); p += 4
-    chunkHeader("strh", 56)
-    putTag(out, p, "auds")                // fccType; fccHandler stays 0
-    putIntLE(out, p + 20, blockAlign)     // dwScale = nBlockAlign
-    putIntLE(out, p + 24, byteRate)       // dwRate = nAvgBytesPerSec
-    putIntLE(out, p + 32, aFrames)        // dwLength (sample-frames)
-    putIntLE(out, p + 40, -1)             // dwQuality (default)
-    putIntLE(out, p + 44, blockAlign)     // dwSampleSize
-    p += 56
-    chunkHeader("strf", 16)               // PCMWAVEFORMAT
-    putShortLE(out, p, 1)                 // wFormatTag = PCM
-    putShortLE(out, p + 2, audio.channels)
-    putIntLE(out, p + 4, audio.sampleRate)
-    putIntLE(out, p + 8, byteRate)
-    putShortLE(out, p + 12, blockAlign)
-    putShortLE(out, p + 14, 16)           // wBitsPerSample
-    p += 16
-    // ---- movi: interleaved 00dc / 01wb ----
-    chunkHeader("LIST", moviSize.toInt)
-    val moviListStart = p
-    putTag(out, p, "movi"); p += 4
-    val ids = new Array[String](2 * n)
-    val offsets = new Array[Int](2 * n)
-    val sizes = new Array[Int](2 * n)
-    var i = 0
-    while (i < n) {
-      ids(2 * i) = "00dc"; offsets(2 * i) = p - moviListStart
-      sizes(2 * i) = frames(i).length
-      chunkHeader("00dc", frames(i).length)
-      System.arraycopy(frames(i), 0, out, p, frames(i).length)
-      p += frames(i).length + (frames(i).length & 1)
-      val s0 = sliceStart(i); val s1 = sliceStart(i + 1)
-      val ab = (s1 - s0) * blockAlign
-      ids(2 * i + 1) = "01wb"; offsets(2 * i + 1) = p - moviListStart
-      sizes(2 * i + 1) = ab
-      chunkHeader("01wb", ab)
-      var k = s0 * audio.channels
-      while (k < s1 * audio.channels) {
-        putShortLE(out, p, audio.samples(k) & 0xffff)
-        p += 2; k += 1
-      }
-      p += ab & 1
-      i += 1
-    }
-    chunkHeader("idx1", idx1Size.toInt)
-    i = 0
-    while (i < 2 * n) {
-      putTag(out, p, ids(i))
-      putIntLE(out, p + 4, if (ids(i) == "00dc") 0x10 else 0)
-      putIntLE(out, p + 8, offsets(i))
-      putIntLE(out, p + 12, sizes(i))
-      p += 16
-      i += 1
-    }
-    out
-  }
+      frames: Seq[Array[Byte]], audio: AudioCodec.Audio): Array[Byte] =
+    encodeAvi(width, height, fps, frames, Some(audio))
 
   /** Magic sniff: RIFF/AVI container. */
   def sniff(bytes: Array[Byte]): Boolean =
-    bytes.length >= 12 && tag(bytes, 0) == "RIFF" && tag(bytes, 8) == "AVI "
+    bytes.length >= 12 && Bytes.tag(bytes, 0, 12) == "RIFF" &&
+      Bytes.tag(bytes, 8, 12) == "AVI "
 
   /** Single-stream view of [[decodeAviFull]]: video metadata + frame
     * payloads (audio, if the file carries a stream, is parsed, validated
@@ -363,77 +236,40 @@ object AviCodec {
     * '01wb' byte total matching the declared sample-frame length.
     */
   def decodeAviFull(bytes: Array[Byte]): AviContent = {
-    require(bytes.length >= 24 && tag(bytes, 0) == "RIFF" &&
-      tag(bytes, 8) == "AVI ", "not a RIFF/AVI payload")
-    val riffSize = getIntLE(bytes, 4)
+    require(bytes.length >= 24 && sniff(bytes), "not a RIFF/AVI payload")
+    val riffSize = Bytes.i32le(bytes, 4, bytes.length)
     require(riffSize >= 4 && 8L + riffSize <= bytes.length,
       s"AVI: RIFF size $riffSize overruns payload")
+    def i32(off: Int, end: Int): Int = Bytes.i32le(bytes, off, end)
+    def walk(from: Int, end: Int, scope: String) =
+      AudioCodec.chunks(bytes, from, end, "AVI", scope)
+    def listTag(c: AudioCodec.Chunk): String =
+      if (c.id == "LIST" && c.size >= 4) Bytes.tag(bytes, c.data, c.end) else ""
     var w = 0; var h = 0; var rate = 0; var scale = 0
     var totalFrames = -1; var strhLength = -1
     var nStreams = 0
     var haveAvih = false; var haveStrh = false; var haveStrf = false
     // audio stream state (nStreams == 2)
-    var aChannels = 0; var aRate = 0; var aByteRate = 0
-    var aBlockAlign = 0; var aLength = -1
-    var haveAStrh = false; var haveAStrf = false
+    var aFmt: AudioCodec.PcmFormat = null
+    var aByteRate = 0; var aBlockAlign = 0; var aLength = -1
+    var haveAStrh = false
     var strlSeen = 0
-    val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    val audioChunks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    // every indexed chunk (video AND audio) in file order, for idx1
-    val chunkIds = scala.collection.mutable.ArrayBuffer.empty[String]
-    val chunkPos = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val chunkSize = scala.collection.mutable.ArrayBuffer.empty[Int]
+    // every indexed stream chunk (video AND audio) in file order, for idx1
+    val streamChunks = scala.collection.mutable.ArrayBuffer.empty[AudioCodec.Chunk]
     var moviListStart = -1
-    var idx1: Array[Byte] = null
+    var idx1: AudioCodec.Chunk = null
 
-    def walkHdrl(from: Int, to: Int): Unit = {
-      var pos = from
-      while (pos + 8 <= to) {
-        val id = tag(bytes, pos)
-        val sz = getIntLE(bytes, pos + 4)
-        require(sz >= 0 && pos + 8L + sz <= to,
-          s"AVI: chunk '$id' size $sz overruns hdrl")
-        if (id == "avih") {
-          require(sz >= 56, s"AVI: avih size $sz")
-          nStreams = getIntLE(bytes, pos + 8 + 24)
-          require(nStreams == 1 || nStreams == 2,
-            s"AVI: $nStreams streams (supported: 1 video, optional audio)")
-          totalFrames = getIntLE(bytes, pos + 8 + 16)
-          w = getIntLE(bytes, pos + 8 + 32)
-          h = getIntLE(bytes, pos + 8 + 36)
-          require(w >= 1 && w <= MaxDim && h >= 1 && h <= MaxDim,
-            s"AVI: bad dimensions $w x $h")
-          require(w.toLong * h <= MaxPixels, s"AVI: $w x $h exceeds MaxPixels")
-          require(totalFrames >= 1 && totalFrames <= MaxFrames,
-            s"AVI: bad frame count $totalFrames")
-          haveAvih = true
-        } else if (id == "LIST" && sz >= 4 && tag(bytes, pos + 8) == "strl") {
-          require(haveAvih, "AVI: strl before avih")
-          require(strlSeen < nStreams,
-            s"AVI: more strl lists than the $nStreams declared streams")
-          walkStrl(pos + 12, pos + 8 + sz, strlSeen)
-          strlSeen += 1
-        }
-        pos += 8 + sz + (sz & 1)
-      }
-    }
-
-    def walkStrl(from: Int, to: Int, streamIdx: Int): Unit = {
-      var pos = from
-      while (pos + 8 <= to) {
-        val id = tag(bytes, pos)
-        val sz = getIntLE(bytes, pos + 4)
-        require(sz >= 0 && pos + 8L + sz <= to,
-          s"AVI: chunk '$id' size $sz overruns strl")
-        if (id == "strh" && streamIdx == 0) {
-          require(sz >= 56, s"AVI: strh size $sz")
-          require(tag(bytes, pos + 8) == "vids",
-            "AVI: stream 0 is not video")
-          require(tag(bytes, pos + 12) == "MJPG",
-            s"AVI: handler '${tag(bytes, pos + 12)}' not MJPG")
-          scale = getIntLE(bytes, pos + 8 + 20)
-          rate = getIntLE(bytes, pos + 8 + 24)
-          strhLength = getIntLE(bytes, pos + 8 + 32)
+    def walkStrl(c: AudioCodec.Chunk, streamIdx: Int): Unit =
+      walk(c.data + 4, c.end, "strl").foreach { f =>
+        val (d, e) = (f.data, f.end)
+        if (f.id == "strh" && streamIdx == 0) {
+          require(f.size >= 56, s"AVI: strh size ${f.size}")
+          require(Bytes.tag(bytes, d, e) == "vids", "AVI: stream 0 is not video")
+          val handler = Bytes.tag(bytes, d + 4, e)
+          require(handler == "MJPG", s"AVI: handler '$handler' not MJPG")
+          scale = i32(d + 20, e)
+          rate = i32(d + 24, e)
+          strhLength = i32(d + 32, e)
           require(scale >= 1 && rate >= 1 && rate <= MaxRate,
             s"AVI: bad rate/scale $rate/$scale")
           // fps = rate/scale integer-divides to 0 when scale > rate — a
@@ -442,26 +278,24 @@ object AviCodec {
           require(scale <= rate,
             s"AVI: scale $scale > rate $rate (sub-1fps stream)")
           haveStrh = true
-        } else if (id == "strf" && streamIdx == 0) {
+        } else if (f.id == "strf" && streamIdx == 0) {
           require(haveStrh, "AVI: strf before strh")
-          require(sz >= 40, s"AVI: strf size $sz")
-          require(getIntLE(bytes, pos + 8 + 4) == w &&
-            getIntLE(bytes, pos + 8 + 8) == h,
+          require(f.size >= 40, s"AVI: strf size ${f.size}")
+          require(i32(d + 4, e) == w && i32(d + 8, e) == h,
             "AVI: strf dimensions disagree with avih")
-          require(tag(bytes, pos + 8 + 16) == "MJPG",
+          require(Bytes.tag(bytes, d + 16, e) == "MJPG",
             "AVI: strf compression not MJPG")
           haveStrf = true
-        } else if (id == "strh" && streamIdx == 1) {
-          require(sz >= 56, s"AVI: strh size $sz")
-          require(tag(bytes, pos + 8) == "auds",
-            "AVI: stream 1 is not audio")
+        } else if (f.id == "strh" && streamIdx == 1) {
+          require(f.size >= 56, s"AVI: strh size ${f.size}")
+          require(Bytes.tag(bytes, d, e) == "auds", "AVI: stream 1 is not audio")
           // MS PCM conventions: dwScale = nBlockAlign, dwRate =
           // nAvgBytesPerSec, dwLength = sample-frames, dwSampleSize =
           // nBlockAlign; cross-checked against strf below
-          aBlockAlign = getIntLE(bytes, pos + 8 + 20)
-          aByteRate = getIntLE(bytes, pos + 8 + 24)
-          aLength = getIntLE(bytes, pos + 8 + 32)
-          val sampleSize = getIntLE(bytes, pos + 8 + 44)
+          aBlockAlign = i32(d + 20, e)
+          aByteRate = i32(d + 24, e)
+          aLength = i32(d + 32, e)
+          val sampleSize = i32(d + 44, e)
           require(aBlockAlign >= 1 && aByteRate >= 1,
             s"AVI: bad audio scale/rate $aBlockAlign/$aByteRate")
           require(aLength >= 0 && aLength.toLong * aBlockAlign <= MaxAudioBytes,
@@ -469,134 +303,132 @@ object AviCodec {
           require(sampleSize == aBlockAlign,
             s"AVI: audio sampleSize $sampleSize != blockAlign $aBlockAlign")
           haveAStrh = true
-        } else if (id == "strf" && streamIdx == 1) {
+        } else if (f.id == "strf" && streamIdx == 1) {
           require(haveAStrh, "AVI: audio strf before strh")
-          require(sz >= 16, s"AVI: audio strf size $sz")
-          require(getShortLE(bytes, pos + 8) == 1,
-            "AVI: audio format not PCM")
-          aChannels = getShortLE(bytes, pos + 8 + 2)
-          aRate = getIntLE(bytes, pos + 8 + 4)
-          val byteRate = getIntLE(bytes, pos + 8 + 8)
-          val blockAlign = getShortLE(bytes, pos + 8 + 12)
-          val bits = getShortLE(bytes, pos + 8 + 14)
-          require(aChannels >= 1 && aChannels <= AudioCodec.MaxChannels,
-            s"AVI: $aChannels audio channels")
-          require(aRate >= 1 && aRate <= AudioCodec.MaxRate,
-            s"AVI: bad audio rate $aRate")
-          require(bits == 16, s"AVI: $bits-bit audio (16-bit PCM only)")
-          require(blockAlign == 2 * aChannels,
-            s"AVI: blockAlign $blockAlign != 2 x $aChannels channels")
-          require(blockAlign == aBlockAlign && byteRate == aByteRate,
+          require(f.size >= 16, s"AVI: audio strf size ${f.size}")
+          val fmt = AudioCodec.readPcmFormat(bytes, d, e)
+          require(fmt.formatTag == 1, "AVI: audio format not PCM")
+          require(fmt.channels >= 1 && fmt.channels <= AudioCodec.MaxChannels,
+            s"AVI: ${fmt.channels} audio channels")
+          require(fmt.rate >= 1 && fmt.rate <= AudioCodec.MaxRate,
+            s"AVI: bad audio rate ${fmt.rate}")
+          require(fmt.bits == 16, s"AVI: ${fmt.bits}-bit audio (16-bit PCM only)")
+          require(fmt.blockAlign == 2 * fmt.channels,
+            s"AVI: blockAlign ${fmt.blockAlign} != 2 x ${fmt.channels} channels")
+          require(fmt.blockAlign == aBlockAlign && fmt.byteRate == aByteRate,
             "AVI: audio strf disagrees with strh scale/rate")
-          require(byteRate == aRate * blockAlign,
-            s"AVI: byteRate $byteRate != rate x blockAlign")
-          haveAStrf = true
+          require(fmt.byteRate == fmt.rate * fmt.blockAlign,
+            s"AVI: byteRate ${fmt.byteRate} != rate x blockAlign")
+          aFmt = fmt
         }
-        pos += 8 + sz + (sz & 1)
       }
-    }
 
-    def walkMovi(from: Int, to: Int): Unit = {
-      var pos = from
-      while (pos + 8 <= to) {
-        val id = tag(bytes, pos)
-        val sz = getIntLE(bytes, pos + 4)
-        require(sz >= 0 && pos + 8L + sz <= to,
-          s"AVI: chunk '$id' size $sz overruns movi")
+    def walkHdrl(c: AudioCodec.Chunk): Unit =
+      walk(c.data + 4, c.end, "hdrl").foreach { f =>
+        if (f.id == "avih") {
+          val (d, e) = (f.data, f.end)
+          require(f.size >= 56, s"AVI: avih size ${f.size}")
+          nStreams = i32(d + 24, e)
+          require(nStreams == 1 || nStreams == 2,
+            s"AVI: $nStreams streams (supported: 1 video, optional audio)")
+          totalFrames = i32(d + 16, e)
+          w = i32(d + 32, e)
+          h = i32(d + 36, e)
+          require(w >= 1 && w <= MaxDim && h >= 1 && h <= MaxDim,
+            s"AVI: bad dimensions $w x $h")
+          require(w.toLong * h <= MaxPixels, s"AVI: $w x $h exceeds MaxPixels")
+          require(totalFrames >= 1 && totalFrames <= MaxFrames,
+            s"AVI: bad frame count $totalFrames")
+          haveAvih = true
+        } else if (listTag(f) == "strl") {
+          require(haveAvih, "AVI: strl before avih")
+          require(strlSeen < nStreams,
+            s"AVI: more strl lists than the $nStreams declared streams")
+          walkStrl(f, strlSeen)
+          strlSeen += 1
+        }
+      }
+
+    var nFrames = 0
+    def walkMovi(c: AudioCodec.Chunk): Unit =
+      walk(c.data + 4, c.end, "movi").foreach { f =>
         // 00dc = compressed video, 00db = uncompressed-convention tag some
         // writers still use for JPEG frames — accept both, like a player;
         // 01wb = stream-1 audio data
-        if (id == "00dc" || id == "00db") {
-          require(frames.length < MaxFrames, "AVI: too many frame chunks")
-          frames += java.util.Arrays.copyOfRange(bytes, pos + 8, pos + 8 + sz)
-          chunkIds += id; chunkPos += pos; chunkSize += sz
-        } else if (id == "01wb") {
-          require(nStreams == 2 && haveAStrf,
+        if (f.id == "00dc" || f.id == "00db") {
+          require(nFrames < MaxFrames, "AVI: too many frame chunks")
+          nFrames += 1
+          streamChunks += f
+        } else if (f.id == "01wb") {
+          require(nStreams == 2 && aFmt != null,
             "AVI: audio chunk without an audio stream")
-          audioChunks +=
-            java.util.Arrays.copyOfRange(bytes, pos + 8, pos + 8 + sz)
-          chunkIds += id; chunkPos += pos; chunkSize += sz
+          streamChunks += f
         }
-        pos += 8 + sz + (sz & 1)
       }
-    }
 
-    var pos = 12
-    val end = 8 + riffSize
-    while (pos + 8 <= end) {
-      val id = tag(bytes, pos)
-      val sz = getIntLE(bytes, pos + 4)
-      require(sz >= 0 && pos + 8L + sz <= end,
-        s"AVI: chunk '$id' size $sz overruns payload")
-      if (id == "LIST" && sz >= 4) {
-        tag(bytes, pos + 8) match {
-          case "hdrl" => walkHdrl(pos + 12, pos + 8 + sz)
-          case "movi" =>
-            require(haveAvih && haveStrh && haveStrf,
-              "AVI: movi before complete headers")
-            require(nStreams == 1 || (haveAStrh && haveAStrf),
-              "AVI: movi before complete audio headers")
-            moviListStart = pos + 8
-            walkMovi(pos + 12, pos + 8 + sz)
-          case _ => () // unknown LIST (INFO etc.) skipped
-        }
-      } else if (id == "idx1") {
-        idx1 = java.util.Arrays.copyOfRange(bytes, pos + 8, pos + 8 + sz)
+    walk(12, 8 + riffSize, "payload").foreach { c =>
+      listTag(c) match {
+        case "hdrl" => walkHdrl(c)
+        case "movi" =>
+          require(haveAvih && haveStrh && haveStrf,
+            "AVI: movi before complete headers")
+          require(nStreams == 1 || (haveAStrh && aFmt != null),
+            "AVI: movi before complete audio headers")
+          moviListStart = c.data
+          walkMovi(c)
+        case _ => if (c.id == "idx1") idx1 = c // unknown LISTs (INFO etc.) skipped
       }
-      pos += 8 + sz + (sz & 1)
     }
     require(haveAvih && haveStrh && haveStrf, "AVI: incomplete headers")
     require(moviListStart >= 0, "AVI: no movi list")
-    require(frames.length == totalFrames,
-      s"AVI: avih declares $totalFrames frames, movi carries ${frames.length}")
+    require(nFrames == totalFrames,
+      s"AVI: avih declares $totalFrames frames, movi carries $nFrames")
     require(strhLength == totalFrames,
       s"AVI: strh length $strhLength disagrees with avih $totalFrames")
     if (idx1 != null) {
-      require(idx1.length == 16 * chunkIds.length,
-        s"AVI: idx1 carries ${idx1.length / 16} entries for " +
-          s"${chunkIds.length} stream chunks")
-      var i = 0
-      while (i < chunkIds.length) {
-        require(tag(idx1, 16 * i) == chunkIds(i),
-          s"AVI: idx1 entry $i id '${tag(idx1, 16 * i)}' disagrees with " +
-            s"walked chunk '${chunkIds(i)}'")
+      require(idx1.size == 16 * streamChunks.length,
+        s"AVI: idx1 carries ${idx1.size / 16} entries for " +
+          s"${streamChunks.length} stream chunks")
+      streamChunks.iterator.zipWithIndex.foreach { case (c, i) =>
+        val e = idx1.data + 16 * i
+        val id = Bytes.tag(bytes, e, idx1.end)
+        require(id == c.id,
+          s"AVI: idx1 entry $i id '$id' disagrees with walked chunk '${c.id}'")
         // offsets are relative to the 'movi' fourcc position in the
         // canonical form; some writers emit absolute file offsets — a
         // tolerant reader accepts either, but the entry must point at
         // THIS chunk's header
-        val off = getIntLE(idx1, 16 * i + 8)
-        require(off == chunkPos(i) - moviListStart || off == chunkPos(i),
+        val off = i32(e + 8, idx1.end)
+        require(off == c.off - moviListStart || off == c.off,
           s"AVI: idx1 entry $i offset $off points at neither relative " +
-            s"${chunkPos(i) - moviListStart} nor absolute ${chunkPos(i)}")
-        require(getIntLE(idx1, 16 * i + 12) == chunkSize(i),
+            s"${c.off - moviListStart} nor absolute ${c.off}")
+        require(i32(e + 12, idx1.end) == c.size,
           s"AVI: idx1 entry $i size disagrees with chunk")
-        i += 1
       }
     }
+    def payload(c: AudioCodec.Chunk): Array[Byte] =
+      java.util.Arrays.copyOfRange(bytes, c.data, c.end)
+    val frames = streamChunks.iterator.filter(_.id != "01wb").map(payload).toIndexedSeq
+    val audioChunks = streamChunks.filter(_.id == "01wb")
     val audio =
       if (nStreams == 1) {
         require(audioChunks.isEmpty, "AVI: audio chunks in a 1-stream file")
         None
       } else {
-        val total = audioChunks.iterator.map(_.length.toLong).sum
+        require(aFmt != null, "AVI: incomplete audio headers")
+        val total = audioChunks.iterator.map(_.size.toLong).sum
         require(total == aLength.toLong * aBlockAlign,
           s"AVI: audio carries $total bytes, strh declares " +
             s"${aLength.toLong * aBlockAlign}")
+        // chunk sizes may be odd, so a sample can straddle two chunks
         val data = new Array[Byte](total.toInt)
         var o = 0
         audioChunks.foreach { c =>
-          System.arraycopy(c, 0, data, o, c.length); o += c.length
+          System.arraycopy(bytes, c.data, data, o, c.size); o += c.size
         }
-        val samples = new Array[Short](data.length / 2)
-        var k = 0
-        while (k < samples.length) {
-          samples(k) =
-            ((data(2 * k) & 0xff) | ((data(2 * k + 1) & 0xff) << 8)).toShort
-          k += 1
-        }
-        Some(AudioCodec.Audio(aRate, aChannels, samples))
+        Some(AudioCodec.Audio(aFmt.rate, aFmt.channels,
+          AudioCodec.unpackS16(data, 0, data.length / 2, data.length)))
       }
-    AviContent(AviMeta(w, h, rate, scale, totalFrames), frames.toIndexedSeq,
-      audio)
+    AviContent(AviMeta(w, h, rate, scale, totalFrames), frames, audio)
   }
 }

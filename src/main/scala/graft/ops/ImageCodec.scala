@@ -14,7 +14,9 @@ package graft.ops
   * directions — fixtures are genuinely encoded, the decode slot
   * genuinely parses — replacing the former deterministic stub for these
   * formats (the stub remains only as the documented fallback for
-  * payloads in formats this container cannot decode).
+  * payloads in formats this container cannot decode). Header fields are
+  * read under the [[Bytes]] bounds rule, so a malformed payload throws
+  * IllegalArgumentException only.
   *
   * Format notes:
   *  - PPM P6 (Netpbm): `P6` magic, whitespace-separated width, height,
@@ -122,31 +124,20 @@ object ImageCodec {
   /** Padded bytes per stored row: 3·w rounded up to a 4-byte multiple. */
   def bmpRowSize(width: Int): Int = (3 * width + 3) / 4 * 4
 
-  private def putIntLE(a: Array[Byte], off: Int, v: Int): Unit = {
-    a(off) = (v & 0xff).toByte
-    a(off + 1) = ((v >>> 8) & 0xff).toByte
-    a(off + 2) = ((v >>> 16) & 0xff).toByte
-    a(off + 3) = ((v >>> 24) & 0xff).toByte
-  }
-
-  private def getIntLE(a: Array[Byte], off: Int): Int =
-    (a(off) & 0xff) | ((a(off + 1) & 0xff) << 8) |
-      ((a(off + 2) & 0xff) << 16) | ((a(off + 3) & 0xff) << 24)
-
   def encodeBmp(img: Image): Array[Byte] = {
     val rowSize = bmpRowSize(img.width)
     val dataSize = rowSize * img.height
     val out = new Array[Byte](54 + dataSize)
     out(0) = 'B'; out(1) = 'M'
-    putIntLE(out, 2, out.length) // file size
-    putIntLE(out, 10, 54)        // pixel-data offset
-    putIntLE(out, 14, 40)        // BITMAPINFOHEADER size
-    putIntLE(out, 18, img.width)
-    putIntLE(out, 22, img.height) // positive: bottom-up
+    Bytes.putI32le(out, 2, out.length) // file size
+    Bytes.putI32le(out, 10, 54)        // pixel-data offset
+    Bytes.putI32le(out, 14, 40)        // BITMAPINFOHEADER size
+    Bytes.putI32le(out, 18, img.width)
+    Bytes.putI32le(out, 22, img.height) // positive: bottom-up
     out(26) = 1                   // planes
     out(28) = 24                  // bpp
-    putIntLE(out, 30, 0)          // BI_RGB
-    putIntLE(out, 34, dataSize)
+    Bytes.putI32le(out, 30, 0)          // BI_RGB
+    Bytes.putI32le(out, 34, dataSize)
     var y = 0
     while (y < img.height) {
       // stored bottom-up, BGR
@@ -167,22 +158,22 @@ object ImageCodec {
 
   def decodeBmp(bytes: Array[Byte]): Image = {
     require(bytes.length >= 54 && bytes(0) == 'B' && bytes(1) == 'M', "not a BMP")
-    val dataOff = getIntLE(bytes, 10)
+    val dataOff = Bytes.i32le(bytes, 10, bytes.length)
     // int32 header fields are UNTRUSTED: a negative/huge offset or width
     // must fail THESE requires (IllegalArgumentException → quarantine),
     // never escape as NegativeArraySize/IndexOutOfBounds downstream.
     require(dataOff >= 54 && dataOff <= bytes.length,
       s"BMP: pixel-data offset $dataOff out of range")
-    val dibSize = getIntLE(bytes, 14)
+    val dibSize = Bytes.i32le(bytes, 14, bytes.length)
     require(dibSize >= 40, s"BMP: DIB header $dibSize unsupported")
-    val w = getIntLE(bytes, 18)
+    val w = Bytes.i32le(bytes, 18, bytes.length)
     require(w > 0 && w <= MaxDim, s"BMP: bad width $w")
-    val hRaw = getIntLE(bytes, 22)
+    val hRaw = Bytes.i32le(bytes, 22, bytes.length)
     require(hRaw > 0, "BMP: top-down (negative height) unsupported")
     require(hRaw <= MaxDim, s"BMP: bad height $hRaw")
-    val bpp = (bytes(28) & 0xff) | ((bytes(29) & 0xff) << 8)
+    val bpp = Bytes.u16le(bytes, 28, bytes.length)
     require(bpp == 24, s"BMP: $bpp bpp unsupported (only 24)")
-    require(getIntLE(bytes, 30) == 0, "BMP: compressed payload unsupported")
+    require(Bytes.i32le(bytes, 30, bytes.length) == 0, "BMP: compressed payload unsupported")
     val rowSize = bmpRowSize(w)
     // size check in Long — MaxDim bounds keep every product exact
     require(bytes.length >= dataOff.toLong + rowSize.toLong * hRaw,
@@ -263,17 +254,15 @@ object ImageCodec {
     // LZW, LSB-first bit packing
     val clear = 1 << minCode
     val eoi = clear + 1
-    val lzw = new ArrayBufferByte()
+    val lzw = new Bytes.Buffer
     var acc = 0L
     var nbits = 0
     var width = minCode + 1
     var next = eoi + 1
-    val one = new Array[Byte](1)
     def put(code: Int): Unit = {
       acc |= code.toLong << nbits; nbits += width
       while (nbits >= 8) {
-        one(0) = (acc & 0xff).toByte; lzw.append(one, 0, 1)
-        acc >>>= 8; nbits -= 8
+        lzw.byte(acc.toInt); acc >>>= 8; nbits -= 8
       }
     }
     // decoder adds its entry one code LATER than the encoder, so the
@@ -319,20 +308,16 @@ object ImageCodec {
     put(cur)
     addEntry() // mirrors the decoder's entry for the final data code
     put(eoi)
-    if (nbits > 0) { one(0) = (acc & 0xff).toByte; lzw.append(one, 0, 1) }
+    if (nbits > 0) lzw.byte(acc.toInt)
     val code = lzw.result()
     // assemble: header + LSD + global table + descriptor + sub-blocks
     val tableN = 1 << tabBits
     val nBlocks = (code.length + 254) / 255
-    val out = new ArrayBufferByte()
-    out.append("GIF87a".getBytes("US-ASCII"), 0, 6)
-    def u16(v: Int): Unit = {
-      val b = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-      out.append(b, 0, 2)
-    }
-    u16(w); u16(h)
+    val out = new Bytes.Buffer
+    out.append("GIF87a".getBytes("US-ASCII"))
+    out.u16le(w); out.u16le(h)
     out.append(Array[Byte](
-      (0x80 | ((tabBits - 1) << 4) | (tabBits - 1)).toByte, 0, 0), 0, 3)
+      (0x80 | ((tabBits - 1) << 4) | (tabBits - 1)).toByte, 0, 0))
     val table = new Array[Byte](3 * tableN)
     i = 0
     while (i < palette.length) {
@@ -341,19 +326,19 @@ object ImageCodec {
       table(3 * i + 2) = palette(i).toByte
       i += 1
     }
-    out.append(table, 0, table.length)
-    out.append(Array[Byte](0x2c, 0, 0, 0, 0), 0, 5) // descriptor, left/top 0
-    u16(w); u16(h)
-    out.append(Array[Byte](0, minCode.toByte), 0, 2) // flags, LZW min code
+    out.append(table)
+    out.append(Array[Byte](0x2c, 0, 0, 0, 0)) // descriptor, left/top 0
+    out.u16le(w); out.u16le(h)
+    out.append(Array[Byte](0, minCode.toByte)) // flags, LZW min code
     var off = 0
     var b = 0
     while (b < nBlocks) {
       val sz = math.min(255, code.length - off)
-      out.append(Array[Byte](sz.toByte), 0, 1)
+      out.byte(sz)
       out.append(code, off, sz)
       off += sz; b += 1
     }
-    out.append(Array[Byte](0, 0x3b), 0, 2) // data terminator + trailer
+    out.append(Array[Byte](0, 0x3b)) // data terminator + trailer
     out.result()
   }
 
@@ -373,9 +358,9 @@ object ImageCodec {
     require(bytes.length >= 13, "GIF: truncated header")
     val magic = new String(bytes, 0, 6, "US-ASCII")
     require(magic == "GIF87a" || magic == "GIF89a", s"GIF: bad magic '$magic'")
-    def u16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
     var pos = 6
-    val sw = u16(pos); val sh = u16(pos + 2)
+    val sw = Bytes.u16le(bytes, pos, bytes.length)
+    val sh = Bytes.u16le(bytes, pos + 2, bytes.length)
     val packed = bytes(pos + 4) & 0xff
     pos += 7
     var palette: Array[Byte] = null
@@ -395,7 +380,8 @@ object ImageCodec {
           }) ()
         case 0x2c => // image descriptor
           require(pos + 10 <= bytes.length, "GIF: truncated image descriptor")
-          val w = u16(pos + 5); val h = u16(pos + 7)
+          val w = Bytes.u16le(bytes, pos + 5, bytes.length)
+          val h = Bytes.u16le(bytes, pos + 7, bytes.length)
           require(w > 0 && w <= MaxDim && h > 0 && h <= MaxDim,
             s"GIF: bad dimensions ${w}x$h (screen ${sw}x$sh)")
           // Area bound in Long BEFORE any w*h Int product: u16 dims always
@@ -417,7 +403,7 @@ object ImageCodec {
           require(minCode >= 2 && minCode <= 8, s"GIF: LZW min code $minCode")
           pos += 1
           // collect the sub-blocked code stream
-          val data = new ArrayBufferByte()
+          val data = new Bytes.Buffer
           while ({
             require(pos < bytes.length, "GIF: truncated image data")
             val sz = bytes(pos) & 0xff
@@ -444,22 +430,6 @@ object ImageCodec {
       }
     }
     throw new IllegalArgumentException("GIF: no image descriptor")
-  }
-
-  /** Minimal growable byte buffer (no dependency on collection builders
-    * in the per-row hot path).
-    */
-  private final class ArrayBufferByte {
-    private var buf = new Array[Byte](256)
-    private var len = 0
-    def append(src: Array[Byte], off: Int, n: Int): Unit = {
-      if (len + n > buf.length) {
-        val nb = new Array[Byte](math.max(buf.length * 2, len + n))
-        System.arraycopy(buf, 0, nb, 0, len); buf = nb
-      }
-      System.arraycopy(src, off, buf, len, n); len += n
-    }
-    def result(): Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
 
   /** GIF-variant LZW: codes read LSB-first at widths minCode+1..12,
@@ -540,15 +510,6 @@ object ImageCodec {
 
   private val PngSig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
 
-  private def getIntBE(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
-  private def putIntBE(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v >>> 24).toByte; b(off + 1) = (v >>> 16).toByte
-    b(off + 2) = (v >>> 8).toByte; b(off + 3) = v.toByte
-  }
-
   /** PNG encoder — critical chunks only (IHDR / one IDAT / IEND), 8-bit
     * truecolor (color type 2), filter 0 on every scanline, and a
     * hand-written zlib stream of STORED (uncompressed) deflate blocks
@@ -574,15 +535,15 @@ object ImageCodec {
     val out = new Array[Byte](8 + 25 + 12 + zLen + 12)
     System.arraycopy(PngSig, 0, out, 0, 8)
     // IHDR
-    putIntBE(out, 8, 13)
+    Bytes.putI32be(out, 8, 13)
     out(12) = 'I'; out(13) = 'H'; out(14) = 'D'; out(15) = 'R'
-    putIntBE(out, 16, w); putIntBE(out, 20, h)
+    Bytes.putI32be(out, 16, w); Bytes.putI32be(out, 20, h)
     out(24) = 8; out(25) = 2 // bit depth 8, truecolor; compression/filter/interlace 0
     val crc = new java.util.zip.CRC32()
     crc.update(out, 12, 4 + 13)
-    putIntBE(out, 29, crc.getValue.toInt)
+    Bytes.putI32be(out, 29, crc.getValue.toInt)
     // IDAT: zlib header + stored deflate blocks + adler32
-    putIntBE(out, 33, zLen)
+    Bytes.putI32be(out, 33, zLen)
     out(37) = 'I'; out(38) = 'D'; out(39) = 'A'; out(40) = 'T'
     var p = 41
     out(p) = 0x78; out(p + 1) = 0x01; p += 2 // zlib: deflate, 32K window, no dict
@@ -597,14 +558,14 @@ object ImageCodec {
     }
     val adler = new java.util.zip.Adler32()
     adler.update(raw, 0, raw.length)
-    putIntBE(out, p, adler.getValue.toInt); p += 4
+    Bytes.putI32be(out, p, adler.getValue.toInt); p += 4
     crc.reset(); crc.update(out, 37, 4 + zLen)
-    putIntBE(out, p, crc.getValue.toInt); p += 4
+    Bytes.putI32be(out, p, crc.getValue.toInt); p += 4
     // IEND
-    putIntBE(out, p, 0)
+    Bytes.putI32be(out, p, 0)
     out(p + 4) = 'I'; out(p + 5) = 'E'; out(p + 6) = 'N'; out(p + 7) = 'D'
     crc.reset(); crc.update(out, p + 4, 4)
-    putIntBE(out, p + 8, crc.getValue.toInt)
+    Bytes.putI32be(out, p + 8, crc.getValue.toInt)
     out
   }
 
@@ -631,21 +592,22 @@ object ImageCodec {
     var pos = 8
     var w = 0; var h = 0; var colorType = -1
     var seenIhdr = false; var seenIend = false
-    val idat = new ArrayBufferByte()
+    val idat = new Bytes.Buffer
     val crc = new java.util.zip.CRC32()
     while (!seenIend) {
       require(pos + 8 <= bytes.length, "PNG: truncated chunk header")
-      val len = getIntBE(bytes, pos)
+      val len = Bytes.i32be(bytes, pos, bytes.length)
       require(len >= 0, s"PNG: negative chunk length $len")
-      val ctype = new String(bytes, pos + 4, 4, "US-ASCII")
+      val ctype = Bytes.tag(bytes, pos + 4, bytes.length)
       require(pos + 8L + len + 4L <= bytes.length, s"PNG: truncated $ctype chunk")
+      val end = pos + 12 + len
       crc.reset(); crc.update(bytes, pos + 4, 4 + len)
-      require(crc.getValue.toInt == getIntBE(bytes, pos + 8 + len),
+      require(crc.getValue.toInt == Bytes.i32be(bytes, pos + 8 + len, end),
         s"PNG: CRC mismatch on $ctype")
       ctype match {
         case "IHDR" =>
           require(!seenIhdr && len == 13, "PNG: bad IHDR")
-          w = getIntBE(bytes, pos + 8); h = getIntBE(bytes, pos + 12)
+          w = Bytes.i32be(bytes, pos + 8, end); h = Bytes.i32be(bytes, pos + 12, end)
           require(w > 0 && w <= MaxDim && h > 0 && h <= MaxDim,
             s"PNG: bad dimensions ${w}x$h")
           require(w.toLong * h <= MaxPixels,
@@ -664,7 +626,7 @@ object ImageCodec {
         case "IEND" => seenIend = true
         case _ => () // ancillary chunks skipped (CRC still validated)
       }
-      pos += 12 + len
+      pos = end
     }
     require(seenIhdr, "PNG: missing IHDR")
     val bpp = colorType match { case 0 => 1; case 2 => 3; case _ => 4 }

@@ -36,8 +36,9 @@ import graft.ops.ImageCodec.{Image, MaxDim, MaxPixels}
   * [[ImageCodec.MaxPixels]] in Long BEFORE any allocation (progressive
   * additionally by [[MaxProgressivePixels]], since coefficient planes
   * persist across scans), every segment length and Huffman code
-  * bounds-checked; malformed or truncated payloads throw
-  * IllegalArgumentException only.
+  * bounds-checked, and every marker-segment field read under the
+  * [[Bytes]] bounds rule (never past its own segment); malformed or
+  * truncated payloads throw IllegalArgumentException only.
   */
 object JpegCodec {
 
@@ -179,7 +180,7 @@ object JpegCodec {
   // ------------------------------------------------------------- encode
 
   private final class BitWriter {
-    private val buf = new ArrayBufferByteJ()
+    private val buf = new Bytes.Buffer
     private var acc = 0L
     private var nbits = 0
     def put(code: Int, len: Int): Unit = {
@@ -187,30 +188,15 @@ object JpegCodec {
       nbits += len
       while (nbits >= 8) {
         val b = ((acc >>> (nbits - 8)) & 0xff).toInt
-        buf.appendByte(b.toByte)
-        if (b == 0xff) buf.appendByte(0x00) // byte stuffing
+        buf.byte(b)
+        if (b == 0xff) buf.byte(0x00) // byte stuffing
         nbits -= 8
       }
     }
     /** Pad to a byte boundary with 1-bits (T.81 F.1.2.3). */
     def align(): Unit = if (nbits > 0) put(0x7f, 8 - nbits)
-    def raw(b: Int): Unit = { align(); buf.appendByte(b.toByte) }
+    def raw(b: Int): Unit = { align(); buf.byte(b) }
     def result(): Array[Byte] = buf.result()
-  }
-
-  /** Growable byte buffer (the ImageCodec shape, local to this file). */
-  private final class ArrayBufferByteJ {
-    private var buf = new Array[Byte](1024)
-    private var len = 0
-    def appendByte(b: Byte): Unit = {
-      if (len == buf.length) {
-        val nb = new Array[Byte](buf.length * 2)
-        System.arraycopy(buf, 0, nb, 0, len); buf = nb
-      }
-      buf(len) = b; len += 1
-    }
-    def append(src: Array[Byte]): Unit = { var i = 0; while (i < src.length) { appendByte(src(i)); i += 1 } }
-    def result(): Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
 
   /** Bit category of a DC diff / AC value: 0 for 0, else bit length. */
@@ -361,43 +347,42 @@ object JpegCodec {
         Array(py, pcb, pcr)
       }
     val nc = planes.length
-    val out = new ArrayBufferByteJ()
-    def marker(m: Int): Unit = { out.appendByte(0xff.toByte); out.appendByte(m.toByte) }
-    def u16(v: Int): Unit = { out.appendByte((v >>> 8).toByte); out.appendByte(v.toByte) }
+    val out = new Bytes.Buffer
+    def marker(m: Int): Unit = { out.byte(0xff); out.byte(m) }
     marker(0xd8) // SOI
     // APP0 JFIF
-    marker(0xe0); u16(16)
-    out.append("JFIF".getBytes("US-ASCII")); out.appendByte(0)
-    out.appendByte(1); out.appendByte(1) // version 1.1
-    out.appendByte(0); u16(1); u16(1)    // no density units, 1:1
-    out.appendByte(0); out.appendByte(0) // no thumbnail
+    marker(0xe0); out.u16be(16)
+    out.append("JFIF".getBytes("US-ASCII")); out.byte(0)
+    out.byte(1); out.byte(1) // version 1.1
+    out.byte(0); out.u16be(1); out.u16be(1) // no density units, 1:1
+    out.byte(0); out.byte(0) // no thumbnail
     // DQT (zigzag order on the wire)
     def dqt(id: Int, q: Array[Int]): Unit = {
-      marker(0xdb); u16(2 + 65)
-      out.appendByte(id.toByte)
+      marker(0xdb); out.u16be(2 + 65)
+      out.byte(id)
       var k = 0
-      while (k < 64) { out.appendByte(q(ZigZag(k)).toByte); k += 1 }
+      while (k < 64) { out.byte(q(ZigZag(k))); k += 1 }
     }
     dqt(0, lumaQ)
     if (nc == 3) dqt(1, chromaQ)
     // SOF0
-    marker(0xc0); u16(8 + 3 * nc)
-    out.appendByte(8) // precision
-    u16(h); u16(w)
-    out.appendByte(nc.toByte)
+    marker(0xc0); out.u16be(8 + 3 * nc)
+    out.byte(8) // precision
+    out.u16be(h); out.u16be(w)
+    out.byte(nc)
     var c = 0
     while (c < nc) {
-      out.appendByte((c + 1).toByte)     // component id
-      out.appendByte(0x11)               // h=1, v=1 (4:4:4)
-      out.appendByte(if (c == 0) 0 else 1) // quant table
+      out.byte(c + 1)       // component id
+      out.byte(0x11)        // h=1, v=1 (4:4:4)
+      out.byte(if (c == 0) 0 else 1) // quant table
       c += 1
     }
     // DHT
     def dht(tcTh: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      marker(0xc4); u16(2 + 1 + 16 + vals.length)
-      out.appendByte(tcTh.toByte)
+      marker(0xc4); out.u16be(2 + 1 + 16 + vals.length)
+      out.byte(tcTh)
       var k = 0
-      while (k < 16) { out.appendByte(bits(k).toByte); k += 1 }
+      while (k < 16) { out.byte(bits(k)); k += 1 }
       out.append(vals)
     }
     dht(0x00, DcLumaBits, DcLumaVals)
@@ -406,17 +391,17 @@ object JpegCodec {
       dht(0x01, DcChromaBits, DcChromaVals)
       dht(0x11, AcChromaBits, AcChromaVals)
     }
-    if (restartInterval > 0) { marker(0xdd); u16(4); u16(restartInterval) }
+    if (restartInterval > 0) { marker(0xdd); out.u16be(4); out.u16be(restartInterval) }
     // SOS
-    marker(0xda); u16(6 + 2 * nc)
-    out.appendByte(nc.toByte)
+    marker(0xda); out.u16be(6 + 2 * nc)
+    out.byte(nc)
     c = 0
     while (c < nc) {
-      out.appendByte((c + 1).toByte)
-      out.appendByte(if (c == 0) 0x00 else 0x11) // DC/AC table ids
+      out.byte(c + 1)
+      out.byte(if (c == 0) 0x00 else 0x11) // DC/AC table ids
       c += 1
     }
-    out.appendByte(0); out.appendByte(63); out.appendByte(0) // Ss, Se, AhAl
+    out.byte(0); out.byte(63); out.byte(0) // Ss, Se, AhAl
     // entropy-coded data: 4:4:4 → MCU = one block per component
     val bw = new BitWriter()
     val mcusX = (w + 7) / 8
@@ -624,13 +609,9 @@ object JpegCodec {
     // EOB run that T.81 G.1.2.2 carries ACROSS blocks within a scan
     var coefStore: Array[Array[Int]] = null
     var pos = 2
-    def u16(off: Int): Int = {
-      require(off + 1 < bytes.length, "JPEG: truncated")
-      ((bytes(off) & 0xff) << 8) | (bytes(off + 1) & 0xff)
-    }
     while (pos < bytes.length) {
       require((bytes(pos) & 0xff) == 0xff, f"JPEG: expected marker at $pos")
-      var m = bytes(pos + 1) & 0xff
+      var m = Bytes.u8(bytes, pos + 1, bytes.length)
       pos += 2
       while (m == 0xff) { require(pos < bytes.length, "JPEG: truncated"); m = bytes(pos) & 0xff; pos += 1 }
       m match {
@@ -641,14 +622,18 @@ object JpegCodec {
         case 0x01 => () // TEM, standalone
         case rst if rst >= 0xd0 && rst <= 0xd7 => () // stray RST, standalone
         case _ =>
-          val len = u16(pos)
+          require(pos + 1 < bytes.length, "JPEG: truncated")
+          val len = Bytes.u16be(bytes, pos, bytes.length)
           require(len >= 2 && pos + len <= bytes.length, s"JPEG: bad segment length $len")
           val segEnd = pos + len
+          // every field read stays inside this segment
+          def segU8(off: Int): Int = Bytes.u8(bytes, off, segEnd)
+          def segU16(off: Int): Int = Bytes.u16be(bytes, off, segEnd)
           m match {
             case 0xdb => // DQT: one or more tables
               var p = pos + 2
               while (p < segEnd) {
-                val pqTq = bytes(p) & 0xff
+                val pqTq = segU8(p)
                 require((pqTq >> 4) == 0, "JPEG: 16-bit quant tables unsupported")
                 val tq = pqTq & 0x0f
                 require(tq < 4, s"JPEG: quant table id $tq")
@@ -667,7 +652,7 @@ object JpegCodec {
             case 0xc4 => // DHT: one or more tables
               var p = pos + 2
               while (p < segEnd) {
-                val tcTh = bytes(p) & 0xff
+                val tcTh = segU8(p)
                 val tc = tcTh >> 4; val th = tcTh & 0x0f
                 require(tc <= 1 && th < 4, s"JPEG: DHT class/id $tcTh")
                 require(p + 17 <= segEnd, "JPEG: truncated DHT")
@@ -684,24 +669,24 @@ object JpegCodec {
             case sof0 if sof0 == 0xc0 || sof0 == 0xc2 => // baseline / progressive
               require(comps == null, "JPEG: multiple SOF")
               progressive = sof0 == 0xc2
-              require((bytes(pos + 2) & 0xff) == 8, "JPEG: only 8-bit precision")
-              h = u16(pos + 3); w = u16(pos + 5)
+              require(segU8(pos + 2) == 8, "JPEG: only 8-bit precision")
+              h = segU16(pos + 3); w = segU16(pos + 5)
               require(w > 0 && w <= MaxDim && h > 0 && h <= MaxDim,
                 s"JPEG: bad dimensions ${w}x$h")
               require(w.toLong * h <= MaxPixels,
                 s"JPEG: pixel count ${w.toLong * h} exceeds $MaxPixels")
               require(!progressive || w.toLong * h <= MaxProgressivePixels,
                 s"JPEG: progressive pixel count ${w.toLong * h} exceeds $MaxProgressivePixels")
-              val nc = bytes(pos + 7) & 0xff
+              val nc = segU8(pos + 7)
               require(nc == 1 || nc == 3, s"JPEG: $nc components unsupported")
               comps = Array.tabulate(nc) { ci =>
                 val o = pos + 8 + 3 * ci
-                val id = bytes(o) & 0xff
-                val hv = bytes(o + 1) & 0xff
+                val id = segU8(o)
+                val hv = segU8(o + 1)
                 val hs = hv >> 4; val vs = hv & 0x0f
                 require(hs >= 1 && hs <= 2 && vs >= 1 && vs <= 2,
                   s"JPEG: sampling ${hs}x$vs unsupported")
-                val tq = bytes(o + 2) & 0xff
+                val tq = segU8(o + 2)
                 require(tq < 4, s"JPEG: quant id $tq")
                 Comp(id, if (nc == 1) 1 else hs, if (nc == 1) 1 else vs, tq)
               }
@@ -717,25 +702,26 @@ object JpegCodec {
               throw new IllegalArgumentException(
                 f"JPEG: SOF$sof%x (extended/lossless/arithmetic) unsupported")
             case 0xdd =>
-              dri = u16(pos + 2)
+              dri = segU16(pos + 2)
             case 0xda => // SOS → entropy-coded data follows
               require(comps != null, "JPEG: SOS before SOF")
-              val ns = bytes(pos + 2) & 0xff
+              val ns = segU8(pos + 2)
               require(ns >= 1 && ns <= comps.length, s"JPEG: $ns scan components")
               val scanComps = new Array[Comp](ns)
               var k = 0
               while (k < ns) {
-                val cid = bytes(pos + 3 + 2 * k) & 0xff
-                val tdta = bytes(pos + 4 + 2 * k) & 0xff
+                val cid = segU8(pos + 3 + 2 * k)
+                val tdta = segU8(pos + 4 + 2 * k)
                 val comp = comps.find(_.id == cid).getOrElse(
                   throw new IllegalArgumentException(s"JPEG: SOS names unknown component $cid"))
                 comp.td = tdta >> 4; comp.ta = tdta & 0x0f
+                require(comp.td < 4 && comp.ta < 4, f"JPEG: SOS table selectors 0x$tdta%02x")
                 scanComps(k) = comp
                 k += 1
               }
-              val ss = bytes(pos + 3 + 2 * ns) & 0xff
-              val se = bytes(pos + 4 + 2 * ns) & 0xff
-              val ahAl = bytes(pos + 5 + 2 * ns) & 0xff
+              val ss = segU8(pos + 3 + 2 * ns)
+              val se = segU8(pos + 4 + 2 * ns)
+              val ahAl = segU8(pos + 5 + 2 * ns)
               if (!progressive) {
                 require(ns == comps.length, "JPEG: partial sequential scans unsupported")
                 return decodeScan(bytes, segEnd, w, h, comps, quant, dcTabs, acTabs, dri)

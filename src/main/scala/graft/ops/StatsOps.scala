@@ -736,24 +736,17 @@ object StatsOps {
         count(lit(1)).as("n_days"),
         expr("hll_sketch_estimate(hll_union_agg(sk))").as("est_users"))
 
-  /** Binary KLL-sketch union as a typed [[Aggregator]]: rows are
-    * SERIALIZED sketches (one per upstream partition×group, never one per
-    * event), so a merge deserializes O(partitions) sketches, not O(rows).
-    * Commutative/associative — Spark may apply it partial+final in any
-    * order, which is exactly the sketch contract.
+  /** Binary sketch union as a typed [[Aggregator]]: rows are SERIALIZED
+    * sketches (one per upstream partition×group, never one per event), so
+    * a merge deserializes O(partitions) sketches, not O(rows). `union`
+    * merges two non-empty serialized sketches; the empty array is the
+    * zero. Commutative/associative — Spark may apply it partial+final in
+    * any order, which is exactly the sketch contract.
     */
-  private object KllMergeAgg
+  private final class SketchUnionAgg(union: (Array[Byte], Array[Byte]) => Array[Byte])
       extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    import org.apache.datasketches.kll.KllDoublesSketch
-    import org.apache.datasketches.memory.Memory
     private def merge2(x: Array[Byte], y: Array[Byte]): Array[Byte] =
-      if (x.isEmpty) y
-      else if (y.isEmpty) x
-      else {
-        val a = KllDoublesSketch.heapify(Memory.wrap(x))
-        a.merge(KllDoublesSketch.heapify(Memory.wrap(y)))
-        a.toByteArray
-      }
+      if (x.isEmpty) y else if (y.isEmpty) x else union(x, y)
     override def zero: Array[Byte] = Array.emptyByteArray
     override def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] = merge2(b, a)
     override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = merge2(b1, b2)
@@ -761,6 +754,15 @@ object StatsOps {
     override def bufferEncoder = org.apache.spark.sql.Encoders.BINARY
     override def outputEncoder = org.apache.spark.sql.Encoders.BINARY
   }
+
+  /** KLL quantile-sketch union. */
+  private val KllMergeAgg = new SketchUnionAgg({ (x, y) =>
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
+    val a = KllDoublesSketch.heapify(Memory.wrap(x))
+    a.merge(KllDoublesSketch.heapify(Memory.wrap(y)))
+    a.toByteArray
+  })
 
   /** Mergeable QUANTILE rollup — the [[hllPartialUnion]] discipline for
     * percentiles: per-day KLL(200) sketches of event value, unioned per
@@ -885,29 +887,15 @@ object StatsOps {
         col("p50_cent"), col("p95_cent"))
   }
 
-  /** Binary Theta-sketch union — same shape as [[KllMergeAgg]]: rows are
-    * serialized per-partition sketches, merges cost O(partitions).
-    */
-  private object ThetaUnionAgg
-      extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
+  /** Theta-sketch union ([[SketchUnionAgg]]). */
+  private val ThetaUnionAgg = new SketchUnionAgg({ (x, y) =>
     import org.apache.datasketches.theta.{SetOperation, Sketches}
     import org.apache.datasketches.memory.Memory
-    private def merge2(x: Array[Byte], y: Array[Byte]): Array[Byte] =
-      if (x.isEmpty) y
-      else if (y.isEmpty) x
-      else {
-        val u = SetOperation.builder().buildUnion()
-        u.union(Sketches.wrapSketch(Memory.wrap(x)))
-        u.union(Sketches.wrapSketch(Memory.wrap(y)))
-        u.getResult.toByteArray
-      }
-    override def zero: Array[Byte] = Array.emptyByteArray
-    override def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] = merge2(b, a)
-    override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = merge2(b1, b2)
-    override def finish(r: Array[Byte]): Array[Byte] = r
-    override def bufferEncoder = org.apache.spark.sql.Encoders.BINARY
-    override def outputEncoder = org.apache.spark.sql.Encoders.BINARY
-  }
+    val u = SetOperation.builder().buildUnion()
+    u.union(Sketches.wrapSketch(Memory.wrap(x)))
+    u.union(Sketches.wrapSketch(Memory.wrap(y)))
+    u.getResult.toByteArray
+  })
 
   /** Welch's t-test between two user cohorts (A/B experiment read-out):
     * purchase values split by user-id parity, compared on mean with
@@ -1466,31 +1454,18 @@ object StatsOps {
           count(lit(1))).as("mae"))
   }
 
-  /** Binary frequent-items (Misra-Gries) sketch union — the [[KllMergeAgg]]
-    * shape for heavy hitters: rows are serialized per-partition sketches.
+  /** Frequent-items (Misra-Gries) sketch union ([[SketchUnionAgg]]) for
+    * heavy hitters.
     */
-  private object FreqUnionAgg
-      extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
+  private val FreqUnionAgg = new SketchUnionAgg({ (x, y) =>
     import org.apache.datasketches.frequencies.ItemsSketch
     import org.apache.datasketches.common.ArrayOfStringsSerDe
     import org.apache.datasketches.memory.Memory
-    private def merge2(x: Array[Byte], y: Array[Byte]): Array[Byte] = {
-      val serde = new ArrayOfStringsSerDe()
-      if (x.isEmpty) y
-      else if (y.isEmpty) x
-      else {
-        val a = ItemsSketch.getInstance[String](Memory.wrap(x), serde)
-        a.merge(ItemsSketch.getInstance[String](Memory.wrap(y), serde))
-        a.toByteArray(serde)
-      }
-    }
-    override def zero: Array[Byte] = Array.emptyByteArray
-    override def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] = merge2(b, a)
-    override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = merge2(b1, b2)
-    override def finish(r: Array[Byte]): Array[Byte] = r
-    override def bufferEncoder = org.apache.spark.sql.Encoders.BINARY
-    override def outputEncoder = org.apache.spark.sql.Encoders.BINARY
-  }
+    val serde = new ArrayOfStringsSerDe()
+    val a = ItemsSketch.getInstance[String](Memory.wrap(x), serde)
+    a.merge(ItemsSketch.getInstance[String](Memory.wrap(y), serde))
+    a.toByteArray(serde)
+  })
 
   /** Approximate top-k tokens by frequent-items sketch — the one-pass,
     * fixed-memory alternative to [[PipelineOps.freqTokens]]' two-pass

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * durable form (`df.writeStream.format("kafka")` with a value column of
   * `to_json(struct(*))`) cannot execute, so the executable twin emits one
   * JSON line per row over TCP — same wire format the [[OhlcvStream
-  * .fromSocket]] consumer reads, so producer and consumer round-trip in
+  * .fromResilientSocket]] consumer reads, so producer and consumer round-trip in
   * SocketFeedSpec/JsonFeedSinkSpec.
   *
   * Scale shape: `toJSON.foreachPartition` — EVERY partition opens its own

@@ -58,31 +58,19 @@ object OhlcvStream {
 
   /** TCP line-feed source — the Spark-native analog of the reference's
     * WebSocket trade feed (producer/producer.py:51-58 emits one JSON trade
-    * per message; Spark's in-box `socket` source delivers one line per
-    * row). Unlike [[fromKafka]] this executes in-sandbox — the
-    * SocketFeedSpec drives the FULL topology (live TCP server → parse →
-    * watermark → OHLCV) through it. The socket source offers no replay, so
-    * it is the dev/drill entry point; production ingestion goes through
-    * [[fromKafka]]'s replayable log. Both emit the same `json` column —
-    * everything downstream is source-agnostic.
-    */
-  def fromSocket(spark: SparkSession, host: String, port: Int): DataFrame =
-    spark.readStream
-      .format("socket")
-      .option("host", host)
-      .option("port", port)
-      .load()
-      .select(col("value").as("json"))
-
-  /** Reconnecting TCP line feed — [[fromSocket]] hardened with the
-    * reference producer's retry loop (producer/producer.py:100-115). The
-    * in-box socket source dies SILENTLY on a peer drop (EOF and IO errors
-    * both just end its reader thread — the query keeps running against a
-    * dead feed), so the reconnect-with-capped-exponential-backoff loop
-    * lives inside [[ResilientSocketProvider]]'s read thread, exactly
-    * where the reference wraps `ws.run_forever()`. Emits the same `json`
-    * column as the other entry points; `conn_epoch` (which connection
-    * attempt delivered each line) is surfaced for drop monitoring.
+    * per message, one line per row here), hardened with the reference
+    * producer's retry loop (producer/producer.py:100-115). Spark's in-box
+    * `socket` source dies SILENTLY on a peer drop (EOF and IO errors both
+    * just end its reader thread — the query keeps running against a dead
+    * feed), so the reconnect-with-capped-exponential-backoff loop lives
+    * inside [[ResilientSocketProvider]]'s read thread, exactly where the
+    * reference wraps `ws.run_forever()`. Unlike [[fromKafka]] this needs
+    * no connector jar (SocketFeedSpec drives the full topology through it).
+    * A socket offers no replay, so it is the dev/drill entry point;
+    * production ingestion goes through [[fromKafka]]'s replayable log.
+    * Emits the same `json` column as [[fromKafka]] — everything downstream
+    * is source-agnostic; `conn_epoch` (which connection attempt delivered
+    * each line) is surfaced for drop monitoring.
     */
   def fromResilientSocket(spark: SparkSession, host: String, port: Int,
                           retryDelayMs: Long = 500L,

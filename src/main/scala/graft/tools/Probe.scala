@@ -26,7 +26,11 @@ import graft.BenchLogic.Compiles
   *    construction (the op's Scala code, including its eager `Tables.ckpt`
   *    jobs) and the action, and prints where the wall-clock went per job
   *    and stage (duration, tasks, shuffle read/write and input MB) from a
-  *    SparkListener — the UI's Stages tab, printed.
+  *    SparkListener — the UI's Stages tab, printed. Generated classes no
+  *    longer carry the codegen stage id in their names (every one is
+  *    `GeneratedIterator`, see `GraftSession.defaults`), so stack traces
+  *    and profiler frames do not name the stage; the plan's `*(n)`
+  *    markers still do.
   *  - `plan <sfDir> [--out dir --suffix s] <query...>`: prints the EXECUTED
   *    (post-AQE) plan of each query; with `--out`, writes the
   *    pre-execution `explain("formatted")` text to `<dir>/<query>_<s>.txt`

@@ -15,9 +15,35 @@ class CodegenCacheSpec extends SparkSuite {
     "sliding_ohlcv", "session_window", "twap", "candle_patterns", "rsi_14",
     "bollinger_bands")
 
+  /** Queries whose warm passes recompiled while class names carried the
+    * codegen stage id, which AQE assigns in stage-completion order.
+    */
+  private val reordered = Seq("l_diversity", "lsh_tuning_curve",
+    "dedup_clusters_lsh", "cohort_ltv", "hybrid_rrf", "t_closeness")
+
+  /** Those of [[reordered]] that still compile on some warm pass. This
+    * list may only shrink. dedup_clusters_lsh compiled 0, 4 and 10 classes
+    * over three warm passes in three runs of this spec, with stage ids
+    * already out of the class names; why is not established (its
+    * connected-components rounds run eager checkpoint jobs while the
+    * query is built).
+    */
+  private val stillCompiling = Set("dedup_clusters_lsh")
+
   test("defaults size the codegen cache and share one task class loader") {
     assert(GraftSession.defaults("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(GraftSession.defaults("spark.sql.artifact.isolation.enabled") == "false")
+    assert(GraftSession.defaults("spark.sql.codegen.useIdInClassName") == "false")
+  }
+
+  test("warm passes of queries with reordered codegen stages compile no class") {
+    val compiled = reordered.map { q =>
+      Probe.pass(spark, sf, q)
+      q -> (1 to 3).map(_ => Probe.pass(spark, sf, q)._2.count).sum
+    }.toMap
+    val recompiling = compiled.filter(_._2 > 0).keySet
+    assert(recompiling.subsetOf(stillCompiling),
+      s"warm-pass compiles outside the allow-list: $compiled")
   }
 
   test("a warm round-robin pass over the candle queries compiles no class") {

@@ -455,6 +455,68 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
+  /** Decode-slot totality: a truncated or byte-overwritten fixture payload
+    * either decodes or fails with one of the two exceptions the decode
+    * slots quarantine (IllegalArgumentException, NoSuchElementException);
+    * any other exception would fail the task and the query. Each of 100
+    * cases builds one payload from a random document and decodes `cuts`
+    * truncations and `cuts` single-byte overwrites of it. The cases come
+    * from a fixed seed (a per-property `useSeed` would repeat ONE case), so
+    * every run checks the same mutants.
+    */
+  private def totalUnderMutation(
+      build: Array[Byte] => Array[Byte], cuts: Int)(decode: Array[Byte] => Any): Prop = {
+    val genCase = for {
+      n <- Gen.choose(0, 400)
+      doc <- Gen.containerOfN[Array, Byte](n, Gen.choose(32, 126).map(_.toByte))
+      mutSeed <- Gen.long
+    } yield (doc, mutSeed)
+    val cases = Gen.listOfN(100, genCase)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20261021L))
+    val escapes = cases.flatMap { case (doc, mutSeed) =>
+      val payload = build(doc)
+      val r = new scala.util.Random(mutSeed)
+      val mutants = Seq.fill(cuts)(payload.take(r.nextInt(payload.length))) ++
+        Seq.fill(cuts) {
+          val b = payload.clone()
+          b(r.nextInt(b.length)) = r.nextInt(256).toByte
+          b
+        }
+      mutants.flatMap { m =>
+        try { decode(m); None }
+        catch {
+          case _: IllegalArgumentException | _: NoSuchElementException => None
+          case e: Exception => Some(s"$e at ${e.getStackTrace.headOption.orNull}")
+        }
+      }
+    }
+    Prop(escapes.isEmpty) :| s"${escapes.size} escapes: ${escapes.distinct.take(3)}"
+  }
+
+  property("totality: mutated phash payloads (BMP/PNG/PPM/GIF) decode or quarantine") =
+    totalUnderMutation(MultimodalOps.buildPhashPayload, 24)(graft.ops.ImageCodec.decode)
+
+  property("totality: mutated JPEG payloads decode or quarantine") =
+    totalUnderMutation(doc =>
+      graft.ops.JpegCodec.encodeJpeg(MultimodalOps.buildJpegImage(doc)), 24)(
+      graft.ops.JpegCodec.decodeJpeg)
+
+  property("totality: mutated A/V AVI payloads and their frames decode or quarantine") =
+    totalUnderMutation({ doc =>
+      val nFrames = 1 + doc.length % MultimodalOps.VideoMaxFrames
+      val fps = MultimodalOps.VideoFpsBase + doc.length % MultimodalOps.VideoFpsSpan
+      val frames = (0 until nFrames).map(MultimodalOps.buildVideoFrame(doc, _))
+      graft.ops.AviCodec.encodeAviAv(frames.head.width, frames.head.height, fps,
+        frames.map(graft.ops.JpegCodec.encodeJpeg(_)),
+        MultimodalOps.buildAvAudio(doc, nFrames, fps))
+    }, 8)(avi => graft.ops.AviCodec.decodeAviFull(avi).frames
+      .foreach(graft.ops.ImageCodec.decode))
+
+  property("totality: mutated WAV payloads decode or quarantine") =
+    totalUnderMutation(doc =>
+      graft.ops.AudioCodec.encodeWav(graft.ops.AudioOps.buildClip(doc)), 24)(
+      graft.ops.AudioCodec.decodeWav)
+
   property("HilbertIndex.compute masks, stays on-curve, and is unit-adjacent") = {
     import graft.functions.HilbertIndex
     val n2 = (1L << HilbertIndex.Bits) * (1L << HilbertIndex.Bits)

@@ -6,13 +6,13 @@ import java.util.concurrent.CountDownLatch
 
 import graft.streaming.OhlcvStream
 
-/** Executes the [[graft.streaming.OhlcvStream.fromSocket]] ingestion front
-  * end for real: a live local TCP server plays the reference's WebSocket
-  * producer (producer/producer.py:51-58 — one JSON trade per message), and
-  * the FULL topology (socket source → JSON parse → decimal cast →
-  * watermark → 1-min OHLCV+VWAP) runs against it. This is the executable
-  * twin of the Kafka entry point (whose connector jar does not exist in
-  * this sandbox): everything downstream of the source is shared code.
+/** Executes the [[graft.streaming.OhlcvStream.fromResilientSocket]]
+  * ingestion front end for real: a live local TCP server plays the
+  * reference's WebSocket producer (producer/producer.py:51-58 — one JSON
+  * trade per message), and the FULL topology (socket source → JSON parse →
+  * decimal cast → watermark → 1-min OHLCV+VWAP) runs against it. This is
+  * the executable twin of the Kafka entry point (whose connector jar is not
+  * on this classpath): everything downstream of the source is shared code.
   */
 class SocketFeedSpec extends SparkSuite {
 
@@ -41,7 +41,7 @@ class SocketFeedSpec extends SparkSuite {
     feeder.setDaemon(true)
     feeder.start()
     val parsed = OhlcvStream
-      .parseTrades(OhlcvStream.fromSocket(spark, "127.0.0.1", server.getLocalPort))
+      .parseTrades(OhlcvStream.fromResilientSocket(spark, "127.0.0.1", server.getLocalPort))
       .filter(org.apache.spark.sql.functions.col("trade_id").isNotNull)
     val query = OhlcvStream.ohlcv(parsed).writeStream
       .format("memory")
